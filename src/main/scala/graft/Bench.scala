@@ -129,26 +129,28 @@ object Bench {
     // It is keyed BY SCALE FACTOR: a local smoke run at sf0.001 must not
     // overwrite the sf0.1 baseline the round-over-round deltas read
     // (that cross-SF clobber happened once; deltas compared apples to
-    // grapes until the next full run).
+    // grapes until the next full run). Deltas are taken, and the history
+    // replaced, only at the history record's own parallelism
+    // (`cpus_configured`): a local[32] run is not compared against a
+    // local[8] baseline, nor does it clobber one.
     val benchFile = new java.io.File("target/bench.json")
     val historyFile = new java.io.File(
       s"bench_latest-${new java.io.File(sfDir).getName}.json")
-    val prevBest: Map[String, Double] =
+    val prev: Option[History] =
       try {
-        if (historyFile.isFile) {
-          import org.json4s._
-          import org.json4s.jackson.JsonMethods
-          val prev = JsonMethods.parse(
-            new String(java.nio.file.Files.readAllBytes(historyFile.toPath), "UTF-8"))
-          (prev \ "queries") match {
-            case JObject(fields) => fields.collect {
-              case (k, JDouble(v)) if v >= 0 => k -> v
-              case (k, JInt(v)) if v >= 0    => k -> v.toDouble
-            }.toMap
-            case _ => Map.empty
-          }
-        } else Map.empty
-      } catch { case _: Throwable => Map.empty }
+        if (historyFile.isFile) Some(History.parse(
+          new String(java.nio.file.Files.readAllBytes(historyFile.toPath), "UTF-8")))
+        else None
+      } catch { case _: Throwable => None }
+    val cpusConfigured = spark.sparkContext.defaultParallelism
+    val prevBest: Map[String, Double] =
+      prev.filter(_.isBaselineFor(cpusConfigured)).map(_.best).getOrElse(Map.empty)
+    val keepHistory = prev.forall(_.mayBeReplacedBy(cpusConfigured))
+    if (!keepHistory) System.err.println(
+      s"[bench] ${historyFile.getName} ran at cpus_configured " +
+        s"${prev.flatMap(_.cpusConfigured).mkString}, this run at " +
+        s"$cpusConfigured — no delta_vs_prev, history left untouched " +
+        "(delete the file to re-baseline at this parallelism)")
 
     // Environment fingerprint (round 15): the driver's per-round runs sit
     // uniformly ~20% above the locally certified records (adjudicated
@@ -216,7 +218,7 @@ object Bench {
       // the low-core scaling probe read `cpus` (32 on an 8-core-
       // configured run) and flagged the round `suspect_cpus_ignored`;
       // this field lets the driver verify the contract from the record.
-      s""""env":{"load_avg":$loadAvg,"cpus":$nCpus,"cpus_configured":${spark.sparkContext.defaultParallelism},"contended":$contended,"load_max":$loadMax,"heap_max_gb":${math.rint(rt.maxMemory() / 1e8) / 10},"scan_mbps":$scanMbps,"scan_probe_mb":$scanProbeMb}"""
+      s""""env":{"load_avg":$loadAvg,"cpus":$nCpus,"cpus_configured":$cpusConfigured,"contended":$contended,"load_max":$loadMax,"heap_max_gb":${math.rint(rt.maxMemory() / 1e8) / 10},"scan_mbps":$scanMbps,"scan_probe_mb":$scanProbeMb}"""
     }
 
     val (res1, total1, failed1) = benchAt(sfDir)
@@ -257,8 +259,10 @@ object Bench {
     // full run against a 3-query record and silently drop coverage.
     // Neither may a CONTENDED run: a baseline taken under load makes
     // every later clean run read as a spurious improvement.
+    // Nor may a run at a different parallelism than the baseline's
+    // (`cpus_configured`): its deltas would not be like for like.
     val writeTargets =
-      if (only.isDefined || contended) Seq(benchFile)
+      if (only.isDefined || contended || !keepHistory) Seq(benchFile)
       else Seq(benchFile, historyFile)
     for (f <- writeTargets) {
       try {
@@ -273,5 +277,40 @@ object Bench {
     // record above is truncated (the BENCH_r06 failure mode).
     println(s"""{"metric":"bench_summary","total":${math.rint(total1 * 1000) / 1000},"failed":$failed1,"n":${queries.size},"sf":"$sfDir","full":"target/bench.json"}""")
     spark.stop()
+  }
+
+  /** A previous run's record as the next run's delta baseline: per-query
+    * best times and the parallelism the run executed at
+    * (`env.cpus_configured`; records written before that stamp lack
+    * it). */
+  final case class History(best: Map[String, Double],
+                           cpusConfigured: Option[Int]) {
+    /** Deltas against this record are like for like only at the same
+      * parallelism; an unstamped record is no baseline for anyone. */
+    def isBaselineFor(cpus: Int): Boolean = cpusConfigured.contains(cpus)
+    /** A run may replace this record unless it ran at a different
+      * stamped parallelism — then the baseline stays for its own runs. */
+    def mayBeReplacedBy(cpus: Int): Boolean = cpusConfigured.forall(_ == cpus)
+  }
+
+  object History {
+    /** Parses a bench record; failed queries (negative best) are left
+      * out of `best`. */
+    def parse(json: String): History = {
+      import org.json4s._
+      val rec = org.json4s.jackson.JsonMethods.parse(json)
+      val best = (rec \ "queries") match {
+        case JObject(fields) => fields.collect {
+          case (k, JDouble(v)) if v >= 0 => k -> v
+          case (k, JInt(v)) if v >= 0    => k -> v.toDouble
+        }.toMap
+        case _ => Map.empty[String, Double]
+      }
+      val cpus = (rec \ "env" \ "cpus_configured") match {
+        case JInt(v) => Some(v.toInt)
+        case _       => None
+      }
+      History(best, cpus)
+    }
   }
 }

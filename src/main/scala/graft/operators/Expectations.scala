@@ -105,11 +105,14 @@ object Expectations {
     val rowLocal = checks.flatMap(c => violation(c).map(c.name -> _))
     // Referential checks ride the SAME aggregate scan as the row-local
     // ones (optimization r20, guide §1.2): each RefersTo left-joins its
-    // DISTINCT reference keys onto the fact (broadcast when the
-    // dimension fits, never a loop; distinct keys = no fanout, so every
-    // row-local count is unchanged), and its dangling-key sum becomes
-    // one more column of the shared aggregate — the previous shape paid
-    // one full fact scan per RefersTo on top of the row-local scan.
+    // DISTINCT reference keys onto the fact (an equi join, never a loop;
+    // distinct keys = no fanout, so every row-local count is unchanged),
+    // and its dangling-key sum becomes one more column of the shared
+    // aggregate — the previous shape paid one full fact scan per RefersTo
+    // on top of the row-local scan. The join carries no hint: the size
+    // thresholds broadcast the keys when they fit, and a large reference
+    // (a fact-to-fact check) runs as a shuffle join instead of failing
+    // at the broadcast limit.
     val refChecks = checks.zipWithIndex.collect {
       case (r: RefersTo, i) => (r, s"__resolved_$i")
     }
@@ -126,7 +129,7 @@ object Expectations {
           val keys = r.ref.select(col(r.refCol).as(r.col))
             .where(col(r.col).isNotNull)
             .distinct().withColumn(flag, lit(1L))
-          f.join(broadcast(keys), Seq(r.col), "left_outer")
+          f.join(keys, Seq(r.col), "left_outer")
         }
         val aggs = count(lit(1)).as("n_rows") +: fused.map(_._2)
         val row = joined.agg(aggs.head, aggs.tail: _*)

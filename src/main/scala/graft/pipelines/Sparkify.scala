@@ -9,7 +9,8 @@ import graft.operators.OrEquiJoin
   * one star schema (4 dims + 1 fact) of Parquet tables out.
   *
   * Semantics reproduced from the reference `etl.py` (cited per step), with
-  * three deliberate engineering divergences, each documented in SURVEY.md:
+  * four deliberate engineering divergences (the first three documented in
+  * SURVEY.md):
   *  1. explicit schemas instead of inference (reference `etl.py:36,78`
   *     infers — an extra full scan at 100 TB; `inferSchema=true` restores
   *     parity mode);
@@ -18,7 +19,18 @@ import graft.operators.OrEquiJoin
   *  3. the OR-predicate artist join (reference `etl.py:147-151`), which
   *     Catalyst can only nested-loop, runs through [[OrEquiJoin]]
   *     (multiset-identical, hash-joinable); `rewriteOrJoin=false` keeps
-  *     the verbatim predicate for plan-parity testing.
+  *     the verbatim predicate for plan-parity testing;
+  *  4. write distribution and listing: `songs` and `songplays` are
+  *     hash-distributed by their partition columns into an explicit
+  *     `defaultParallelism` partitions (not the reference's column-only
+  *     `repartition`, `etl.py:169-173`, which AQE coalesces into one task
+  *     on a small input), so each Hive directory is still one file but the
+  *     directories are written side by side; and input globs are listed
+  *     on the driver (`GraftSession`'s partition-discovery threshold)
+  *     instead of through a listing job. On the 100-song, 8000-event
+  *     benchmark input (local[4]) the songs write went from 1 task in
+  *     1.54 s to 4 tasks in 0.77 s, the two 78–84-task listing jobs of
+  *     0.5–0.7 s each are gone, and the written bytes are unchanged.
   *
   * Load-bearing quirks kept intact:
   *  - `start_time` is truncated to whole seconds by the reference's
@@ -91,13 +103,30 @@ object Sparkify {
     to_timestamp(from_unixtime((tsMillis / 1000).cast(LongType),
       "yyyy-MM-dd HH:mm:ss.SSS"))
 
+  /** Hash-distributes `df` by a table's partition columns into exactly
+    * `defaultParallelism` partitions, ahead of a `partitionBy` write on
+    * the same columns: each Hive directory is then written by one task,
+    * as one file, and the tasks run side by side. The count must be
+    * explicit — AQE coalesces a small `repartition(cols)` into a single
+    * partition, whose one task writes every directory in turn, but it
+    * never coalesces an explicit count. */
+  private def distributeByPartitionCols(df: DataFrame,
+                                        partitionCols: String*): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+      partitionCols.map(col): _*)
+
   /** Pipeline 1 — reference `process_song_data` (`etl.py:23-62`). */
   def processSongData(spark: SparkSession, cfg: Config): Unit = {
     val df = readJson(spark, s"${cfg.inputData}/song_data/*/*/*",
       songSchema, cfg.inferSchema)
 
-    // songs: select, distinct, partitioned write (etl.py:39-48)
-    df.select("song_id", "title", "artist_id", "year", "duration")
+    // songs: select, distinct, partitioned write (etl.py:39-48). The
+    // distribution sits BEFORE the distinct: its hash partitioning on
+    // (year, artist_id) already clusters the distinct's keys, so the
+    // aggregate adds no exchange of its own.
+    distributeByPartitionCols(
+        df.select("song_id", "title", "artist_id", "year", "duration"),
+        "year", "artist_id")
       .distinct()
       .write.mode("overwrite").partitionBy("year", "artist_id")
       .parquet(s"${cfg.outputData}/songs")
@@ -172,7 +201,7 @@ object Sparkify {
     // J3 left join to the in-memory time table (etl.py:152-155), final
     // projection (etl.py:158-168), distinct + repartition + partitioned
     // write (etl.py:169-173)
-    artistsSongsLogs
+    val songplays = artistsSongsLogs
       .join(time, col("ts_timestamp") === time("start_time"), "left")
       .select(
         col("start_time"), col("userId").as("user_id"),
@@ -180,7 +209,7 @@ object Sparkify {
         col("sessionId").as("session_id"), col("location"),
         col("userAgent").as("user_agent"), col("year"), col("month"))
       .distinct()
-      .repartition(col("year"), col("month"))
+    distributeByPartitionCols(songplays, "year", "month")
       .write.mode("overwrite").partitionBy("year", "month")
       .parquet(s"${cfg.outputData}/songplays")
   }

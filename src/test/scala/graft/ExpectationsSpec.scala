@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import graft.operators.Expectations
 import graft.operators.Expectations._
 
@@ -97,5 +100,37 @@ class ExpectationsSpec extends AnyFunSuite {
       Satisfies("p", col("id").isNotNull)))
     val scans = rep.queryExecution.optimizedPlan.collectLeaves().size
     assert(scans == 1, s"expected one scan for row-local checks, got $scans")
+  }
+
+  test("a reference larger than the broadcast threshold runs as a shuffle join") {
+    // 2000 reference keys, each listed twice; the fact has dangling and
+    // null refs. With the threshold below the reference's size the key
+    // set must not be broadcast, and the report must not change.
+    val ref = spark.range(2000).union(spark.range(2000)).toDF("k")
+    val fact = spark.range(5000)
+      .select(when(col("id") % 7 === 0, lit(null))
+        .otherwise(col("id") % 2100).as("ref"))
+    def run() = {
+      val rep = Expectations.validate(fact,
+        Seq(NotNull("ref"), RefersTo("ref", ref, "k")))
+      (rep.collect().map(_.toString).toSeq, rep.queryExecution.executedPlan)
+    }
+    val (atDefault, _) = run()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    val refBytes = ref.queryExecution.optimizedPlan.stats.sizeInBytes
+    spark.conf.set(key, (refBytes / 2).toString)
+    val (below, plan) = try run() finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+    assert(below == atDefault)
+    val dangling = (0 until 5000).count(i => i % 7 != 0 && i % 2100 >= 2000)
+    assert(below.contains(s"[refers_to(ref),$dangling,5000,false]"))
+    val broadcasts = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) {
+      case b: BroadcastExchangeLike => b
+      case j: BroadcastHashJoinExec => j
+    }
+    assert(broadcasts.isEmpty, s"reference keys were broadcast:\n$plan")
   }
 }

@@ -1,7 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.GraftTestSparkBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import graft.pipelines.Sparkify
 
@@ -27,6 +31,61 @@ class SparkifySpec extends AnyFunSuite {
       Set("song_id", "title", "duration", "year", "artist_id"))
     // partition dirs exist (dynamic-partition write, etl.py:46-48)
     assert(Files.exists(java.nio.file.Paths.get(s"$outDir/songs/year=1994")))
+  }
+
+  test("songs and songplays: every leaf directory holds exactly one file") {
+    def children(d: Path): List[Path] =
+      scala.util.Using.resource(Files.list(d))(_.iterator().asScala.toList)
+    def leafDirs(root: Path): Seq[Path] = {
+      val subdirs = children(root).filter(Files.isDirectory(_))
+      if (subdirs.isEmpty) Seq(root) else subdirs.flatMap(leafDirs)
+    }
+    for (t <- Seq("songs", "songplays")) {
+      val root = Paths.get(s"$outDir/$t")
+      val leaves = leafDirs(root)
+      assert(leaves.nonEmpty)
+      for (d <- leaves) {
+        assert(root.relativize(d).getNameCount === 2, s"$d is not a leaf partition")
+        val parquet = children(d).count(_.getFileName.toString.endsWith(".parquet"))
+        assert(parquet === 1, s"$d holds $parquet parquet files")
+      }
+    }
+    assert(leafDirs(Paths.get(s"$outDir/songs")).size === 3)
+  }
+
+  test("songs: the partition directories are written by several tasks") {
+    // the fixture's three (year, artist_id) values are hash-distributed
+    // into defaultParallelism partitions, so the write's final stage runs
+    // one task per partition instead of one task for every directory
+    assume(spark.sparkContext.defaultParallelism >= 2, "needs local[N>=2]")
+    val in = Files.createTempDirectory("sparkify_tasks_in").toString
+    val out = Files.createTempDirectory("sparkify_tasks_out").toString
+    SparkifyFixtures.write(in)
+    val songsExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int, Int)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains(s"$out/songs") =>
+          songsExecs.add(s.executionId)
+        case _ =>
+      }
+      // (execution id, job id, tasks of the job's result stage)
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => jobs.add((id.toLong, j.jobId, j.stageInfos.maxBy(_.stageId).numTasks)))
+    }
+    val sc = spark.sparkContext
+    GraftTestSparkBridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      Sparkify.processSongData(spark, Sparkify.Config(in, out))
+      GraftTestSparkBridge.waitListenerBusEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    val songsJobs = jobs.asScala.toSeq.filter(j => songsExecs.contains(j._1))
+    assert(songsJobs.nonEmpty, "no job of the songs write was seen")
+    val finalTasks = songsJobs.maxBy(_._2)._3
+    assert(finalTasks > 1, s"the songs write's final stage ran $finalTasks task(s)")
   }
 
   test("songs leaf-file glob read drops partition columns (etl.py:139 quirk)") {
