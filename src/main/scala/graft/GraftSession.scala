@@ -33,12 +33,12 @@ import org.apache.spark.sql.SparkSession
   *    consumers take the eager pre-aggregated plan. Multiset-equivalence
   *    is law-pinned (OrEquiJoinRuleSpec, randomized 1-3-predicate
   *    fixtures, rule-on ≡ rule-off), tri-scale oracle-gated
-  *    (q82/q83/q84), and the reference pipeline's J2 output is proven
-  *    unchanged under the armed rule (SparkifySpec parity + golden-row
-  *    tests, which run on this session). The engine's own operators
-  *    already emit the rewritten form explicitly; the armed rule is the
-  *    safety net for plans the engine didn't author. Opt out per
-  *    session/query with `spark.graft.rewriteOrJoin=false`.
+  *    (q82/q83/q84), and the reference pipeline's J2 join, written with
+  *    the verbatim OR predicate, relies on it (SparkifySpec compares its
+  *    output with the disarmed nested-loop run). The rule is the only
+  *    OR-join implementation: `OrEquiJoin.leftOrJoin` is a wrapper that
+  *    applies it whatever this conf says. Opt out per session/query with
+  *    `spark.graft.rewriteOrJoin=false`.
   *  - shuffle partitions default low for local runs; a real cluster
   *    deployment overrides via spark-submit conf (AQE coalescing makes the
   *    initial number mostly a ceiling).

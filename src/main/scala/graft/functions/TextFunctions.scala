@@ -24,25 +24,9 @@ object TextFunctions {
     * `slice` + `concat_ws` under a size guard) evaluates interpreted with
     * a slice allocation per shingle, and shingling sits on the scan path
     * of every near-dup signature and repetition score in the engine.
-    *
-    * `SPARK_GRAFT_SHINGLE_HOF=1` restores the HOF form — a BENCH-ONLY
-    * lever so the native expression's win stays measurable like-for-like
-    * in one process (isolated numbers pinned in SURVEY §8, round 14);
-    * both forms share the same semantics, spec-pinned in TokenizerSpec. */
+    * OperatorLawsSpec pins it row-identical to that HOF form. */
   def wordShingles(c: Column, n: Int): Column =
-    if (sys.env.get("SPARK_GRAFT_SHINGLE_HOF").contains("1"))
-      hofShingles(tokens(c), n)
-    else graft.plans.WordShinglesExpr.shingles(tokens(c), n)
-
-  /** The composable form WordShinglesExpr replaced: `sequence` would
-    * generate a DESCENDING range if stop < start, hence the explicit
-    * guard. Kept as the comparison baseline behind the env lever;
-    * private[graft] so TokenizerSpec pins the two forms equal. */
-  private[graft] def hofShingles(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - lit(n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-      .otherwise(array().cast(ArrayType(StringType)))
+    graft.plans.WordShinglesExpr.shingles(tokens(c), n)
 
   /** Distinct shingle set (the unit of Jaccard/MinHash similarity). */
   def shingleSet(c: Column, n: Int): Column = array_distinct(wordShingles(c, n))
@@ -65,14 +49,6 @@ object TextFunctions {
 
   def langScore(c: Column, pattern: String): Column =
     regexp_count(lower(c), lit(pattern)).cast("int")
-
-  /** `SPARK_GRAFT_ANNOTATE_REGEX=1` restores the composable regex forms
-    * of [[langId]]/[[qualityScore]] — a BENCH-ONLY lever (the
-    * SPARK_GRAFT_SHINGLE_HOF convention) keeping the fused
-    * [[graft.plans.AnnotateStatsExpr]] win measurable like-for-like;
-    * both forms are spec-pinned equal (AnnotateSpec). */
-  private[graft] def annotateRegexLever: Boolean =
-    sys.env.get("SPARK_GRAFT_ANNOTATE_REGEX").contains("1")
 
   /** One-pass annotation counters: struct(en, es, de, n_tokens, punct,
     * n_chars, norm) — see [[graft.plans.AnnotateStatsExpr]]. Consumers
@@ -104,41 +80,18 @@ object TextFunctions {
   /** Heuristic language ID: argmax of stopword-marker hit counts with a
     * deterministic en > es > de tie-break; 'unk' when nothing matches.
     * Served by the fused [[annotateStats]] counters (one compiled text
-    * pass instead of three regex scans); the regex form remains behind
-    * the bench lever and AnnotateSpec pins them equal. */
-  def langId(c: Column): Column =
-    if (annotateRegexLever) langIdRegex(c)
-    else langIdFrom(annotateStats(c))
-
-  private[graft] def langIdRegex(c: Column): Column = {
-    val Seq(en, es, de) = langMarkers.map { case (_, p) => langScore(c, p) }
-    when(en === 0 && es === 0 && de === 0, lit("unk"))
-      .when(en >= es && en >= de, lit("en"))
-      .when(es >= de, lit("es"))
-      .otherwise(lit("de"))
-  }
+    * pass instead of three regex scans); AnnotateSpec pins it equal to
+    * the regex form. */
+  def langId(c: Column): Column = langIdFrom(annotateStats(c))
 
   /** Document quality score in [0,1]: length saturation + stopword share
     * + symbol cleanliness. Deliberately NOT rounded: the raw double is
     * bit-identical across engines (same IEEE ops in the same order),
     * while decimal rounding at a .5 boundary is not. Served by the fused
     * [[annotateStats]] counters (the en-marker scan, the token split and
-    * the punctuation-class scan collapse into the one-pass struct); the
-    * regex form remains behind the bench lever, spec-pinned equal. */
-  def qualityScore(c: Column): Column =
-    if (annotateRegexLever) qualityScoreRegex(c)
-    else qualityFrom(annotateStats(c))
-
-  private[graft] def qualityScoreRegex(c: Column): Column = {
-    val nTok = size(tokens(c)).cast(DoubleType)
-    val stopHits = langScore(c, langMarkers.head._2).cast(DoubleType)
-    val punct = regexp_count(c, lit("""[^\s\p{L}\p{N}]""")).cast(DoubleType)
-    val lenSat = least(nTok / 100.0, lit(1.0))
-    val stopShare = when(nTok > 0, stopHits / nTok).otherwise(lit(0.0))
-    val punctShare = when(length(c) > 0, punct / length(c).cast(DoubleType))
-      .otherwise(lit(0.0))
-    lenSat * 0.5 + stopShare * 0.3 + (lit(1.0) - punctShare) * 0.2
-  }
+    * the punctuation-class scan collapse into the one-pass struct);
+    * AnnotateSpec pins it bit-identical to the regex form. */
+  def qualityScore(c: Column): Column = qualityFrom(annotateStats(c))
 
   /** Overlapping token windows (RAG-style chunking): a `chunkSize`-token
     * window starting every `stride` tokens, clamped at the end — every

@@ -45,9 +45,21 @@ object Curation {
     * two splits and a regex replace (the c1 annotate stage is ~90% of
     * the pipeline's cost and bytes-bound, SURVEY §6). The explicit
     * struct column makes the sharing deterministic — no reliance on
-    * codegen subexpression elimination. `SPARK_GRAFT_ANNOTATE_REGEX=1`
-    * restores the regex forms (bench lever; AnnotateSpec pins the two
-    * paths cell-identical). */
+    * codegen subexpression elimination. AnnotateSpec pins the output
+    * cell-identical to the composable regex forms. */
+  def annotateAndFilter(df: DataFrame, textCol: String,
+                        cfg: Config = Config()): DataFrame = {
+    val ann = annCol(df)
+    df.withColumn(ann, annotateStats(col(textCol)))
+      .withColumn("lang_pred", langIdFrom(col(ann)))
+      .withColumn("quality", qualityFrom(col(ann)))
+      .withColumn("n_tokens", col(ann).getField("n_tokens").cast("long"))
+      .withColumn("fp", md5(col(ann).getField("norm")))
+      .drop(ann)
+      .where(col("quality") >= cfg.minQuality)
+      .where(if (cfg.dropUnknownLang) col("lang_pred") =!= "unk" else lit(true))
+  }
+
   /** First `__ann`-prefixed name absent from `df` — the internal struct
     * column must never clobber (and then silently drop) a user column
     * that happens to be named `__ann`. The documented output columns
@@ -56,29 +68,6 @@ object Curation {
     Iterator.from(0)
       .map(i => if (i == 0) "__ann" else s"__ann_$i")
       .find(n => !df.columns.contains(n)).get
-
-  def annotateAndFilter(df: DataFrame, textCol: String,
-                        cfg: Config = Config()): DataFrame = {
-    val text: Column = col(textCol)
-    val annotated =
-      if (graft.functions.TextFunctions.annotateRegexLever)
-        df.withColumn("lang_pred", langIdRegex(text))
-          .withColumn("quality", qualityScoreRegex(text))
-          .withColumn("n_tokens", size(tokens(text)).cast("long"))
-          .withColumn("fp", fingerprintMd5(text))
-      else {
-        val ann = annCol(df)
-        df.withColumn(ann, annotateStats(text))
-          .withColumn("lang_pred", langIdFrom(col(ann)))
-          .withColumn("quality", qualityFrom(col(ann)))
-          .withColumn("n_tokens", col(ann).getField("n_tokens").cast("long"))
-          .withColumn("fp", md5(col(ann).getField("norm")))
-          .drop(ann)
-      }
-    annotated
-      .where(col("quality") >= cfg.minQuality)
-      .where(if (cfg.dropUnknownLang) col("lang_pred") =!= "unk" else lit(true))
-  }
 
   /** Curate `df` (needs `idCol` and `textCol`): returns the surviving
     * rows annotated with `lang_pred`, `quality`, `n_tokens`, `fp`. */

@@ -106,27 +106,17 @@ object Dedup {
     * explode and the per-shingle agg-buffer machinery disappear, and the
     * md5 family skips the hex-string/`conv` round trip entirely. Both
     * forms are bit-identical (same XXH64/md5 bits; OperatorLawsSpec pins
-    * native ≡ aggregate across families, duplicate ids, and null/short
-    * docs). `SPARK_GRAFT_MINHASH_AGG=1` restores the aggregate form — a
-    * BENCH-ONLY lever so the win stays measurable like-for-like. */
+    * native ≡ its test-side aggregate oracle across families, duplicate
+    * ids, and null/short docs). */
   def minHashSignatures(df: DataFrame, id: String, text: String,
                         shingleN: Int = 3, numHashes: Int = 32,
                         family: MinHashFamily = XxMinHash): DataFrame = {
     require(family != Md5MinHash || numHashes <= 113,
       "Md5MinHash overflow headroom caps seeds at 113: h1 < 2^60 and " +
         "h2 < 2^56, so h1 + j*h2 stays under 2^63 only for j <= 112 — " +
-        "above that the ANSI aggregate form (SPARK_GRAFT_MINHASH_AGG=1) " +
-        "would raise ARITHMETIC_OVERFLOW while the native path wraps, " +
-        "breaking the advertised bit parity")
-    if (sys.env.get("SPARK_GRAFT_MINHASH_AGG").contains("1"))
-      aggMinHashSignatures(df, id, text, shingleN, numHashes, family)
-    else nativeMinHashSignatures(df, id, text, shingleN, numHashes, family)
-  }
-
-  /** Native per-row path (see [[minHashSignatures]]). */
-  private[graft] def nativeMinHashSignatures(
-      df: DataFrame, id: String, text: String,
-      shingleN: Int, numHashes: Int, family: MinHashFamily): DataFrame = {
+        "above that the ANSI aggregate form (the bit-parity oracle in " +
+        "OperatorLawsSpec) would raise ARITHMETIC_OVERFLOW while the " +
+        "native path wraps, breaking the advertised bit parity")
     val sigCol = graft.plans.MinHashSigExpr.sig(
       tokens(col(text)), shingleN, numHashes, family == Md5MinHash)
     Parallelism.ensure(df)
@@ -148,51 +138,31 @@ object Dedup {
       .where(col("n_shingles").isNotNull)
   }
 
-  /** The explode + groupBy aggregate form [[minHashSignatures]] replaced;
-    * kept as the like-for-like comparison baseline behind the env lever
-    * and the law-spec anchor. */
-  private[graft] def aggMinHashSignatures(
-      df: DataFrame, id: String, text: String,
-      shingleN: Int, numHashes: Int, family: MinHashFamily): DataFrame =
-    postings(df, id, text, shingleN)
-      .withColumn("base", family.base(col("shingle")))
-      .groupBy(col(id))
-      .agg(
-        array((0 until numHashes).map(j =>
-          min(family.seeded(col("base"), j))): _*).as("signature"),
-        count(lit(1)).as("n_shingles"))
-
   /** LSH candidate pairs (idA < idB) from banded MinHash signatures, with
     * exact Jaccard computed on the candidates and filtered at
     * `threshold`. bands*rowsPerBand must equal numHashes.
     *
-    * The one-scan base ([[sigShingleBase]]) is materialized per
-    * invocation via `localCheckpoint` (optimization r20, guide §1.2):
-    * banding references the signatures twice (both sides of the
-    * candidate self-join) and the verify references the shingle sets
-    * twice, so the unmaterialized plan scanned and re-shingled the
-    * corpus four times. `localCheckpoint` is keyed on the RDD INSTANCE —
-    * unlike `persist`, whose cache manager keys on the logical plan — so
-    * a repeated invocation of the same query fn recomputes from the
-    * parquet inputs every time (no cross-run result reuse; the blocks
-    * are released by the ContextCleaner when the plan is dropped).
-    * `SPARK_GRAFT_MINHASH_AGG=1` (the bench-only like-for-like lever)
-    * restores the previous unmaterialized aggregate-form pipeline. */
+    * The signatures are materialized per invocation via
+    * `localCheckpoint` (optimization r20, guide §1.2): banding references
+    * them twice (both sides of the candidate self-join), so the
+    * unmaterialized plan re-scanned the corpus and re-derived them per
+    * side. The shingle sets for the exact verify are NOT checkpointed:
+    * they are re-derived from `df`, one scan per referenced side.
+    * `localCheckpoint` is keyed on the RDD INSTANCE — unlike `persist`,
+    * whose cache manager keys on the logical plan — so a repeated
+    * invocation of the same query fn recomputes from the parquet inputs
+    * every time (no cross-run result reuse; the blocks are released by
+    * the ContextCleaner when the plan is dropped). */
   def minHashLshPairs(df: DataFrame, id: String, text: String,
                       shingleN: Int = 3, numHashes: Int = 32,
                       bands: Int = 8, threshold: Double = 0.7,
-                      family: MinHashFamily = XxMinHash): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_MINHASH_AGG").contains("1"))
-      minHashLshPairsFromSignatures(df,
-        minHashSignatures(df, id, text, shingleN, numHashes, family),
-        id, text, shingleN, numHashes, bands, threshold)
-    else {
-      val sigs = minHashSignatures(df, id, text, shingleN, numHashes, family)
-        .localCheckpoint(eager = true)
-      val sh = Parallelism.ensure(df)
-        .select(col(id), shingleSet(col(text), shingleN).as("sh"))
-      lshPairsVerify(sigs, sh, id, numHashes, bands, threshold)
-    }
+                      family: MinHashFamily = XxMinHash): DataFrame = {
+    val sigs = minHashSignatures(df, id, text, shingleN, numHashes, family)
+      .localCheckpoint(eager = true)
+    val sh = Parallelism.ensure(df)
+      .select(col(id), shingleSet(col(text), shingleN).as("sh"))
+    lshPairsVerify(sigs, sh, id, numHashes, bands, threshold)
+  }
 
   /** Candidate+verify stages over PRE-COMPUTED signatures — the persist
     * escape hatch: `minHashSignatures(...).persist()` materializes the
@@ -228,7 +198,7 @@ object Dedup {
   }
 
   /** Signature aggregation over a [[sigShingleBase]] frame — the groupBy
-    * tail of [[nativeMinHashSignatures]], reading only the struct column
+    * tail of [[minHashSignatures]], reading only the struct column
     * (columnar cache serves just those batches). */
   private def sigsFromBase(base: DataFrame, id: String, numHashes: Int): DataFrame =
     base.select(col(id), col("__sig"))
@@ -775,8 +745,10 @@ object Dedup {
     // id per non-representative clustered doc — is materialized eagerly
     // so every cache can be released before returning the lazy anti-join
     // to the caller.
-    val (sigs0, sh, base) = pipelineFrames(df, id, text, shingleN, numHashes)
-    val sigs = sigs0.persist()
+    val base = sigShingleBase(df, id, text, shingleN, numHashes, XxMinHash)
+      .persist()
+    val sigs = sigsFromBase(base, id, numHashes).persist()
+    val sh = base.select(col(id), col("sh"))
     val pairs = lshPairsVerify(sigs, sh, id, numHashes, bands, threshold)
       .persist()
     try {
@@ -791,30 +763,9 @@ object Dedup {
     } finally {
       pairs.unpersist(blocking = false)
       sigs.unpersist(blocking = false)
-      base.foreach(_.unpersist(blocking = false))
+      base.unpersist(blocking = false)
     }
   }
-
-  /** (signatures, shingleSets, persisted-base-handle) for the end-to-end
-    * pipelines: the one-scan [[sigShingleBase]] persisted so the sig
-    * aggregation and both verify sides feed off one corpus pass, unless
-    * the `SPARK_GRAFT_MINHASH_AGG=1` like-for-like lever asks for the
-    * legacy aggregate-form pipeline (separate scans, no base). The
-    * caller MUST unpersist the returned handle before returning. */
-  private def pipelineFrames(df: DataFrame, id: String, text: String,
-                             shingleN: Int, numHashes: Int)
-      : (DataFrame, DataFrame, Option[DataFrame]) =
-    if (sys.env.get("SPARK_GRAFT_MINHASH_AGG").contains("1")) {
-      val sigs = minHashSignatures(df, id, text, shingleN, numHashes)
-      val sh = Parallelism.ensure(df)
-        .select(col(id), shingleSet(col(text), shingleN).as("sh"))
-      (sigs, sh, None)
-    } else {
-      val base = sigShingleBase(df, id, text, shingleN, numHashes, XxMinHash)
-        .persist()
-      (sigsFromBase(base, id, numHashes), base.select(col(id), col("sh")),
-        Some(base))
-    }
 
   /** Incremental near-dedup: drop from `incoming` every document that is
     * a near-duplicate of the already-canonical `existing` corpus or of a
@@ -842,8 +793,10 @@ object Dedup {
                            driverClusterMaxEdges: Long = 1L << 20): DataFrame = {
     val all = existing.select(col(id), col(text)).withColumn("__origin", lit(0))
       .unionByName(incoming.select(col(id), col(text)).withColumn("__origin", lit(1)))
-    val (sigs0, sh, base) = pipelineFrames(all, id, text, shingleN, numHashes)
-    val sigs = sigs0.persist()
+    val base = sigShingleBase(all, id, text, shingleN, numHashes, XxMinHash)
+      .persist()
+    val sigs = sigsFromBase(base, id, numHashes).persist()
+    val sh = base.select(col(id), col("sh"))
     val pairs = lshPairsVerify(sigs, sh, id, numHashes, bands, threshold)
       .persist()
     try {
@@ -862,7 +815,7 @@ object Dedup {
     } finally {
       pairs.unpersist(blocking = false)
       sigs.unpersist(blocking = false)
-      base.foreach(_.unpersist(blocking = false))
+      base.unpersist(blocking = false)
     }
   }
 

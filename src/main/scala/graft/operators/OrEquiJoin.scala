@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import graft.plans.OrEquiJoinRule
 
-/** Hash-joinable rewrite of `LEFT JOIN ... ON a = x OR b = y`.
+/** Hash-joinable `LEFT JOIN ... ON a = x OR b = y`.
   *
   * The reference joins its log stream to the artist dimension with an OR of
   * two equalities (reference `etl.py:147-151`). Catalyst cannot key a hash
@@ -11,197 +11,27 @@ import org.apache.spark.sql.functions._
   * O(|left| x |right|) comparisons. Harmless on 6,820 x 69 rows;
   * catastrophic at 100 TB (SURVEY.md §4).
   *
-  * Rewrite (multiset-equivalent to the OR join, not just "close enough"):
-  * for predicates p1..pn,
-  *  - branch k = `left INNER JOIN right ON pk AND NOT (p1 OR .. OR p(k-1))`
-  *    — each (leftRow, rightRow) pair lands in exactly the branch of its
-  *    first satisfied predicate, so no pair is duplicated;
-  *  - unmatched = `left ANTI JOIN right ON p1 .. ANTI JOIN right ON pn`
-  *    (no right row satisfies any predicate) extended with null right
-  *    columns — exactly the left-outer null complement.
-  * `NOT pk` is wrapped in `coalesce(pk, false)` so SQL three-valued logic
-  * matches the OR semantics (pk unknown counts as not-satisfied).
-  *
-  * Every branch is a plain equi-join, so Catalyst picks broadcast or
-  * shuffled hash / sort-merge per side sizes, AQE included. Cost: n+n scans
-  * of `left` instead of 1 nested loop — at scale, n linear scans of a
-  * columnar source beat |L| x |R| compares by orders of magnitude; with a
-  * broadcastable right side the left table never shuffles at all.
+  * [[graft.plans.OrEquiJoinRule]] is the only implementation of the
+  * rewrite (one hash-joinable branch per predicate plus the anti-join null
+  * complement, multiset-identical to the OR join). A session configured by
+  * [[graft.GraftSession]] arms it, so naive DataFrame or SQL OR joins need
+  * no call here; this entry point applies the rule to its own join whatever
+  * the session conf says.
   */
 object OrEquiJoin {
 
-  /** `left LEFT OUTER JOIN right ON OR_k (leftCol_k = rightCol_k)`. */
+  /** `left LEFT OUTER JOIN right ON OR_k (leftCol_k = rightCol_k)`, already
+    * rewritten by [[graft.plans.OrEquiJoinRule.rewrite]]. */
   def leftOrJoin(left: DataFrame, right: DataFrame, preds: (String, String)*): DataFrame = {
     require(preds.nonEmpty, "at least one equality predicate")
-    // The null complement is built with withColumn over right-schema names;
-    // an overlapping left column would be silently replaced with null.
+    // Overlapping names would make the joined columns ambiguous.
     // Disjoint schemas are a precondition, not a silent corruption.
     val overlap = left.columns.toSet.intersect(right.columns.toSet)
     require(overlap.isEmpty,
       s"left and right column sets must be disjoint, overlap: ${overlap.mkString(", ")}")
-    def eq(p: (String, String)): Column = left(p._1) === right(p._2)
-    def notYet(k: Int): Column =
-      not(coalesce(preds.take(k).map(eq).reduce(_ || _), lit(false)))
-
-    val branches = preds.zipWithIndex.map { case (p, k) =>
-      val cond = if (k == 0) eq(p) else eq(p) && notYet(k)
-      left.join(right, cond, "inner")
-    }
-
-    val unmatchedLeft = preds.foldLeft(left)((acc, p) =>
-      acc.join(right, acc(p._1) === right(p._2), "left_anti"))
-    val nullRight = right.schema.fields.foldLeft(unmatchedLeft)((df, f) =>
-      df.withColumn(f.name, lit(null).cast(f.dataType)))
-
-    (branches :+ nullRight).reduce(_ unionByName _)
-  }
-
-  /** Eager aggregation through the OR-join: computes
-    * {{{
-    * leftOrJoin(left, right, preds: _*)
-    *   .groupBy(groupCol)
-    *   .agg(count(countCol).as(countOut), min(minCol).as(minOut))
-    * }}}
-    * WITHOUT materializing the joined multiset.
-    *
-    * Why it exists: the OR-join's OUTPUT is the quadratic object — a
-    * low-cardinality first predicate (q08's 25-value nationkey) emits
-    * |left|·|right|/|distinct keys| pairs, so at 10× the data the join
-    * produces 100× the rows (measured: 600k → 60M sf0.1 → sf1) and NO
-    * join algorithm can beat its own output size. When the consumer is
-    * a per-left-group aggregate, the branch decomposition makes the
-    * expansion avoidable:
-    *
-    *  - branch 0 carries no residual (it is "first satisfied predicate"
-    *    by construction), so the right side pre-aggregates to one
-    *    (cnt, min) row per distinct key — the exploding branch becomes
-    *    a |left|-row join against a |distinct keys|-row rollup;
-    *  - OR commutes, so WHICH predicate is branch 0 is the operator's
-    *    to choose: when both inputs are single scans with persisted
-    *    write-time key sketches ([[graft.plans.StarStatsRegistry]]),
-    *    the predicate with the largest estimated join output
-    *    |L|·|R|/max(ndv) is moved first (driver-side lookups, zero
-    *    extra jobs — the same choice [[graft.plans.OrEquiJoinRule]]
-    *    makes on the rule path, gated by q87). Without stats the
-    *    written order stands — then writing the exploding predicate
-    *    first is a useful convention (any order stays correct);
-    *  - branch outputs partition the joined multiset (leftOrJoin's own
-    *    first-satisfied-predicate law), so group partials merge by SUM
-    *    for counts and LEAST for mins — no inclusion–exclusion, which
-    *    would break min/max.
-    *
-    * Equivalence to the materializing form is law-pinned in
-    * OrEquiJoinSpec (randomized fixtures incl. null keys, unmatched
-    * lefts, empty right); q81_or_join_rollup gates it against the q08
-    * oracle. Scale shape: every stage is |left|- or |right|-sized.
-    * count() counts non-null `countCol` per matched pair (the
-    * count(right.col) convention); unmatched groups report 0 / null. */
-  def leftOrJoinAgg(left: DataFrame, right: DataFrame, groupCol: String,
-                    countCol: String, countOut: String,
-                    minCol: String, minOut: String,
-                    rawPreds: (String, String)*): DataFrame = {
-    require(rawPreds.nonEmpty, "at least one equality predicate")
-    val overlap = left.columns.toSet.intersect(right.columns.toSet)
-    require(overlap.isEmpty,
-      s"left and right column sets must be disjoint, overlap: ${overlap.mkString(", ")}")
-    val preds = statsOrder(left, right, rawPreds)
-    def eq(p: (String, String)): Column = left(p._1) === right(p._2)
-    def notYet(k: Int): Column =
-      not(coalesce(preds.take(k).map(eq).reduce(_ || _), lit(false)))
-
-    // Branch 0: residual-free, so the right side collapses to one row
-    // per distinct join key BEFORE the join touches `left`.
-    val (l0, r0) = preds.head
-    val countT = right.schema(countCol).dataType
-    val minT = right.schema(minCol).dataType
-    // string minimums via the typed-imperative twin (ObjectHashAggregate
-    // instead of SortAggregate — result-identical, see
-    // graft.plans.TypedMinMax); other types keep the stock Min
-    def minC(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      if (minT == org.apache.spark.sql.types.StringType) {
-        import org.apache.spark.sql.{GraftColumnBridge => B}
-        B.column(graft.plans.TypedMin(B.expression(c)).toAggregateExpression())
-      } else min(c)
-    val pre = right.groupBy(col(r0))
-      .agg(count(col(countCol)).as("__cnt0"), minC(col(minCol)).as("__min0"))
-    // UNION MERGE (round 20, guide §2.4): the branches used to merge by
-    // a per-branch groupBy each plus a chain of null-safe left joins on
-    // the group key — n aggregate exchanges and n−1 join exchanges,
-    // every one an AQE stage barrier. Branch outputs PARTITION the
-    // joined multiset, so the same totals fall out of ONE aggregate
-    // over a slotted union: branch 0 contributes its pre-aggregated
-    // (count, min) partials (merged by SUM / MIN — sum and min ignore
-    // the other branches' null padding), branches 1..n-1 contribute
-    // their RAW (countCol, minCol) pair columns (counted/minimized
-    // first-level, seeing only their own rows). Branch 0's left join
-    // saw every left row, so the union's group set is complete; a null
-    // group key is one group under groupBy exactly as it was under the
-    // null-safe attach joins.
-    val b0 = left.join(pre, left(l0) === pre(r0), "left")
-      .select(col(groupCol), col("__cnt0").as("__pc"),
-        col("__min0").as("__pm"),
-        lit(null).cast(countT).as("__rc"), lit(null).cast(minT).as("__rm"))
-    // Branches 1..n-1: the residual references left columns, so these
-    // stay real joins — sized by their own predicate's selectivity.
-    val parts = preds.zipWithIndex.drop(1).map { case (p, k) =>
-      left.join(right, eq(p) && notYet(k), "inner")
-        .select(col(groupCol), lit(null).cast("bigint").as("__pc"),
-          lit(null).cast(minT).as("__pm"),
-          right(countCol).as("__rc"), right(minCol).as("__rm"))
-    }
-    val merged = parts.foldLeft(b0)(_ unionAll _)
-      .groupBy(col(groupCol))
-      .agg((coalesce(sum(col("__pc")), lit(0L)) + count(col("__rc")))
-          .as(countOut),
-        least(minC(col("__pm")), minC(col("__rm"))).as(minOut))
-    merged.select(col(groupCol), col(countOut), col(minOut))
-  }
-
-  /** `preds` permuted so the best pre-aggregation candidate — the
-    * predicate with the LARGEST estimated join output
-    * |left|·|right|/max(ndv_L, ndv_R), from persisted write-time key
-    * sketches — comes first; written order when either input is not a
-    * single stats-carrying scan or any key sketch is missing. Driver-side
-    * registry lookups only, zero extra jobs: the operator twin of
-    * [[graft.plans.OrEquiJoinRule]]'s stats-picked branch 0. A stale or
-    * filter-blind sketch can only mis-ORDER (OR commutes), never corrupt. */
-  private def statsOrder(left: DataFrame, right: DataFrame,
-                         preds: Seq[(String, String)]): Seq[(String, String)] = {
-    import graft.plans.StarStatsRegistry
-    // sketch keys are WRITTEN column names; the caller's predicate
-    // strings resolve case-insensitively in the join (Spark's default
-    // resolver), so the lookup must match with the session's resolver
-    // too — an exact-string get would silently miss "C_NATIONKEY" and
-    // fall back to written order (ADVICE r17)
-    val resolver = left.sparkSession.sessionState.analyzer.resolver
-    def sketchFor(st: StarStatsRegistry.TableStats,
-                  name: String): Option[Array[Byte]] =
-      st.keySketches.get(name).orElse(
-        st.keySketches.collectFirst {
-          case (k, sk) if resolver(k, name) => sk
-        })
-    val picked = for {
-      (_, lSt) <- StarStatsRegistry.statsUnder(left.queryExecution.analyzed)
-      (_, rSt) <- StarStatsRegistry.statsUnder(right.queryExecution.analyzed)
-      ests <- {
-        val all = preds.map { case (lc, rc) =>
-          for {
-            lsk <- sketchFor(lSt, lc)
-            rsk <- sketchFor(rSt, rc)
-          } yield {
-            val ndv = math.max(1.0,
-              math.max(StarStatsRegistry.distinctEstimate(lsk),
-                StarStatsRegistry.distinctEstimate(rsk)))
-            lSt.nRows.toDouble * rSt.nRows.toDouble / ndv
-          }
-        }
-        if (all.forall(_.isDefined)) Some(all.map(_.get)) else None
-      }
-    } yield ests.indexOf(ests.max)
-    picked match {
-      case Some(i) if i > 0 =>
-        preds(i) +: (preds.take(i) ++ preds.drop(i + 1))
-      case _ => preds
-    }
+    val naive = left.join(right,
+      preds.map { case (l, r) => left(l) === right(r) }.reduce(_ || _), "left")
+    GraftColumnBridge.dataFrame(left.sparkSession,
+      OrEquiJoinRule.rewrite(naive.queryExecution.analyzed))
   }
 }

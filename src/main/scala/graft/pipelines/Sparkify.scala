@@ -3,7 +3,6 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.OrEquiJoin
 
 /** The reference workload re-expressed Spark-first: two JSON datasets in,
   * one star schema (4 dims + 1 fact) of Parquet tables out.
@@ -16,10 +15,13 @@ import graft.operators.OrEquiJoin
   *     parity mode);
   *  2. the Python weekday UDF (reference `etl.py:104-112`) becomes the
   *     built-in `date_format(_, "EEEE")` — no executor<->Python round trip;
-  *  3. the OR-predicate artist join (reference `etl.py:147-151`), which
-  *     Catalyst can only nested-loop, runs through [[OrEquiJoin]]
-  *     (multiset-identical, hash-joinable); `rewriteOrJoin=false` keeps
-  *     the verbatim predicate for plan-parity testing;
+  *  3. the OR-predicate artist join (reference `etl.py:147-151`) keeps
+  *     the reference's verbatim predicate, which stock Catalyst can only
+  *     nested-loop; [[graft.plans.OrEquiJoinRule]], armed by
+  *     [[graft.GraftSession]], plans it as hash-joinable branches
+  *     (multiset-identical). The pipeline therefore expects a
+  *     `GraftSession`-configured session: on a bare session it still
+  *     gives the same rows, through a BroadcastNestedLoopJoin;
   *  4. write distribution and listing: `songs` and `songplays` are
   *     hash-distributed by their partition columns into an explicit
   *     `defaultParallelism` partitions (not the reference's column-only
@@ -77,8 +79,7 @@ object Sparkify {
     * derivations exactly (SparkifyGoldenSpec proves it row-level). */
   final case class Config(
       inputData: String, outputData: String,
-      inferSchema: Boolean = false, rewriteOrJoin: Boolean = true,
-      sessionTz: Option[String] = None)
+      inferSchema: Boolean = false, sessionTz: Option[String] = None)
 
   /** Run `f` with the session time zone overridden, restoring after. */
   def withSessionTz[T](spark: SparkSession, tz: Option[String])(f: => T): T =
@@ -183,20 +184,16 @@ object Sparkify {
     // J1 inner join on song title (etl.py:140)
     val songsLogs = withTs.join(songsDf, withTs("song") === songsDf("title"), "inner")
 
-    // J2 OR-predicate left join to artists (etl.py:147-151). The reference
-    // disambiguates the two `location` columns with dataframe aliases
-    // (`etl.py:147,165`); we rename the artist-side one instead — invisible
-    // in the output (songplays keeps the log-side location) and it lets the
-    // rewrite's unionByName line the branches up.
+    // J2 OR-predicate left join to artists (etl.py:147-151), rewritten by
+    // the session's OrEquiJoinRule. The reference disambiguates the two
+    // `location` columns with dataframe aliases (`etl.py:147,165`); we
+    // rename the artist-side one instead — invisible in the output
+    // (songplays keeps the log-side location) and the later unqualified
+    // `location` reference stays unambiguous.
     val artistsR = artistsDf.withColumnRenamed("location", "artist_location_dim")
-    val artistsSongsLogs =
-      if (cfg.rewriteOrJoin)
-        OrEquiJoin.leftOrJoin(songsLogs, artistsR,
-          ("artist", "name"), ("location", "artist_location_dim"))
-      else
-        songsLogs.join(artistsR,
-          songsLogs("artist") === artistsR("name") ||
-            songsLogs("location") === artistsR("artist_location_dim"), "left")
+    val artistsSongsLogs = songsLogs.join(artistsR,
+      songsLogs("artist") === artistsR("name") ||
+        songsLogs("location") === artistsR("artist_location_dim"), "left")
 
     // J3 left join to the in-memory time table (etl.py:152-155), final
     // projection (etl.py:158-168), distinct + repartition + partitioned

@@ -68,10 +68,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Lowering is `UTF8String.toLowerCase` itself — the exact function the
   * `lower()` expression runs — so locale/Unicode edge cases cannot
   * diverge by construction.
-  *
-  * `SPARK_GRAFT_ANNOTATE_REGEX=1` restores the composable regex forms in
-  * TextFunctions/Curation — a BENCH-ONLY lever so the fused win stays
-  * measurable like-for-like (the SPARK_GRAFT_SHINGLE_HOF convention).
   */
 case class AnnotateStatsExpr(child: Expression) extends UnaryExpression {
 
@@ -247,7 +243,7 @@ object AnnotateStats {
     }
 
     // derived scores, replicating the Column forms' exact IEEE sequence
-    // (TextFunctions.langIdRegex / qualityScoreRegex — AnnotateSpec pins
+    // (the regex langId / qualityScore oracles in AnnotateSpec, which pins
     // bit-equality): int→double casts are exact, the when-chains map to
     // if-chains over the same comparisons, the final sum associates left
     val langPred =

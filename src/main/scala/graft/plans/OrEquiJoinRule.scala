@@ -37,11 +37,13 @@ import org.apache.spark.sql.types.DecimalType
   * aggregates consume the rewritten union (group completeness would
   * need both complements).
   *
-  * This is the plan-level form of [[graft.operators.OrEquiJoin]] (SURVEY.md
-  * §4): with the rule enabled, ANY query — SQL text, naive DataFrame code,
-  * the Sparkify parity path — gets the rewrite without calling the
-  * operator. Catalyst cannot key a hash join on a disjunction and falls
-  * back to BroadcastNestedLoopJoin, O(|L| x |R|); the rewrite produces:
+  * This rule is the engine's only OR-join implementation (SURVEY.md §4):
+  * with it enabled, ANY query — SQL text, naive DataFrame code, the
+  * Sparkify J2 join — gets the rewrite, and
+  * [[graft.operators.OrEquiJoin.leftOrJoin]] is a thin wrapper that runs
+  * [[rewrite]] on its naive join. Catalyst cannot key a hash join on a
+  * disjunction and falls back to BroadcastNestedLoopJoin, O(|L| x |R|);
+  * the rewrite produces:
   *
   *   branch k (k=1..n): left INNER JOIN right_k ON pk AND NOT(p1..p(k-1))
   *                      — each matched pair lands in exactly one branch
@@ -69,8 +71,8 @@ import org.apache.spark.sql.types.DecimalType
   *             Join(left, right, LeftOuter, p1 OR .. OR pn))
   *
   * — the branch decomposition makes the expansion avoidable, and this
-  * rule now reaches that plan AUTOMATICALLY (SQL text or naive
-  * DataFrame code), not only via `OrEquiJoin.leftOrJoinAgg`:
+  * rule reaches that plan AUTOMATICALLY (SQL text or naive DataFrame
+  * code):
   *
   *  - branch 0 carries no residual ("first satisfied predicate" by
   *    construction), so the right side pre-aggregates to one partial
@@ -143,17 +145,21 @@ import org.apache.spark.sql.types.DecimalType
   * Guarded by `spark.graft.rewriteOrJoin`. The conf's hard default is
   * false (a raw SparkSession with just the extensions sees stock Spark
   * behavior), but [[graft.GraftSession.configure]] ARMS it — same
-  * first-line-of-defense rationale as AQE: the engine's own operators
-  * already use the explicit rewrite, and the armed rule covers
-  * user-authored SQL/DataFrame plans. Matching is top-down so
+  * first-line-of-defense rationale as AQE. The conf gates the optimizer
+  * pass only: `OrEquiJoin.leftOrJoin` calls [[rewrite]] directly and
+  * ignores it. Matching is top-down so
   * the Aggregate case wins over the bare-join case on the same subtree.
   */
 object OrEquiJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   val ConfKey = "spark.graft.rewriteOrJoin"
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(ConfKey, "false").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (conf.getConfString(ConfKey, "false").toBoolean) rewrite(plan) else plan
+
+  /** The rewrite itself, whatever the session conf says — the entry point
+    * of [[graft.operators.OrEquiJoin.leftOrJoin]]. */
+  private[graft] def rewrite(plan: LogicalPlan): LogicalPlan = {
     // transformDown: Aggregate(Join(OR)) must match BEFORE the bare Join
     // case consumes the child (transformUp would rewrite the join first
     // and the aggregate pattern would never be seen).
@@ -620,9 +626,12 @@ object OrEquiJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   private def statsEstimates(left: LogicalPlan, right: LogicalPlan,
                              pairs: Seq[(Expression, Expression)])
       : Option[(Seq[Double], Long, Long)] = {
+    // the scan's own attribute, whose name is the written column name the
+    // sketches are keyed by: a predicate attribute keeps the caller's
+    // spelling ("C_NATIONKEY" resolves case-insensitively), ADVICE r17
     def scanAttr(e: Expression, lr: org.apache.spark.sql.execution
         .datasources.LogicalRelation): Option[Attribute] = e match {
-      case at: Attribute if lr.outputSet.contains(at) => Some(at)
+      case at: Attribute => lr.output.find(_.exprId == at.exprId)
       case _ => None
     }
     for {

@@ -22,8 +22,8 @@ import graft.operators.OrEquiJoin
   *  - aggregates are exact-decimal, order-independent (safe under partial
   *    aggregation / AQE re-planning);
   *  - the OR-predicate left join (reference `etl.py:147-151`, a
-  *    BroadcastNestedLoopJoin trap) runs through [[OrEquiJoin]], which
-  *    rewrites it to two hash joins + an anti join.
+  *    BroadcastNestedLoopJoin trap) is rewritten by
+  *    [[graft.plans.OrEquiJoinRule]] to two hash joins + an anti join.
   */
 object Relational {
 
@@ -234,9 +234,10 @@ object Relational {
         |ORDER BY custkey""".stripMargin),
 
     // ---- J2: left join on OR of equalities (reference etl.py:147-151).
-    // Naive Spark plans BroadcastNestedLoopJoin (quadratic); the engine
-    // rewrites to two hash joins + anti join via OrEquiJoin. The oracle is
-    // the naive OR form — results must be multiset-identical.
+    // Naive Spark plans BroadcastNestedLoopJoin (quadratic); OrEquiJoin
+    // rewrites it to two hash joins + anti join, and the aggregate stays
+    // on top of the materialized pairs. The oracle is the naive OR form —
+    // results must be multiset-identical.
     "q08_or_join" -> Q(
       (s, dir) => {
         val lk = Lake(s, dir)
@@ -257,19 +258,20 @@ object Relational {
     // Same answer as q08, NEVER materializing the joined multiset. q08's
     // output is quadratic in SF by semantics (the 25-value nationkey
     // branch emits |customer|·|supplier|/25 pairs: 600k at sf0.1, 60M at
-    // sf1 — measured 40.6× runtime at 10× data, sub-linear per OUTPUT
-    // row but super-linear per INPUT row). When the consumer aggregates
-    // per left group, branch 0 (residual-free by the first-satisfied-
-    // predicate construction) pre-aggregates the right side to one row
-    // per key, and branch partials merge by SUM/LEAST — every stage
-    // |left|- or |right|-sized, so THIS plan scales linearly where q08
-    // cannot. Gated against the identical oracle.
+    // sf1 — measured 40.6× runtime at 10× data). Written as the naive
+    // DataFrame agg-over-OR-join: the session's armed OrEquiJoinRule
+    // plans it eagerly (every stage |left|- or |right|-sized, so THIS
+    // plan scales linearly where q08 cannot) — the DataFrame twin of
+    // q82's SQL text. Gated against the identical oracle.
     "q81_or_join_rollup" -> Q(
       (s, dir) => {
         val lk = Lake(s, dir)
-        OrEquiJoin.leftOrJoinAgg(lk.customer, lk.supplier,
-            "c_custkey", "s_suppkey", "n_match", "s_name", "first_sup",
-            ("c_nationkey", "s_nationkey"), ("c_name", "s_name"))
+        lk.customer.join(lk.supplier,
+            col("c_nationkey") === col("s_nationkey") ||
+              col("c_name") === col("s_name"), "left")
+          .groupBy("c_custkey")
+          .agg(count(col("s_suppkey")).as("n_match"),
+               min(col("s_name")).as("first_sup"))
           .orderBy("c_custkey")
       },
       """SELECT c_custkey, COUNT(s_suppkey) AS n_match, MIN(s_name) AS first_sup

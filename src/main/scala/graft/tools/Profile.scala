@@ -4,9 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{GraftSession, Lake}
-import graft.operators.{Dedup, OrEquiJoin, RuntimeFilter, Similarity, SkewJoin}
+import graft.operators.{Dedup, RuntimeFilter, Similarity, SkewJoin}
 import graft.plans.OrEquiJoinRule
-import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 
 /** One parameterized diagnostic profiler (VERDICT-r17 item 7): every
@@ -16,13 +15,12 @@ import graft.functions.TextFunctions._
   *   runMain graft.tools.Profile <cmd> [args...]
   *
   *   agg [sfDir]              decimal-sum vs integer-cents on q02's shape
-  *   annotate [sfDir]         c1 annotate: regex pipeline vs fused expr
   *   bloom [sfDir] [amp]      runtime Bloom filter on the q45 shape
   *   dedupnear [sfDir]        end-to-end dedupNear, prop vs star clustering
   *   dedupstages [sfDir]      MinHash-LSH stage isolation (scan..full)
   *   fam [sfDir]              minhash family timing (xx vs md5)
   *   kll [sfDir]              q52 stage isolation (scan/hashagg/build/full)
-  *   orjoin [nL] [nR]         OR-join three ways (BNLJ / rule / operator)
+  *   orjoin [nL] [nR]         OR-join two ways (BNLJ / rule)
   *   pq [sfDir]               PQ reconstruction cosine distribution (s11)
   *   q87 [sfDir]              q87 gate phase timer (probe/load/plan/exec)
   *   qtime <q,..> [sfDir] [r] any declared query: build/plan/exec phase split
@@ -51,7 +49,6 @@ object Profile {
     val rest = args.drop(1)
     cmd match {
       case "agg"         => agg(rest)
-      case "annotate"    => annotate(rest)
       case "bloom"       => bloom(rest)
       case "dedupnear"   => dedupNear(rest)
       case "dedupstages" => dedupStages(rest)
@@ -67,7 +64,7 @@ object Profile {
       case "skew"        => skew(rest)
       case other =>
         System.err.println(
-          s"unknown profile '$other' — one of: agg annotate bloom dedupnear " +
+          s"unknown profile '$other' — one of: agg bloom dedupnear " +
             "dedupstages fam kll orjoin pq q87 qtime reuse sigpersist skew")
         if (other != "help") sys.exit(2)
     }
@@ -198,47 +195,6 @@ object Profile {
     spark.stop()
   }
 
-  /** c1 annotate stage two ways: the composable regex pipeline (6 regex
-    * scans + 2 splits + 1 replace per row) vs the fused one-pass
-    * [[graft.plans.AnnotateStatsExpr]]. Both forced through an xxhash64
-    * fold over all four derived columns so pruning can't skip the work. */
-  private def annotate(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = session("profile-annotate")
-    val docs = Lake(spark, dir).documents
-    def t(name: String)(f: => Any): Unit = {
-      val t0 = System.nanoTime()
-      val v = f
-      println(f"ANN $name%-14s ${(System.nanoTime() - t0) / 1e9}%8.2f s  v=$v")
-    }
-    def force(df: DataFrame): Any =
-      // bit_xor, not sum: an ANSI long-sum of hashes overflows
-      df.select(bit_xor(xxhash64(col("lang_pred"), col("quality"),
-        col("n_tokens"), col("fp")))).head().get(0)
-    def regexForm = docs
-      .withColumn("lang_pred", TextFunctions.langIdRegex(col("text")))
-      .withColumn("quality", TextFunctions.qualityScoreRegex(col("text")))
-      .withColumn("n_tokens", size(tokens(col("text"))).cast("long"))
-      .withColumn("fp", fingerprintMd5(col("text")))
-    def fusedForm = {
-      val st = annotateStats(col("text"))
-      docs.withColumn("__ann", st)
-        .withColumn("lang_pred", langIdFrom(col("__ann")))
-        .withColumn("quality", qualityFrom(col("__ann")))
-        .withColumn("n_tokens", col("__ann").getField("n_tokens").cast("long"))
-        .withColumn("fp", md5(col("__ann").getField("norm")))
-        .drop("__ann")
-    }
-    for (rep <- 1 to 3) {
-      t(s"regex_$rep")(force(regexForm))
-      t(s"fused_$rep")(force(fusedForm))
-      t(s"c1_fused_$rep")(
-        graft.queries.CurationQueries.defs("c1_curation")
-          .fn(spark, dir).count())
-    }
-    spark.stop()
-  }
-
   /** What the runtime Bloom filter buys: the q45 shape with broadcast
     * DISABLED so the join shuffles — the 100 TB regime where the
     * filter's job is to shrink the probe-side exchange. The probe side
@@ -361,9 +317,8 @@ object Profile {
     spark.stop()
   }
 
-  /** The OR-equi left join at synthetic scale, three ways: nested loop
-    * (the reference's plan), the injected optimizer rule, the explicit
-    * operator. */
+  /** The OR-equi left join at synthetic scale, two ways: nested loop
+    * (the reference's plan) and the injected optimizer rule. */
   private def orJoin(args: Array[String]): Unit = {
     val nLeft = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nRight = args.drop(1).headOption.map(_.toLong).getOrElse(2000L)
@@ -385,9 +340,6 @@ object Profile {
     time("nested_loop")(naive().count())
     spark.conf.set(OrEquiJoinRule.ConfKey, "true")
     time("optimizer_rule")(naive().count())
-    spark.conf.set(OrEquiJoinRule.ConfKey, "false")
-    time("explicit_operator")(
-      OrEquiJoin.leftOrJoin(left, right, ("k1", "r1"), ("k2", "r2")).count())
     spark.stop()
   }
 

@@ -94,9 +94,9 @@ class AnnotateSpec extends AnyFunSuite {
     val rows = corpus.select(
       col("text"),
       langIdFrom(st).as("f_lang"),
-      TextFunctions.langIdRegex(col("text")).as("r_lang"),
+      AnnotateSpec.langIdRegex(col("text")).as("r_lang"),
       qualityFrom(st).as("f_q"),
-      TextFunctions.qualityScoreRegex(col("text")).as("r_q"),
+      AnnotateSpec.qualityScoreRegex(col("text")).as("r_q"),
       md5(st.getField("norm")).as("f_fp"),
       fingerprintMd5(col("text")).as("r_fp")).collect()
     for (r <- rows) {
@@ -118,9 +118,9 @@ class AnnotateSpec extends AnyFunSuite {
     val r = df.select(
       annotateStats(col("text")).isNull.as("st_null"),
       langIdFrom(annotateStats(col("text"))).as("f_lang"),
-      TextFunctions.langIdRegex(col("text")).as("r_lang"),
+      AnnotateSpec.langIdRegex(col("text")).as("r_lang"),
       qualityFrom(annotateStats(col("text"))).as("f_q"),
-      TextFunctions.qualityScoreRegex(col("text")).as("r_q")).collect().head
+      AnnotateSpec.qualityScoreRegex(col("text")).as("r_q")).collect().head
     assert(r.getBoolean(0))
     assert(r.getString(1) === "de" && r.getString(2) === "de")
     assert(r.getDouble(3) === 0.7 && r.getDouble(4) === 0.7)
@@ -131,11 +131,11 @@ class AnnotateSpec extends AnyFunSuite {
     val docs = Lake(spark, sf0001).documents
     val fused = Curation.annotateAndFilter(docs, "text")
       .collect().map(_.toString).sorted.toSeq
-    // regex twin assembled exactly as the lever path does
+    // regex twin of the annotate stage
     val text = col("text")
     val regex = docs
-      .withColumn("lang_pred", TextFunctions.langIdRegex(text))
-      .withColumn("quality", TextFunctions.qualityScoreRegex(text))
+      .withColumn("lang_pred", AnnotateSpec.langIdRegex(text))
+      .withColumn("quality", AnnotateSpec.qualityScoreRegex(text))
       .withColumn("n_tokens", size(tokens(text)).cast("long"))
       .withColumn("fp", fingerprintMd5(text))
       .where(col("quality") >= Curation.Config().minQuality)
@@ -157,5 +157,31 @@ class AnnotateSpec extends AnyFunSuite {
     assert(evalSites >= 1 && evalSites <= 3,
       s"expected 1-3 compute sites in generated code, got $evalSites " +
         s"(plan instances: $hits)")
+  }
+}
+
+/** The composable regex forms of `langId` / `qualityScore` that
+  * [[graft.plans.AnnotateStatsExpr]] replaced, kept as the oracles the
+  * spec compares the fused counters against. */
+object AnnotateSpec {
+  import org.apache.spark.sql.Column
+
+  def langIdRegex(c: Column): Column = {
+    val Seq(en, es, de) = langMarkers.map { case (_, p) => langScore(c, p) }
+    when(en === 0 && es === 0 && de === 0, lit("unk"))
+      .when(en >= es && en >= de, lit("en"))
+      .when(es >= de, lit("es"))
+      .otherwise(lit("de"))
+  }
+
+  def qualityScoreRegex(c: Column): Column = {
+    val nTok = size(tokens(c)).cast(DoubleType)
+    val stopHits = langScore(c, langMarkers.head._2).cast(DoubleType)
+    val punct = regexp_count(c, lit("""[^\s\p{L}\p{N}]""")).cast(DoubleType)
+    val lenSat = least(nTok / 100.0, lit(1.0))
+    val stopShare = when(nTok > 0, stopHits / nTok).otherwise(lit(0.0))
+    val punctShare = when(length(c) > 0, punct / length(c).cast(DoubleType))
+      .otherwise(lit(0.0))
+    lenSat * 0.5 + stopShare * 0.3 + (lit(1.0) - punctShare) * 0.2
   }
 }

@@ -794,7 +794,7 @@ class OperatorLawsSpec extends AnyFunSuite {
         val toks = TextFunctions.tokens(col("text"))
         val got = df.select(col("id"),
             TextFunctions.wordShingles(col("text"), n).as("s"),
-            TextFunctions.hofShingles(toks, n).as("h"))
+            OperatorLawsSpec.hofShingles(toks, n).as("h"))
           .collect()
         got.forall(r => r.getSeq[String](1) == r.getSeq[String](2))
       }
@@ -817,12 +817,42 @@ class OperatorLawsSpec extends AnyFunSuite {
       val df = all.map { case (i, t) => (i, t.orNull) }.toDF("doc_id", "text")
       Seq(Dedup.XxMinHash, Dedup.Md5MinHash).forall { fam =>
         Seq((3, 8), (2, 4)).forall { case (n, k) =>
-          canon(Dedup.nativeMinHashSignatures(
-              df, "doc_id", "text", n, k, fam)) ==
-            canon(Dedup.aggMinHashSignatures(df, "doc_id", "text", n, k, fam))
+          canon(Dedup.minHashSignatures(df, "doc_id", "text", n, k, fam)) ==
+            canon(OperatorLawsSpec.aggMinHashSignatures(df, "doc_id", "text", n, k, fam))
         }
       }
     }
     check("minhash signature parity", prop, trials = 8)
   }
+}
+
+/** Reference forms the engine's native expressions replaced, kept as the
+  * oracles the laws above compare against. */
+object OperatorLawsSpec {
+  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.types.{ArrayType, StringType}
+  import graft.functions.TextFunctions.shingleSet
+
+  /** The composable shingle form [[graft.plans.WordShinglesExpr]]
+    * replaced: `sequence` would generate a DESCENDING range if
+    * stop < start, hence the explicit guard. */
+  def hofShingles(toks: Column, n: Int): Column =
+    when(size(toks) >= n,
+      transform(sequence(lit(1), size(toks) - lit(n - 1)),
+        i => concat_ws(" ", slice(toks, i, lit(n)))))
+      .otherwise(array().cast(ArrayType(StringType)))
+
+  /** The explode + groupBy aggregate form [[Dedup.minHashSignatures]]
+    * replaced: one posting row per distinct shingle, seeded hashes
+    * min-aggregated per document. */
+  def aggMinHashSignatures(df: DataFrame, id: String, text: String,
+                           shingleN: Int, numHashes: Int,
+                           family: Dedup.MinHashFamily): DataFrame =
+    df.select(col(id), explode(shingleSet(col(text), shingleN)).as("shingle"))
+      .withColumn("base", family.base(col("shingle")))
+      .groupBy(col(id))
+      .agg(
+        array((0 until numHashes).map(j =>
+          min(family.seeded(col("base"), j))): _*).as("signature"),
+        count(lit(1)).as("n_shingles"))
 }

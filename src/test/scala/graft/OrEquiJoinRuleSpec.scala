@@ -21,6 +21,9 @@ class OrEquiJoinRuleSpec extends AnyFunSuite {
     df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
   }
 
+  private object AdaptivePlans
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   private def withRule[T](on: Boolean)(f: => T): T = {
     // GraftSession arms the rule by default; restore the prior value,
     // not unset (unset would drop to the conf's hard default, false,
@@ -73,7 +76,7 @@ class OrEquiJoinRuleSpec extends AnyFunSuite {
   }
 
   // ---- Aggregate-over-OR-join: the q81 eager-aggregation plan, reached
-  // automatically by the rule (no explicit OrEquiJoin.leftOrJoinAgg call).
+  // automatically by the rule.
 
   private def naiveAgg() = naiveOrJoin()
     .groupBy("c_custkey")
@@ -117,34 +120,55 @@ class OrEquiJoinRuleSpec extends AnyFunSuite {
 
   test("agg rule law: null keys, null groups, unmatched lefts, dup groups") {
     import spark.implicits._
-    // the OrEquiJoinSpec awkward-corner fixture, driven through the RULE
-    // path: a null group key, null join keys on either predicate, a left
-    // row matching both predicates, a left row matching nothing, and
-    // duplicate group keys
+    // every awkward corner at once: a null group key, null join keys on
+    // either predicate, a left row matching both predicates, a left row
+    // matching nothing, and duplicate group keys
     val left = Seq(
-      (Some(1L), Some(5L), Some("a")),
-      (Some(1L), Some(6L), None),
-      (Some(2L), None, Some("b")),
-      (None, Some(5L), Some("zz")),
-      (Some(3L), None, None),
-      (Some(4L), Some(9L), Some("b"))
+      (Some(1L), Some(5L), Some("a")),   // matches k1 (two rights) and k2
+      (Some(1L), Some(6L), None),        // same group, k1 only
+      (Some(2L), None, Some("b")),       // k2 only
+      (None, Some(5L), Some("zz")),      // null group, k1 matches
+      (Some(3L), None, None),            // matches nothing -> 0 / null
+      (Some(4L), Some(9L), Some("b"))    // k1 no match, k2 matches
     ).toDF("g", "k1", "k2")
     val right = Seq(
       (Some(5L), Some("x"), Some(100L)),
-      (Some(5L), Some("y"), None),
-      (Some(6L), Some("a"), Some(300L)),
-      (None, Some("b"), Some(400L))
+      (Some(5L), Some("y"), None),       // null v: not counted
+      (Some(6L), Some("a"), Some(300L)), // reachable via k1=6 OR k2='a'
+      (None, Some("b"), Some(400L))      // null r1 never matches k1
     ).toDF("r1", "r2", "v")
-    def q() = left.join(right,
-        col("k1") === col("r1") || col("k2") === col("r2"), "left")
-      .groupBy("g")
-      .agg(count(col("v")).as("n"), min(col("r2")).as("m"),
-        max(col("r2")).as("mx"), sum(col("v")).as("s"))
-    val expected = withRule(on = false) { canon(q()) }
-    withRule(on = true) {
-      val df = q()
-      assert(!df.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
-      assert(canon(df) === expected)
+    // the exploding key: 200 left rows x 50 right rows on one k1 value =
+    // 10,000 pairs, which the eager plan must never materialize
+    val hotLeft = (0 until 200).map(i => (i.toLong, 7L, s"nm$i")).toDF("g", "k1", "k2")
+    val hotRight = (0 until 50).map(i => (7L, s"r$i", i.toLong)).toDF("r1", "r2", "v")
+    val twoPreds = col("k1") === col("r1") || col("k2") === col("r2")
+    val fixtures = Seq(
+      ("two preds", left, right, twoPreds),
+      ("single pred", left, right, col("k1") === col("r1")),
+      ("exploding key", hotLeft, hotRight, twoPreds))
+    for ((name, l, r, cond) <- fixtures) {
+      def q() = l.join(r, cond, "left")
+        .groupBy("g")
+        .agg(count(col("v")).as("n"), min(col("r2")).as("m"),
+          max(col("r2")).as("mx"), sum(col("v")).as("s"))
+      val expected = withRule(on = false) { canon(q()) }
+      withRule(on = true) {
+        val df = q()
+        assert(canon(df) === expected, name)
+        val plan = df.queryExecution.executedPlan
+        assert(!plan.toString.contains("BroadcastNestedLoopJoin"), name)
+        if (name == "exploding key") {
+          // after execution the adaptive plan is final and its join
+          // metrics are populated: every join emits at most
+          // |left| + |right| rows, so the right side was aggregated
+          // before it met the left
+          val joinRows = AdaptivePlans.collect(plan) {
+            case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
+              j.metrics("numOutputRows").value
+          }
+          assert(joinRows.nonEmpty && joinRows.max <= 250, s"join output rows $joinRows")
+        }
+      }
     }
   }
 
@@ -652,22 +676,28 @@ class OrEquiJoinRuleSpec extends AnyFunSuite {
     // (SURVEY §6 r17), now reclaimed wherever stats exist.
     val cust = spark.read.parquet(s"$statsStage/customer/data")
     val supp = spark.read.parquet(s"$statsStage/supplier/data")
-    def q() = cust.join(supp,
-        col("c_name") === col("s_name") ||
-          col("c_nationkey") === col("s_nationkey"), "left")
-      .groupBy("c_custkey")
-      .agg(count(col("s_suppkey")).as("n"), sum(col("s_acctbal")).as("s"))
-    val expected = withRule(on = false) { canon(q()) }
-    withRule(on = true) {
-      val df = q()
-      assert(b0KeyOf(df) === "s_nationkey",
-        "branch form must fire with the exploder pre-aggregated")
-      assert(!df.queryExecution.optimizedPlan.toString.contains("__orj_t2_"),
-        "no IE overlap term may remain in the branch plan")
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("__orj_") &&
-        !plan.contains("BroadcastNestedLoopJoin"), plan)
-      assert(canon(df) === expected)
+    // count+sum, and q81's count+min
+    val consumers = Seq(
+      Seq(count(col("s_suppkey")).as("n"), sum(col("s_acctbal")).as("s")),
+      Seq(count(col("s_suppkey")).as("n"), min(col("s_name")).as("m")))
+    for (aggs <- consumers) {
+      def q() = cust.join(supp,
+          col("c_name") === col("s_name") ||
+            col("c_nationkey") === col("s_nationkey"), "left")
+        .groupBy("c_custkey")
+        .agg(aggs.head, aggs.tail: _*)
+      val expected = withRule(on = false) { canon(q()) }
+      withRule(on = true) {
+        val df = q()
+        assert(b0KeyOf(df) === "s_nationkey",
+          "branch form must fire with the exploder pre-aggregated")
+        assert(!df.queryExecution.optimizedPlan.toString.contains("__orj_t2_"),
+          "no IE overlap term may remain in the branch plan")
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("__orj_") &&
+          !plan.contains("BroadcastNestedLoopJoin"), plan)
+        assert(canon(df) === expected)
+      }
     }
   }
 
@@ -740,35 +770,6 @@ class OrEquiJoinRuleSpec extends AnyFunSuite {
       val df = fourPredAgg(lk.customer, lk.supplier)
       assert(b0KeyOf(df) === "s_name")
     }
-  }
-
-  test("operator leftOrJoinAgg: stats reorder preds too (q81 twin over sketched scans)") {
-    import graft.operators.OrEquiJoin
-    import org.apache.spark.sql.catalyst.expressions.Alias
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    val cust = spark.read.parquet(s"$statsStage/customer/data")
-      .select("c_custkey", "c_name", "c_nationkey")
-    val supp = spark.read.parquet(s"$statsStage/supplier/data")
-      .select("s_suppkey", "s_name", "s_nationkey")
-    // exploding nationkey pred written SECOND: stats must move it to
-    // branch 0 (the operator's pre-agg groups on `__cnt0`'s key) without
-    // changing the answer
-    val got = OrEquiJoin.leftOrJoinAgg(cust, supp,
-      "c_custkey", "s_suppkey", "n", "s_name", "m",
-      ("c_name", "s_name"), ("c_nationkey", "s_nationkey"))
-    val preKey = got.queryExecution.optimizedPlan.collectFirst {
-      case ag: Aggregate if ag.aggregateExpressions.exists {
-            case al: Alias => al.name == "__cnt0"
-            case _ => false
-          } =>
-        ag.groupingExpressions.flatMap(_.references.map(_.name)).mkString(",")
-    }.getOrElse("none")
-    assert(preKey === "s_nationkey")
-    val expected = canon(OrEquiJoin.leftOrJoin(cust, supp,
-        ("c_name", "s_name"), ("c_nationkey", "s_nationkey"))
-      .groupBy("c_custkey")
-      .agg(count(col("s_suppkey")).as("n"), min(col("s_name")).as("m")))
-    assert(canon(got) === expected)
   }
 
   // ---- INNER OR-joins (round 17) ---------------------------------------
@@ -1509,30 +1510,24 @@ class OrEquiJoinRuleSpec extends AnyFunSuite {
     }
   }
 
-  test("operator statsOrder resolves sketch names case-insensitively (ADVICE r17)") {
-    import graft.operators.OrEquiJoin
-    import org.apache.spark.sql.catalyst.expressions.Alias
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+  test("agg rule stats-pick resolves sketch names case-insensitively (ADVICE r17)") {
     val cust = spark.read.parquet(s"$statsStage/customer/data")
       .select("c_custkey", "c_name", "c_nationkey")
     val supp = spark.read.parquet(s"$statsStage/supplier/data")
       .select("s_suppkey", "s_name", "s_nationkey")
     // UPPERCASED predicate names resolve in the join (Spark's default
-    // case-insensitive resolver) — the sketch lookup must match them too
-    val got = OrEquiJoin.leftOrJoinAgg(cust, supp,
-      "c_custkey", "s_suppkey", "n", "s_name", "m",
-      ("C_NAME", "S_NAME"), ("C_NATIONKEY", "S_NATIONKEY"))
-    val preKey = got.queryExecution.optimizedPlan.collectFirst {
-      case ag: Aggregate if ag.aggregateExpressions.exists {
-            case al: Alias => al.name == "__cnt0"
-            case _ => false
-          } =>
-        ag.groupingExpressions.flatMap(_.references.map(_.name)).mkString(",")
-    }.getOrElse("none")
-    // the resolved attribute keeps the caller's spelling — compare
-    // case-insensitively; what matters is that the reorder FIRED
-    assert(preKey.equalsIgnoreCase("s_nationkey"),
-      s"uppercase predicate names must still hit the sketches and reorder, got $preKey")
+    // case-insensitive resolver) — the sketch lookup must match them too,
+    // or the exploding nationkey predicate written second is not picked
+    withRule(on = true) {
+      val df = cust.join(supp,
+          col("C_NAME") === col("S_NAME") ||
+            col("C_NATIONKEY") === col("S_NATIONKEY"), "left")
+        .groupBy("c_custkey")
+        .agg(count(col("s_suppkey")).as("n"), min(col("s_name")).as("m"))
+      val key = b0KeyOf(df)
+      assert(key.equalsIgnoreCase("s_nationkey"),
+        s"uppercase predicate names must still hit the sketches, got $key")
+    }
   }
 
   // ---- eager aggregation over WIDENED (Q19-class) disjuncts (round 19)

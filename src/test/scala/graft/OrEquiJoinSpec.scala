@@ -23,10 +23,19 @@ class OrEquiJoinSpec extends AnyFunSuite {
 
   test("rewrite plans hash joins, never a nested-loop join") {
     val lk = Lake(spark, sf0001)
-    val plan = OrEquiJoin.leftOrJoin(lk.customer, lk.supplier,
-      ("c_nationkey", "s_nationkey"), ("c_name", "s_name"))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin"))
+    val key = graft.plans.OrEquiJoinRule.ConfKey
+    val prev = spark.conf.get(key)
+    // the operator rewrites its own join even where the session's rule
+    // is disarmed
+    for (armed <- Seq("true", "false")) {
+      spark.conf.set(key, armed)
+      try {
+        val plan = OrEquiJoin.leftOrJoin(lk.customer, lk.supplier,
+          ("c_nationkey", "s_nationkey"), ("c_name", "s_name"))
+          .queryExecution.executedPlan.toString
+        assert(!plan.contains("BroadcastNestedLoopJoin"), s"armed=$armed")
+      } finally spark.conf.set(key, prev)
+    }
   }
 
   test("overlapping left/right column names are rejected up front") {
@@ -37,75 +46,6 @@ class OrEquiJoinSpec extends AnyFunSuite {
       OrEquiJoin.leftOrJoin(left, right, ("id", "other"))
     }
     assert(e.getMessage.contains("name"))
-  }
-
-  test("leftOrJoinAgg equals the materializing agg-over-join on the lake tables") {
-    val lk = Lake(spark, sf0001)
-    val viaJoin = OrEquiJoin.leftOrJoin(lk.customer, lk.supplier,
-        ("c_nationkey", "s_nationkey"), ("c_name", "s_name"))
-      .groupBy("c_custkey")
-      .agg(count(col("s_suppkey")).as("n_match"),
-        min(col("s_name")).as("first_sup"))
-    val eager = OrEquiJoin.leftOrJoinAgg(lk.customer, lk.supplier,
-      "c_custkey", "s_suppkey", "n_match", "s_name", "first_sup",
-      ("c_nationkey", "s_nationkey"), ("c_name", "s_name"))
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.select(df.columns.sorted.toSeq.map(col): _*)
-        .collect().map(_.toString).sorted.toSeq
-    assert(canon(eager) === canon(viaJoin))
-  }
-
-  test("leftOrJoinAgg law holds with null keys, null groups, unmatched lefts, single pred") {
-    import spark.implicits._
-    // every awkward corner at once: a null group key, null join keys on
-    // either predicate, a left row matching both predicates, a left row
-    // matching nothing, and duplicate group keys
-    val left = Seq(
-      (Some(1L), Some(5L), Some("a")),   // matches k1 (two rights) and k2
-      (Some(1L), Some(6L), None),        // same group, k1 only
-      (Some(2L), None, Some("b")),       // k2 only
-      (None, Some(5L), Some("zz")),      // null group, k1 matches
-      (Some(3L), None, None),            // matches nothing -> 0 / null
-      (Some(4L), Some(9L), Some("b"))    // k1 no match, k2 matches
-    ).toDF("g", "k1", "k2")
-    val right = Seq(
-      (Some(5L), Some("x"), Some(100L)),
-      (Some(5L), Some("y"), None),       // null countCol: not counted
-      (Some(6L), Some("a"), Some(300L)), // reachable via k1=6 OR k2='a'
-      (None, Some("b"), Some(400L))      // null r1 never matches k1
-    ).toDF("r1", "r2", "v")
-    for (preds <- Seq(Seq(("k1", "r1"), ("k2", "r2")), Seq(("k1", "r1")))) {
-      val viaJoin = OrEquiJoin.leftOrJoin(left, right, preds: _*)
-        .groupBy("g")
-        .agg(count(col("v")).as("n"), min(col("r2")).as("m"))
-      val eager = OrEquiJoin.leftOrJoinAgg(left, right,
-        "g", "v", "n", "r2", "m", preds: _*)
-      def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        df.select(df.columns.sorted.toSeq.map(col): _*)
-          .collect().map(_.toString).sorted.toSeq
-      assert(canon(eager) === canon(viaJoin), s"preds=$preds")
-    }
-  }
-
-  test("leftOrJoinAgg never materializes a joined row per pair on the exploding branch") {
-    import spark.implicits._
-    // 200 left rows all sharing one k1 key x 50 right rows on that key =
-    // 10,000 pairs through the join; the eager plan's first branch must
-    // aggregate the right side BEFORE joining (50 -> 1 row), so its
-    // max rows-output of any join stage stays O(left + right).
-    val left = (0 until 200).map(i => (i.toLong, 7L, s"nm$i")).toDF("g", "k1", "k2")
-    val right = (0 until 50).map(i => (7L, s"r$i", i.toLong)).toDF("r1", "r2", "v")
-    val eager = OrEquiJoin.leftOrJoinAgg(left, right,
-      "g", "v", "n", "r2", "m", ("k1", "r1"), ("k2", "r2"))
-    val plan = eager.queryExecution.optimizedPlan.toString
-    // the pre-aggregate sits BELOW the first join in the optimized plan
-    assert(plan.contains("Aggregate"), plan)
-    val viaJoin = OrEquiJoin.leftOrJoin(left, right, ("k1", "r1"), ("k2", "r2"))
-      .groupBy("g").agg(count(col("v")).as("n"), min(col("r2")).as("m"))
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-    assert(canon(eager.orderBy("g")) === canon(viaJoin.orderBy("g")))
-    assert(eager.count() === 200L)
   }
 
   test("null join keys fall through to the null-complement branch") {

@@ -5,8 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.GraftTestSparkBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.pipelines.Sparkify
 
 /** End-to-end parity tests for the Sparkify pipeline against the semantic
@@ -143,17 +145,38 @@ class SparkifySpec extends AnyFunSuite {
     assert(sp.select("year").distinct().collect().map(_.getInt(0)).toSeq === Seq(2018))
   }
 
-  test("songplays: OR-join rewrite and verbatim OR predicate agree") {
-    val in2 = Files.createTempDirectory("sparkify_in2").toString
-    val out2 = Files.createTempDirectory("sparkify_out2").toString
-    SparkifyFixtures.write(in2)
-    Sparkify.run(spark, Sparkify.Config(in2, out2, rewriteOrJoin = false))
+  test("songplays: the armed OR-join rule agrees with the disarmed nested loop") {
+    val key = graft.plans.OrEquiJoinRule.ConfKey
+    val prev = spark.conf.get(key)
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executed.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // (output dir, executed plan of its songplays write)
+    def run(armed: Boolean): (String, String) = {
+      val in = Files.createTempDirectory("sparkify_orj_in").toString
+      val out = Files.createTempDirectory("sparkify_orj_out").toString
+      SparkifyFixtures.write(in)
+      spark.conf.set(key, armed.toString)
+      try Sparkify.run(spark, Sparkify.Config(in, out))
+      finally spark.conf.set(key, prev)
+      GraftTestSparkBridge.waitListenerBusEmpty(spark.sparkContext)
+      (out, executed.asScala.filter(_.contains(s"$out/songplays")).mkString("\n"))
+    }
+    spark.listenerManager.register(listener)
+    val ((armedOut, armedPlan), (loopOut, loopPlan)) =
+      try (run(armed = true), run(armed = false))
+      finally spark.listenerManager.unregister(listener)
+    assert(loopPlan.contains("BroadcastNestedLoopJoin"), loopPlan)
+    assert(armedPlan.nonEmpty && !armedPlan.contains("BroadcastNestedLoopJoin"), armedPlan)
     def canon(dir: String) = {
       val df = spark.read.parquet(s"$dir/songplays")
       val cols = df.columns.sorted.toSeq
       df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
     }
-    assert(canon(outDir) === canon(out2))
+    assert(canon(armedOut) === canon(loopOut))
   }
 
   test("explicit schemas reproduce schema-inference results (parity mode)") {
