@@ -39,6 +39,19 @@ import org.apache.spark.sql.SparkSession
   *    OR-join implementation: `OrEquiJoin.leftOrJoin` is a wrapper that
   *    applies it whatever this conf says. Opt out per session/query with
   *    `spark.graft.rewriteOrJoin=false`.
+  *  - `spark.hadoop.fs.file.impl`: [[graft.InProcessLocalFileSystem]].
+  *    Without the Hadoop native library, the stock local filesystem starts
+  *    a `chmod` process for every file, `.crc` file and directory it
+  *    creates, and an `ls -ld` for every listed status whose permission is
+  *    read; on a 4-CPU VM one start costs about 12 ms. A JFR
+  *    `jdk.ProcessStart` count gave 1,629 `chmod` starts in one perfbench
+  *    `sparkify_etl` run (4 passes of 102 files) and 242 starts in one
+  *    `headline_floor` run, 130 of them `ls` from `Lake`'s schema-cache
+  *    fingerprint listing. The bound class sets and reads the same modes
+  *    in process. Only `file://` paths reach it: S3A and HDFS keep their
+  *    own filesystems. Hadoop's filesystem cache does not key on
+  *    `fs.file.impl`, so a JVM that created a plain `file://` filesystem
+  *    before this session was built keeps using that one.
   *  - shuffle partitions default low for local runs; a real cluster
   *    deployment overrides via spark-submit conf (AQE coalescing makes the
   *    initial number mostly a ceiling).
@@ -105,6 +118,8 @@ object GraftSession {
     // this back towards Spark's default.
     .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
       "500000")
+    .config("spark.hadoop.fs.file.impl",
+      classOf[graft.InProcessLocalFileSystem].getName)
     .config("spark.ui.enabled", "false")
 
   /** Local session for tests/tools. Cores and shuffle partitions track the

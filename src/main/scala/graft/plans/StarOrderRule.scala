@@ -304,17 +304,23 @@ object StarOrderRule extends Rule[LogicalPlan] {
   }
 
   /** The condition as one fact-scan-attribute = dim-attribute equality
-    * (either written orientation). */
+    * (either written orientation), the fact side as the scan's own
+    * attribute. */
   private def splitEquality(cond: Expression, factScan: LogicalRelation,
                             dim: LogicalPlan): Option[(Attribute, Attribute)] =
     cond match {
       case EqualTo(a: Attribute, b: Attribute) =>
         val dimOut = dim.outputSet
-        if (factScan.outputSet.contains(a) && dimOut.contains(b)) Some((a, b))
-        else if (factScan.outputSet.contains(b) && dimOut.contains(a)) Some((b, a))
-        else None
+        scanAttr(factScan, a).filter(_ => dimOut.contains(b)).map(_ -> b)
+          .orElse(scanAttr(factScan, b).filter(_ => dimOut.contains(a)).map(_ -> a))
       case _ => None
     }
+
+  /** The scan's own attribute for `a`. A condition carries a column as
+    * the query spelled it, which may differ in case from the scan's name
+    * that the sketches are keyed by. */
+  private def scanAttr(lr: LogicalRelation, a: Attribute): Option[Attribute] =
+    lr.output.find(_.exprId == a.exprId)
 
   private def traverse[A, B](xs: Seq[A])(f: A => Option[B]): Option[Seq[B]] =
     xs.foldLeft(Option(Seq.empty[B])) { (acc, x) =>
@@ -328,7 +334,8 @@ object StarOrderRule extends Rule[LogicalPlan] {
           lr <- scanUnder(dimPlan, throughFilters = false)
           path <- rootPathOf(lr)
           dimStats <- StarStatsRegistry.statsForOrLoad(sessionOf(lr), path)
-          dimSk <- dimStats.keySketches.get(dimAttr.name)
+          dimOwn <- scanAttr(lr, dimAttr)
+          dimSk <- dimStats.keySketches.get(dimOwn.name)
           factSk <- factStats.keySketches.get(factAttr.name)
         } yield DimLink(dimPlan, cond, survivalOf(factSk, dimSk), path)
       }

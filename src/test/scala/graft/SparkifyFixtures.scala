@@ -8,8 +8,8 @@ import java.nio.file.{Files, Path, Paths}
   *  - log rows whose artist/location match no artist (NULL artist_id),
   *  - a log row matching an artist by location only (OR-join second leg),
   *  - one user seen under both `free` and `paid` (two rows in users),
-  *  - duplicate timestamps (time-join row multiplication, collapsed by
-  *    the fact-table distinct),
+  *  - duplicate timestamps (duplicate fact rows, collapsed by the
+  *    fact-table distinct),
   *  - duplicate song file (collapsed by the songs distinct),
   *  - year=0 songs, empty artist_location, null lat/long,
   *  - non-NextSong pages that must be filtered out.
@@ -64,8 +64,8 @@ object SparkifyFixtures {
       log("NextSong", "10", "Sylvie", "Cruz", "F", "free", t0,
         "\"Setanta matins\"", "\"Elena\"", "San Jose", 100),
       // same title at the SAME truncated second (ts +500ms) — duplicate
-      // start_time rows in time, multiplied through the time join and
-      // collapsed by the songplays distinct
+      // start_time rows in time and a duplicate fact row, collapsed by
+      // the songplays distinct
       log("NextSong", "10", "Sylvie", "Cruz", "F", "free", t0 + 500,
         "\"Setanta matins\"", "\"Elena\"", "San Jose", 100),
       // matches by LOCATION only (log location = artist location Dubai UAE)

@@ -26,6 +26,12 @@ class SparkifySpec extends AnyFunSuite {
   }
   private def read(t: String) = spark.read.parquet(s"$outDir/$t")
 
+  /** Sorted rows of a table, columns in name order. */
+  private def canonRows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val cols = df.columns.sorted.toSeq
+    df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+  }
+
   test("songs: distinct rows, partitioned by year/artist_id") {
     val songs = read("songs")
     assert(songs.count() === 3) // duplicate SO1 file collapsed
@@ -141,7 +147,7 @@ class SparkifySpec extends AnyFunSuite {
     val byLoc = sp.where(col("location") === "Dubai UAE")
       .select("artist_id").collect().map(_.getString(0)).toSet
     assert(byLoc === Set("AR1"))
-    // year/month come from the time table
+    // year/month are the event's date parts
     assert(sp.select("year").distinct().collect().map(_.getInt(0)).toSeq === Seq(2018))
   }
 
@@ -171,12 +177,85 @@ class SparkifySpec extends AnyFunSuite {
       finally spark.listenerManager.unregister(listener)
     assert(loopPlan.contains("BroadcastNestedLoopJoin"), loopPlan)
     assert(armedPlan.nonEmpty && !armedPlan.contains("BroadcastNestedLoopJoin"), armedPlan)
-    def canon(dir: String) = {
-      val df = spark.read.parquet(s"$dir/songplays")
-      val cols = df.columns.sorted.toSeq
-      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
-    }
+    def canon(dir: String) = canonRows(spark.read.parquet(s"$dir/songplays"))
     assert(canon(armedOut) === canon(loopOut))
+  }
+
+  /** A NextSong event line of the log JSON; `ts` is the raw JSON value. */
+  private def nextSong(userId: String, ts: String, song: String, artist: String,
+                       location: String, session: Long): String =
+    s"""{"page": "NextSong", "userId": "$userId", "firstName": "F$userId", "lastName": "L$userId", "gender": "F", "level": "free", "ts": $ts, "song": "$song", "artist": "$artist", "location": "$location", "sessionId": $session, "userAgent": "ua", "auth": "Logged In", "method": "PUT", "status": 200, "itemInSession": 1, "length": 1.0, "registration": 1.5e12}"""
+
+  test("songplays: the J3 projection equals the verbatim time-table join (divergence 5)") {
+    val in = Files.createTempDirectory("sparkify_j3_in").toString
+    val out = Files.createTempDirectory("sparkify_j3_out").toString
+    SparkifyFixtures.write(in)
+    val t0 = 1542241826123L // the fixture's first event
+    Files.writeString(Paths.get(s"$in/log_data/2018/12.json"), Seq(
+      // the same ts as the fixture's first event: duplicate time rows
+      nextSong("40", t0.toString, "Intro", "Elena", "Paris", 500),
+      nextSong("40", t0.toString, "Setanta matins", "Nobody", "Nowhere", 500),
+      // null ts: null start_time, year and month
+      nextSong("41", "null", "Intro", "Lionel Richie", "Nowhere", 501),
+      // 2018-11-30 22:30 UTC is December under +02:00
+      nextSong("42", "1543617000000", "Intro", "Nobody", "Paris", 502)
+    ).mkString("\n"))
+    val tz = Some("+02:00")
+    Sparkify.run(spark, Sparkify.Config(in, out, sessionTz = tz))
+    val want = Sparkify.withSessionTz(spark, tz) {
+      // the reference's fact chain, J3 as the left join to `time`
+      // (etl.py:139-173), over the same JSON and the written dims
+      val withTs = spark.read.schema(Sparkify.logSchema).json(s"$in/log_data/*/*")
+        .where(col("page") === "NextSong")
+        .withColumn("ts_timestamp", Sparkify.tsTimestamp(col("ts")))
+      val time = Sparkify.timeTable(withTs)
+      val songsDf = spark.read.parquet(s"$out/songs/*/*/*")
+      val artistsR = spark.read.parquet(s"$out/artists")
+        .withColumnRenamed("location", "artist_location_dim")
+      val songsLogs = withTs.join(songsDf, withTs("song") === songsDf("title"), "inner")
+      val j2 = songsLogs.join(artistsR,
+        songsLogs("artist") === artistsR("name") ||
+          songsLogs("location") === artistsR("artist_location_dim"), "left")
+      canonRows(j2.join(time, col("ts_timestamp") === time("start_time"), "left")
+        .select(
+          col("start_time"), col("userId").as("user_id"),
+          col("level"), col("song_id"), col("artist_id"),
+          col("sessionId").as("session_id"), col("location"),
+          col("userAgent").as("user_agent"), col("year"), col("month"))
+        .distinct())
+    }
+    val sp = spark.read.parquet(s"$out/songplays")
+    assert(canonRows(sp) === want)
+    assert(sp.where(col("start_time").isNull && col("year").isNull &&
+      col("month").isNull).count() === 1, "the null-ts event")
+    assert(sp.where(col("user_id") === "42" && col("month") === 12).count() === 1,
+      "month under the session zone")
+    // Intro by name (AR1) and by location (AR3); both Setanta songs unmatched
+    assert(sp.where(col("user_id") === "40").count() === 4)
+  }
+
+  test("processLogData parses the log JSON once") {
+    val in = Files.createTempDirectory("sparkify_once_in").toString
+    val out = Files.createTempDirectory("sparkify_once_out").toString
+    SparkifyFixtures.write(in)
+    // enough log bytes that the dims' parquet reads are small beside them
+    val titles = Seq("Intro", "Setanta matins", "Never Recorded")
+    val logFile = Paths.get(s"$in/log_data/2018/big.json")
+    Files.writeString(logFile, (0 until 4000).map { i =>
+      nextSong((i % 50).toString, (1542241826123L + 37000L * i).toString,
+        titles(i % 3), if (i % 4 == 0) "Elena" else "Other", "Dubai UAE", i / 10)
+    }.mkString("\n"))
+    val cfg = Sparkify.Config(in, out)
+    Sparkify.processSongData(spark, cfg)
+    def fileBytesRead(): Long =
+      org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.iterator.asScala
+        .filter(_.getScheme == "file").map(s => Long.unbox(s.getLong("bytesRead"))).sum
+    val logBytes = Files.size(logFile) + Files.size(Paths.get(s"$in/log_data/2018/11.json"))
+    val before = fileBytesRead()
+    Sparkify.processLogData(spark, cfg)
+    val read = fileBytesRead() - before
+    assert(read >= logBytes, s"read $read B, the log JSON is $logBytes B")
+    assert(read < 2 * logBytes, s"read $read B, the log JSON is $logBytes B")
   }
 
   test("explicit schemas reproduce schema-inference results (parity mode)") {
@@ -184,11 +263,7 @@ class SparkifySpec extends AnyFunSuite {
     val out3 = Files.createTempDirectory("sparkify_out3").toString
     SparkifyFixtures.write(in3)
     Sparkify.run(spark, Sparkify.Config(in3, out3, inferSchema = true))
-    def canon(dir: String, t: String) = {
-      val df = spark.read.parquet(s"$dir/$t")
-      val cols = df.columns.sorted.toSeq
-      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
-    }
+    def canon(dir: String, t: String) = canonRows(spark.read.parquet(s"$dir/$t"))
     for (t <- Seq("songs", "artists", "users", "time", "songplays"))
       assert(canon(outDir, t) === canon(out3, t), s"table $t diverged")
   }

@@ -89,6 +89,18 @@ class StarOrderRuleSpec extends AnyFunSuite {
       s"got $order")
   }
 
+  test("an uppercased predicate still finds the scans' sketches") {
+    stage
+    // the condition spells each key as written; the sketches are keyed by
+    // the scans' own column names
+    val df = scan(spark, "fact")
+      .join(scan(spark, "dim_supplier"), col("L_SUPPKEY") === col("S_SUPPKEY"))
+      .join(scan(spark, "dim_orders"), col("L_ORDERKEY") === col("O_ORDERKEY"))
+      .join(scan(spark, "dim_part"), col("L_PARTKEY") === col("P_PARTKEY"))
+    val order = joinOrder(df.queryExecution.optimizedPlan)
+    assert(order === Seq("dim_part", "dim_orders", "dim_supplier"), s"got $order")
+  }
+
   test("equality law on the rule path: reordered output is multiset-identical to rule-off") {
     stage
     val off = spark.newSession()

@@ -53,6 +53,19 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(VectorIndex.generations(spark, dir) === Seq(1L))
   }
 
+  test("the stored centroid table equals a freshly derived one (kmeansIters = 0)") {
+    // s14's inline leg ranks its probes against the stored table, so the
+    // table's content is pinned here, bit for bit
+    def byBucket(df: org.apache.spark.sql.DataFrame) =
+      df.select("bucket", "centroid").collect()
+        .map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1).toSeq
+    val fresh = Similarity.trainCells(corpus, "vec_id", "embedding",
+      planes = 4, kmeansIters = 0)._2
+    val stored = byBucket(VectorIndex.centroids(spark, dir))
+    assert(stored.nonEmpty)
+    assert(stored === byBucket(fresh))
+  }
+
   test("probe scan is dynamically partition-pruned to the probed buckets") {
     val df = VectorIndex.query(spark, dir, queries,
       "vec_id", "embedding", k = 5, nProbe = 2)
