@@ -39,6 +39,16 @@ import org.apache.spark.sql.SparkSession
   *    OR-join implementation: `OrEquiJoin.leftOrJoin` is a wrapper that
   *    applies it whatever this conf says. Opt out per session/query with
   *    `spark.graft.rewriteOrJoin=false`.
+  *  - The declared queries rely on this arming: the OR-join, NOT IN and
+  *    star-ordering gates (q82–q101, q85) run on the caller's session and
+  *    read the rewritten plan from it, so a session built without
+  *    `configure` fails their plan gates. A child session per call
+  *    would be pure fixed cost: a fresh session compiles its generated
+  *    code anew (q99 at sf0.001: 25–27 codegen compiles per warm call on
+  *    a fresh child, 0–4 on the caller's session). Only the
+  *    materialized-view queries keep a child (`EventsQueries.mvSession`,
+  *    one per parent session), because view routing must stay off the
+  *    shared session.
   *  - `spark.hadoop.fs.file.impl`: [[graft.InProcessLocalFileSystem]].
   *    Without the Hadoop native library, the stock local filesystem starts
   *    a `chmod` process for every file, `.crc` file and directory it

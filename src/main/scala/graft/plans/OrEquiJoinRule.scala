@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, IntegerType}
 
 /** Optimizer rule: `left LEFT JOIN right ON p1 OR p2 OR ... pn` (all pk
   * equi-predicates) => union of hash-joinable branches. INNER OR-joins
@@ -85,10 +85,10 @@ import org.apache.spark.sql.types.DecimalType
   *    merge by SUM for count/sum and LEAST/GREATEST for min/max — no
   *    inclusion–exclusion;
   *  - branch 0's left join saw every left row, so its group set is
-  *    complete; later partials attach by null-safe-equality left joins
-  *    (a null group key is a group like any other, as groupBy treats
-  *    it). Unmatched groups report count 0 / null min-max-sum — exactly
-  *    the left-outer + aggregate semantics.
+  *    complete; one merge aggregate on the group attrs combines the
+  *    branches (a null group key is a group like any other, as groupBy
+  *    treats it). Unmatched groups report count 0 / null min-max-sum —
+  *    exactly the left-outer + aggregate semantics.
   *
   * Plan shape by consumer, in preference order:
   *
@@ -108,9 +108,27 @@ import org.apache.spark.sql.types.DecimalType
   *     MATTER which predicate is the exploding one (order-robust; gated
   *     by q83 at n=2 and spec-pinned at n=3, both with the exploding
   *     predicate written LAST).
+  *
+  *     Forms 1 and 2 share one FUSED tree whatever the term count T,
+  *     reading each input once:
+  *
+  *       right → Expand (one projection per term: term id, the term's
+  *               keys in their slots, nulls elsewhere, the argument
+  *               columns; term id null on a null key or a failed
+  *               right-only residual)
+  *             → Filter(term id IS NOT NULL) → Aggregate(term id, slots)
+  *       left  → Expand (same slot layout, group attrs passed through)
+  *       Join(LeftOuter, term id = term id AND slot <=> slot ...)
+  *       → Aggregate(group attrs; per term t, merge of
+  *                   If(term id = t, partial, NULL))
+  *
+  *     One scan of each input, one join and no union, however many
+  *     terms (a subtree per term would scan each input and join T times:
+  *     7 for q86).
   *  3. The BRANCH-PARTITION form, where only branch 0 (the sole
   *     residual-free branch) pre-aggregates and later branches are real
-  *     joins sized by their own selectivity. OR commutes, so WHICH
+  *     joins sized by their own selectivity, unioned under one merge
+  *     aggregate. OR commutes, so WHICH
   *     predicate is branch 0 is the rule's to choose: when both sides
   *     are single scans with persisted write-time key sketches
   *     ([[StarStatsRegistry]] — registered at ZoneMapTable write time
@@ -136,7 +154,8 @@ import org.apache.spark.sql.types.DecimalType
   * substituted per aggregate CALL inside the output's own shape.
   *
   * The rewrite keeps the original output attribute ids (group attrs
-  * pass through branch 0's untouched `left`; aggregate aliases are
+  * pass through the left Expand, or branch 0's untouched `left`;
+  * aggregate aliases are
   * re-issued under their original exprIds), so parent operators
   * resolve unchanged.
   * Equivalence is law-pinned in OrEquiJoinRuleSpec (randomized fixture
@@ -390,7 +409,7 @@ object OrEquiJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     * shared id makes the merge-join condition ambiguous. So aliases
     * defined by Project/Aggregate/Window nodes are re-issued too;
     * rarer alias-definers (Generate, Expand, ...) are caught by the
-    * [[rewriteAgg]] full-freshen bail-out. */
+    * branch form's full-freshen bail-out in [[rewriteAgg]]. */
   private[plans] def freshen(p: LogicalPlan): (LogicalPlan, AttributeMap[Attribute]) = {
     def reAlias(list: Seq[NamedExpression]): Seq[NamedExpression] = list.map {
       case al: Alias => al.newInstance().asInstanceOf[NamedExpression]
@@ -416,9 +435,10 @@ object OrEquiJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** True iff every output attribute of `p` gets a NEW exprId under
-    * [[freshen]]. The agg rewrite requires this (fresh copies are joined
-    * against originals); plans defining output attrs via nodes freshen
-    * doesn't re-alias (Generate, Expand, ...) must fall back. */
+    * [[freshen]]. The branch form of the agg rewrite requires this (its
+    * residual branches join fresh copies); plans defining output attrs
+    * via nodes freshen doesn't re-alias (Generate, Expand, ...) must fall
+    * back. */
   private def freshensFully(p: LogicalPlan): Boolean =
     freshen(p)._1.output.zip(p.output).forall { case (n, o) => n.exprId != o.exprId }
 
@@ -791,14 +811,6 @@ object OrEquiJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     }
     val anyMixed = parsed.exists(_.mixed)
 
-    // Every term/branch beyond the first joins a FRESHENED copy of a
-    // subplan against plans carrying the ORIGINAL ids; if freshen cannot
-    // re-id some output attribute (defined by a node it doesn't
-    // re-alias), the merge joins would see one exprId on both sides —
-    // bail to the join-only rewrite, which keeps fresh copies in
-    // separate Union branches where duplicate inner ids are invisible.
-    if (!freshensFully(left) || !freshensFully(right)) return None
-
     // ---- stats-picked branch form --------------------------------------
     // Form (1) below (min/max-only) is order-robust with n terms — always
     // minimal. For count/sum/avg mixes the rule chooses between the
@@ -846,6 +858,13 @@ object OrEquiJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       case None => preds.length >= 4
     }))
     val ieMode = !minMaxForm && !branchForm
+    // The branch form's residual branches join FRESHENED copies of both
+    // sides; if freshen cannot re-id some output attribute (defined by a
+    // node it doesn't re-alias), a branch would carry one exprId on both
+    // of its join sides — bail to the join-only rewrite. The fused forms
+    // read each side once and re-id nothing.
+    if (branchForm && (!freshensFully(left) || !freshensFully(right)))
+      return None
     // Branch 0 must be pre-aggregatable (not mixed). With stats, pick
     // the ELIGIBLE disjunct with the largest estimated output; without,
     // keep written order unless preds(0) is mixed. OR commutes, so
@@ -923,50 +942,6 @@ object OrEquiJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     // Per-branch partial type: what ONE level of the primitive yields.
     val partialTypes = flatPrims.map { case (p, e) => fresh(p, e).dataType }
 
-    // One PRE-AGGREGATED term: `right` rolled up to one partial row per
-    // (composite) join key BEFORE touching `left` — rows of `right` with
-    // a null key form a null pre-agg group the EqualTo condition never
-    // matches, same as the OR join where a null key satisfies no
-    // predicate. Returns the JOINED frame with the partial columns
-    // still attached (the union merge below does ALL cross-group
-    // merging in one final aggregate — round 20). `freshSides` re-ids
-    // both subplans (the terms land in one Union, and downstream
-    // consumers must never see duplicate ids); term 0 keeps the
-    // ORIGINAL left so the group attrs' ids flow to the final
-    // projection unchanged.
-    def preAggTerm(keyIdx: Seq[Int], tag: String, freshSides: Boolean,
-                   joinType: org.apache.spark.sql.catalyst.plans.JoinType)
-        : (LogicalPlan, Seq[Attribute], Seq[Alias]) = {
-      val (l, lm) =
-        if (freshSides) freshen(left) else (left, AttributeMap.empty[Attribute])
-      val (r, rm) =
-        if (freshSides) freshen(right) else (right, AttributeMap.empty[Attribute])
-      def remapR(e: Expression): Expression =
-        e.transform { case at: Attribute => rm.getOrElse(at, at) }
-      def remapL(e: Expression): Expression =
-        e.transform { case at: Attribute => lm.getOrElse(at, at) }
-      val keyPairs = keyIdx.flatMap(ki => oParsed(ki).keys)
-      val keyAliases = keyPairs.zipWithIndex.map { case ((_, rk), j) =>
-        Alias(remapR(rk), s"__orj_${tag}_k$j")()
-      }
-      val preAliases = flatPrims.zipWithIndex.map { case ((p, e), i) =>
-        Alias(agg(fresh(p, remapR(e))), s"__orj_${tag}_p$i")()
-      }
-      // right-only residuals filter the pre-aggregation's INPUT — the
-      // Q19-class generalization: the term still touches only `right`
-      val rFiltered = keyIdx.flatMap(ki => oParsed(ki).res)
-        .reduceOption(And)
-        .map(e => Filter(remapR(e), r): LogicalPlan).getOrElse(r)
-      val pre = Aggregate(keyPairs.map(kp => remapR(kp._2)),
-        keyAliases ++ preAliases, rFiltered)
-      val cond = keyPairs.zip(keyAliases).map { case ((lk, _), ka) =>
-        EqualTo(remapL(lk), ka.toAttribute): Expression
-      }.reduce(And)
-      val joined = Join(l, pre, joinType, Some(cond), JoinHint.NONE)
-      val gk = groupAttrs.map(g => lm.getOrElse(g, g))
-      (joined, gk, preAliases)
-    }
-
     // ---- plan shape choice -------------------------------------------
     // Three forms, in preference order:
     //  (1) ALL-min/max consumers: min/max are multiplicity- AND overlap-
@@ -990,7 +965,7 @@ object OrEquiJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     // Forms (1)/(2) are |left|/|right|-bounded regardless of predicate
     // order — the order contract is gone for every n≤3 consumer mix, for
     // min/max-only at any n, and at n≥4 whenever both scans carry stats.
-    // singletons first (ascending), then larger subsets: slots 0..n−1
+    // singletons first (ascending), then larger subsets: terms 0..n−1
     // are the additive per-predicate terms min/max read
     val ieKeys: Seq[Seq[Int]] =
       (1 to oPreds.length).flatMap(k =>
@@ -1000,103 +975,195 @@ object OrEquiJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       else if (ieMode) Some(ieKeys)
       else None
 
-    // ---- union merge (round 20, guide §2.4) ---------------------------
-    // The terms used to combine by a chain of per-term merge Aggregates
-    // + LeftOuter attach joins on the group key: n merge exchanges plus
-    // up to n−1 join exchanges, every one an AQE stage materialization
-    // barrier (q86 ran 26 sequential single-task jobs). Instead, UNION
-    // the term JOIN outputs — each term owns a disjoint block of P slot
-    // columns, null-padded in every other branch — and merge in ONE
-    // final aggregate. Per (group, term) the slot function sees exactly
-    // the former per-term rows (aggregates ignore the other branches'
-    // null padding), a term with no rows for a group yields null
-    // exactly as the former unmatched LeftOuter attach did, term 0's
-    // LeftOuter join keeps the group set complete, and a null group key
-    // is one group under groupBy just as it was under the EqualNullSafe
-    // attach — so the merged relation is row-identical while n+n−1
-    // exchanges collapse into one and the term subtrees become
-    // independent (AQE materializes them concurrently). At scale this
-    // also strictly shrinks shuffled bytes: the attach chain re-
-    // shuffled the accumulated spine per join, the union shuffles each
-    // term's partials once.
-    //  - pre-aggregated terms (IE / min-max / branch 0) carry PARTIAL
-    //    columns: the final aggregate re-merges them (counts/sums by
-    //    SUM, min/max by themselves);
-    //  - residual branches (branch form, k>=1) carry their RAW argument
-    //    columns: the final aggregate applies the first-level function,
-    //    which sees only that branch's rows — null padding elsewhere,
-    //    and a projected arg column counts/sums exactly as the arg
-    //    expression did over the branch join's rows.
-    case class TermU(plan: LogicalPlan, gk: Seq[Attribute],
-                     cols: Seq[NamedExpression], preAgged: Boolean)
-    val terms: Seq[TermU] =
+    // ---- fused terms (forms 1 and 2) ---------------------------------
+    // Every term pre-aggregates `right` on its own key(s), so ONE pass
+    // over each input serves all T terms (a subtree per term would scan
+    // each input T times, 7 for q86):
+    //  - `right` goes through one Expand with one projection per term:
+    //    a term id, the term's keys in their key slots (null in every
+    //    other slot), and the argument columns. The term id is null
+    //    where a used key is null (an equality never matches a null
+    //    key) or the term's right-only residual fails; those rows are
+    //    filtered, and one Aggregate on (term id, slots) yields each
+    //    term's partials per distinct key — every term's
+    //    pre-aggregation, side by side;
+    //  - `left` goes through one Expand with the same slot layout, its
+    //    term id null where a used left key is null; the group attrs
+    //    pass through under their original ids;
+    //  - one LeftOuter join on term id `=` plus `<=>` per slot (used
+    //    slots are non-null on both sides, unused ones null on both)
+    //    attaches each (left row, term) to at most one partial row,
+    //    as a per-term join would, and keeps every left row —
+    //    the group set stays complete;
+    //  - one merge Aggregate on the group attrs re-merges each term's
+    //    partials over `If(term = t, partial, NULL)` (counts/sums by
+    //    SUM, min/max by themselves), the `__orj_t<t>_p<j>` columns.
+    // Each input is read once, one join serves all T terms, and no
+    // Union is needed; per (group, term) the merge sees exactly the rows
+    // a per-term join would give it.
+    def fusedTerms(keys: Seq[Seq[Int]]): (LogicalPlan, Seq[Seq[Attribute]]) = {
+      // one key slot per (disjunct, key) pair, typed as the right key
+      val slotStart = oParsed.scanLeft(0)(_ + _.keys.length)
+      val slotTypes = oParsed.flatMap(_.keys.map(_._2.dataType))
+      def slots(ks: Seq[Int], side: ((Expression, Expression)) => Expression)
+          : Seq[Expression] = {
+        val filled = ks.flatMap(ki => oParsed(ki).keys.zipWithIndex.map {
+          case (kp, j) => slotStart(ki) + j -> side(kp)
+        }).toMap
+        slotTypes.zipWithIndex.map { case (dt, i) =>
+          filled.get(i).map(sameType(_, dt)).getOrElse(Literal(null, dt))
+        }
+      }
+      def termId(t: Int, conds: Seq[Expression]): Expression =
+        If(conds.reduce(And), Literal(t), Literal(null, IntegerType))
+      def used(ks: Seq[Int], side: ((Expression, Expression)) => Expression) =
+        ks.flatMap(ki => oParsed(ki).keys.map(side))
+
+      val rTid = AttributeReference("__orj_tid", IntegerType)()
+      val rSlots = slotTypes.indices.map(i =>
+        AttributeReference(s"__orj_k$i", slotTypes(i))())
+      val argSet = AttributeSet(flatPrims.flatMap(_._2.references))
+      val args = right.output.filter(argSet.contains)
+      val rExpand = Expand(
+        keys.zipWithIndex.map { case (ks, t) =>
+          val ok = used(ks, _._2).map(IsNotNull(_)) ++
+            ks.flatMap(ki => oParsed(ki).res)
+          (termId(t, ok) +: slots(ks, _._2)) ++ args
+        },
+        (rTid +: rSlots) ++ args, right)
+      val partials = flatPrims.zipWithIndex.map { case ((p, e), i) =>
+        Alias(agg(fresh(p, e)), s"__orj_p$i")()
+      }
+      val rKeys = rTid +: rSlots
+      val pre = Aggregate(rKeys, rKeys ++ partials,
+        Filter(IsNotNull(rTid), rExpand))
+
+      val gAttrs = groupAttrs.distinct
+      val lTid = AttributeReference("__orj_ltid", IntegerType)()
+      val lSlots = slotTypes.indices.map(i =>
+        AttributeReference(s"__orj_lk$i", slotTypes(i))())
+      val lExpand = Expand(
+        keys.zipWithIndex.map { case (ks, t) =>
+          gAttrs ++ (termId(t, used(ks, _._1).map(IsNotNull(_))) +:
+            slots(ks, _._1))
+        },
+        gAttrs ++ (lTid +: lSlots), left)
+      val cond = (EqualTo(lTid, rTid) +: lSlots.zip(rSlots).map {
+        case (l, r) => EqualNullSafe(l, r): Expression
+      }).reduce(And)
+      val joined = Join(lExpand, pre, LeftOuter, Some(cond), JoinHint.NONE)
+
+      val termCols = keys.indices.map(t => partials.zipWithIndex.map {
+        case (pa, j) =>
+          Alias(If(EqualTo(lTid, Literal(t)),
+            pa.toAttribute.withNullability(true),
+            Literal(null, pa.dataType)), s"__orj_t${t}_p$j")()
+      })
+      val mergeAliases = termCols.map(_.zipWithIndex.map { case (c, j) =>
+        Alias(sameType(agg(merge(flatPrims(j)._1, c.toAttribute)),
+          partialTypes(j)), s"${c.name}m")()
+      })
+      (Aggregate(gAttrs, gAttrs ++ mergeAliases.flatten,
+          Project(gAttrs ++ termCols.flatten, joined)),
+        mergeAliases.map(_.map(_.toAttribute)))
+    }
+
+    // ---- branch-partition form (form 3): a union of branches ---------
+    // Branch 0 carries no left-referencing residual, so `right`
+    // pre-aggregates to one partial row per distinct branch-0 key BEFORE
+    // touching `left` (a right-only residual filters its input);
+    // branches 1..n-1 keep real joins (their residuals reference left
+    // columns), sized by their own predicate's selectivity, over fresh
+    // copies of both sides. The branch outputs are UNIONed — each owns a
+    // disjoint block of slot columns, null-padded in every other branch
+    // — and merged in ONE final aggregate:
+    //  - branch 0 carries PARTIAL columns, re-merged (counts/sums by SUM,
+    //    min/max by themselves);
+    //  - residual branches carry their RAW argument columns, and the
+    //    final aggregate applies the first-level function, which sees
+    //    only that branch's rows.
+    // Branch 0's LeftOuter join keeps the group set complete, and a null
+    // group key is one group under groupBy.
+    def branchUnion(): (LogicalPlan, Seq[Seq[Attribute]]) = {
+      case class TermU(plan: LogicalPlan, gk: Seq[Attribute],
+                       cols: Seq[NamedExpression], preAgged: Boolean)
+      val b0 = {
+        val keyPairs = oParsed(0).keys
+        val keyAliases = keyPairs.zipWithIndex.map { case ((_, rk), j) =>
+          Alias(rk, s"__orj_b0_k$j")()
+        }
+        val preAliases = flatPrims.zipWithIndex.map { case ((p, e), i) =>
+          Alias(agg(fresh(p, e)), s"__orj_b0_p$i")()
+        }
+        // a right-only residual filters the pre-aggregation's INPUT
+        val rIn = oParsed(0).res.map(Filter(_, right)).getOrElse(right)
+        val pre = Aggregate(keyPairs.map(_._2), keyAliases ++ preAliases, rIn)
+        val cond = keyPairs.zip(keyAliases).map { case ((lk, _), ka) =>
+          EqualTo(lk, ka.toAttribute): Expression
+        }.reduce(And)
+        TermU(Join(left, pre, LeftOuter, Some(cond), JoinHint.NONE),
+          groupAttrs, preAliases.map(_.toAttribute), preAgged = true)
+      }
+      val parts = oPreds.indices.drop(1).map { k =>
+        val (fl, lm) = freshen(left)
+        val (fr, rm) = freshen(right)
+        def remap(e: Expression): Expression = e.transform {
+          case at: Attribute => rm.getOrElse(at, lm.getOrElse(at, at))
+        }
+        val cond = And(remap(oPreds(k)), remap(notYet(oPreds.take(k)).get))
+        val jk = Join(fl, fr, Inner, Some(cond), JoinHint.NONE)
+        val argAliases = flatPrims.zipWithIndex.map { case ((_, e), i) =>
+          Alias(remap(e), s"__orj_b${k}_a$i")()
+        }
+        TermU(jk, groupAttrs.map(lm(_)), argAliases, preAgged = false)
+      }
+      val terms = b0 +: parts
+      val nSlots = flatPrims.length
+      val branches: Seq[LogicalPlan] = terms.zipWithIndex.map { case (t, ti) =>
+        val slots: Seq[NamedExpression] = terms.zipWithIndex.flatMap {
+          case (u, ui) =>
+            if (ui == ti) t.cols
+            else u.cols.zipWithIndex.map { case (c, j) =>
+              Alias(Literal(null, c.dataType), s"__orj_z${ui}_$j")()
+            }
+        }
+        Project((t.gk: Seq[NamedExpression]) ++ slots, t.plan)
+      }
+      val unioned = Union(branches)
+      // Union output ids come from the FIRST child — branch 0, whose
+      // group keys are the ORIGINAL attributes, so the final projection's
+      // groupAttrs references resolve unchanged.
+      val gkOut = unioned.output.take(groupAttrs.length)
+      val mergeAliases = terms.zipWithIndex.map { case (t, ti) =>
+        flatPrims.zipWithIndex.map { case ((p, _), j) =>
+          val c = unioned.output(groupAttrs.length + ti * nSlots + j)
+          val fn = if (t.preAgged) merge(p, c) else fresh(p, c)
+          Alias(sameType(agg(fn), partialTypes(j)), s"__orj_u${ti}_m$j")()
+        }
+      }
+      (Aggregate(gkOut, (gkOut: Seq[NamedExpression]) ++ mergeAliases.flatten,
+          unioned),
+        mergeAliases.map(_.map(_.toAttribute)))
+    }
+
+    // Both constructions below yield the merged relation — one row per
+    // group, the group attrs under their ORIGINAL ids — and, per term,
+    // its merged partial attributes (one per flat primitive slot). A
+    // term with no rows for a group yields null there (Sum/Min/Max over
+    // no input), which the final projection's Coalesce/IsNull guards
+    // turn into the left-outer + aggregate semantics.
+    val (merged, termParts): (LogicalPlan, Seq[Seq[Attribute]]) =
       termKeys match {
-        case Some(keys) =>
-          // term 0 keeps the original left under a LeftOuter join, so
-          // its group set is complete; later terms are fresh inner joins.
-          keys.zipWithIndex.map { case (ks, i) =>
-            val (j, gk, pre) =
-              if (i == 0) preAggTerm(ks, s"t$i", freshSides = false, LeftOuter)
-              else preAggTerm(ks, s"t$i", freshSides = true, Inner)
-            TermU(j, gk, pre.map(_.toAttribute), preAgged = true)
-          }
-        case None =>
-          // ---- branch 0: residual-free, so `right` pre-aggregates to
-          // one partial row per distinct first-predicate key.
-          val (j0, gk0, pre0) =
-            preAggTerm(Seq(0), "b0", freshSides = false, LeftOuter)
-          // ---- branches 1..n-1: residuals reference left columns, so
-          // these stay real joins — sized by their own predicate's
-          // selectivity — contributing raw argument columns.
-          val parts = oPreds.indices.drop(1).map { k =>
-            val (fl, lm) = freshen(left)
-            val (fr, rm) = freshen(right)
-            def remap(e: Expression): Expression = e.transform {
-              case at: Attribute => rm.getOrElse(at, lm.getOrElse(at, at))
-            }
-            val cond = And(remap(oPreds(k)), remap(notYet(oPreds.take(k)).get))
-            val jk = Join(fl, fr, Inner, Some(cond), JoinHint.NONE)
-            val gk = groupAttrs.map(lm(_))
-            val argAliases = flatPrims.zipWithIndex.map { case ((_, e), i) =>
-              Alias(remap(e), s"__orj_b${k}_a$i")()
-            }
-            TermU(jk, gk, argAliases, preAgged = false)
-          }
-          TermU(j0, gk0, pre0.map(_.toAttribute), preAgged = true) +: parts
+        case Some(keys) => fusedTerms(keys)
+        case None       => branchUnion()
       }
-    val nSlots = flatPrims.length
-    val branches: Seq[LogicalPlan] = terms.zipWithIndex.map { case (t, ti) =>
-      val slots: Seq[NamedExpression] = terms.zipWithIndex.flatMap {
-        case (u, ui) =>
-          if (ui == ti) t.cols
-          else u.cols.zipWithIndex.map { case (c, j) =>
-            Alias(Literal(null, c.dataType), s"__orj_z${ui}_$j")()
-          }
-      }
-      Project((t.gk: Seq[NamedExpression]) ++ slots, t.plan)
-    }
-    val unioned = Union(branches)
-    // Union output ids come from the FIRST child — term 0, whose group
-    // keys are the ORIGINAL attributes, so the final projection's
-    // groupAttrs references resolve unchanged.
-    val gkOut = unioned.output.take(groupAttrs.length)
-    val mergeAliases: Seq[Seq[Alias]] = terms.zipWithIndex.map { case (t, ti) =>
-      flatPrims.zipWithIndex.map { case ((p, _), j) =>
-        val c = unioned.output(groupAttrs.length + ti * nSlots + j)
-        val fn = if (t.preAgged) merge(p, c) else fresh(p, c)
-        Alias(sameType(agg(fn), partialTypes(j)), s"__orj_u${ti}_m$j")()
-      }
-    }
-    val merged: LogicalPlan =
-      Aggregate(gkOut, (gkOut: Seq[NamedExpression]) ++ mergeAliases.flatten,
-        unioned)
+
     val slot: Int => Seq[Expression] =
-      (j: Int) => mergeAliases.map(_(j).toAttribute.withNullability(true))
-    // slots carrying PER-PREDICATE partials (additive); in IE mode the
-    // later slots are the signed overlaps — min/max must not read them
-    val nAdditive =
-      if (ieMode) oPreds.length
-      else termKeys.map(_.length).getOrElse(oPreds.length)
+      (j: Int) => termParts.map(_(j).withNullability(true))
+    // terms 0..n−1 carry PER-PREDICATE partials (additive) in every form;
+    // in IE mode the later terms are the signed overlaps — min/max must
+    // not read them
+    val nAdditive = oPreds.length
 
     // ---- final projection: original output names AND exprIds, so parent
     // operators resolve unchanged.

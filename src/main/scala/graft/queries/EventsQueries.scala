@@ -1107,12 +1107,25 @@ object EventsQueries {
     * shared SparkContext/extensions/catalog) with routing enabled THERE
     * only — the process-wide session the bench/verify harness shares
     * never optimizes any other query with routing armed, even though the
-    * views stay registered in the process-wide MV catalog. */
-  private def mvSession(s: SparkSession): SparkSession = {
-    val child = s.newSession()
-    child.conf.set(graft.plans.MaterializedViewRule.ConfKey, "true")
-    child
-  }
+    * views stay registered in the process-wide MV catalog. One child per
+    * parent session, made on first use and kept while the parent lives:
+    * a fresh session compiles its generated code anew (q63 with a child
+    * per call: 10 codegen compiles per warm call at sf0.001; with the
+    * kept child: 0). The GraftSession rule confs reach the child through
+    * the shared SparkConf, as for any `newSession()`. */
+  private[graft] def mvSession(s: SparkSession): SparkSession =
+    mvChildren.synchronized {
+      mvChildren.getOrElseUpdate(s, {
+        val child = s.newSession()
+        child.conf.set(graft.plans.MaterializedViewRule.ConfKey, "true")
+        child
+      })
+    }
+
+  /** The routing-armed child of each live parent session; weak keys, so
+    * a stopped-and-dropped parent does not pin its child. */
+  private val mvChildren =
+    scala.collection.mutable.WeakHashMap.empty[SparkSession, SparkSession]
 
   /** Does the optimized plan read a MATERIALIZED-VIEW table instead of
     * any of the query's base inputs? Forced at build time and emitted

@@ -483,7 +483,6 @@ object JoinQueries {
     "q85_star_order_stats" -> Q(
       (s, dir) => {
         import graft.operators.ZoneMapTable
-        import graft.plans.StarOrderRule
         import org.apache.spark.sql.catalyst.expressions.Attribute
         import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin, LogicalPlan, Project => LProject}
         import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -516,9 +515,7 @@ object JoinQueries {
         for (t <- Seq("fact", "dim_supplier", "dim_orders", "dim_part"))
           require(ZoneMapTable.loadStarStats(s, s"$stage/$t"),
             s"missing persisted star stats under $stage/$t")
-        val child = s.newSession()
-        child.conf.set(StarOrderRule.ConfKey, "true")
-        def scan(n: String) = graft.Lake.read(child, s"$stage/$n/data")
+        def scan(n: String) = graft.Lake.read(s, s"$stage/$n/data")
         val joined = scan("fact") // adversarial WRITTEN order
           .join(scan("dim_supplier"), col("l_suppkey") === col("s_suppkey"))
           .join(scan("dim_orders"), col("l_orderkey") === col("o_orderkey"))

@@ -281,22 +281,18 @@ object Relational {
       headline = true),
 
     // ---- the q81 plan, reached AUTOMATICALLY by the optimizer rule -----
-    // Identical SQL text to q08 — no operator call anywhere — run on a
-    // child session with spark.graft.rewriteOrJoin armed. OrEquiJoinRule's
-    // Aggregate(Join(OR)) case rewrites it to the eager-aggregation plan
-    // (branch-partitioned partials, right side pre-aggregated on the
-    // residual-free first predicate), so SQL/DataFrame users writing the
-    // natural agg-over-or-join never materialize the quadratic pair
-    // multiset. The plan shape is hash-gated: `plan_eager` is TRUE only
-    // when the executed plan contains neither a nested-loop join NOR a
-    // Union (a Union means the bare-join rewrite fired and the aggregate
-    // still consumed materialized pairs).
+    // Identical SQL text to q08 — no operator call anywhere — run on the
+    // caller's session, where GraftSession arms spark.graft.rewriteOrJoin.
+    // OrEquiJoinRule's Aggregate(Join(OR)) case rewrites it to the
+    // eager-aggregation plan (inclusion–exclusion terms, each input read
+    // once), so SQL/DataFrame users writing the natural agg-over-or-join
+    // never materialize the quadratic pair multiset. The plan shape is
+    // hash-gated: `plan_eager` is TRUE only when the executed plan carries
+    // the rule's `__orj_` columns and no nested-loop join.
     "q82_or_join_auto" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, COUNT(s_suppkey) AS n_match,
             |  MIN(s_name) AS first_sup
             |FROM customer LEFT JOIN supplier
@@ -337,10 +333,8 @@ object Relational {
     // Plan shape is hash-gated exactly like q82.
     "q83_or_join_worst_order" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, COUNT(s_suppkey) AS n_match,
             |  CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
             |FROM customer LEFT JOIN supplier
@@ -373,10 +367,8 @@ object Relational {
     // exactly like q82/q83.
     "q84_or_join_minmax" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, MIN(s_name) AS first_sup,
             |  MAX(s_acctbal) AS top_bal
             |FROM customer LEFT JOIN supplier
@@ -408,10 +400,8 @@ object Relational {
     // one aggregate, and the plan shape rides the hash like q82/q83.
     "q86_or_join_3pred" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, COUNT(s_suppkey) AS n_match,
             |  CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal,
             |  MIN(s_name) AS first_sup
@@ -465,13 +455,11 @@ object Relational {
         for (t <- Seq("customer", "supplier"))
           graft.plans.StarStatsRegistry.deregister(
             graft.plans.StarStatsRegistry.qualify(s, s"$stage/$t/data"))
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        graft.Lake.read(child, s"$stage/customer/data")
+        graft.Lake.read(s, s"$stage/customer/data")
           .createOrReplaceTempView("customer_zm")
-        graft.Lake.read(child, s"$stage/supplier/data")
+        graft.Lake.read(s, s"$stage/supplier/data")
           .createOrReplaceTempView("supplier_zm")
-        val df = child.sql(
+        val df = s.sql(
           """SELECT c_custkey, COUNT(s_suppkey) AS n_match,
             |  CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
             |FROM customer_zm LEFT JOIN supplier_zm
@@ -512,13 +500,11 @@ object Relational {
     "q93_or_join_filtered_pick" -> Q(
       (s, dir) => {
         val stage = orjStatsStage(s, dir)
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        graft.Lake.read(child, s"$stage/customer/data")
+        graft.Lake.read(s, s"$stage/customer/data")
           .createOrReplaceTempView("customer_zm")
-        graft.Lake.read(child, s"$stage/supplier/data")
+        graft.Lake.read(s, s"$stage/supplier/data")
           .createOrReplaceTempView("supplier_zm")
-        val df = child.sql(
+        val df = s.sql(
           """SELECT c_custkey, COUNT(s_suppkey) AS n_match,
             |  CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
             |FROM customer_zm LEFT JOIN supplier_zm
@@ -554,10 +540,8 @@ object Relational {
     // no Union in the EXECUTED plan).
     "q94_or_join_right_agg" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT s_suppkey, COUNT(c_custkey) AS n_match,
             |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal,
             |  MIN(c_name) AS first_cust
@@ -598,10 +582,8 @@ object Relational {
     // hash compare is exact at every SF. Plan shape hash-gated as q82.
     "q88_or_join_decimal_avg" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, COUNT(s_suppkey) AS n_match,
             |  CAST(AVG(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE)
             |    AS avg_bal
@@ -658,10 +640,8 @@ object Relational {
     // Plan gate: no BNLJ AND the branch Union present.
     "q89_or_join_inner" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, COUNT(*) AS n_match,
             |  MIN(s_name || '/' || c_name) AS pair_tag
             |FROM customer JOIN supplier
@@ -695,10 +675,8 @@ object Relational {
     // shape hash-gated: no BNLJ AND no Union.
     "q90_or_join_inner_agg" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, COUNT(*) AS n_pairs,
             |  COUNT(s_suppkey) AS n_match,
             |  CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
@@ -738,10 +716,8 @@ object Relational {
     // asserts the branch Union IS present and no BNLJ remains.
     "q91_or_join_full" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT COALESCE(c_nationkey, -1) AS nat_grp, COUNT(*) AS n_rows,
             |  SUM(CASE WHEN s_suppkey IS NULL THEN 1 ELSE 0 END)
             |    AS left_only,
@@ -782,10 +758,8 @@ object Relational {
     // for the family, this gates the mirror's correctness tri-scale.
     "q92_or_join_right" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT s_suppkey, COUNT(*) AS n_rows,
             |  SUM(CASE WHEN c_custkey IS NULL THEN 1 ELSE 0 END)
             |    AS unmatched,
@@ -826,10 +800,8 @@ object Relational {
     // the first timed semi-join family member.
     "q95_or_join_semi" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, c_name, c_mktsegment FROM customer
             |WHERE EXISTS (SELECT 1 FROM supplier
             |  WHERE c_acctbal = s_acctbal OR c_nationkey = s_nationkey)"""
@@ -858,10 +830,8 @@ object Relational {
     // levels run. Non-headline: q95 carries the family's bench cost.
     "q96_or_join_anti" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, c_name, c_acctbal FROM customer
             |WHERE NOT EXISTS (SELECT 1 FROM supplier
             |  WHERE c_acctbal = s_acctbal OR c_name = s_name)"""
@@ -895,10 +865,8 @@ object Relational {
     // scale. Plan gate: no BNLJ AND the branch Union present.
     "q97_or_join_q19" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, COUNT(*) AS n_pairs,
             |  MIN(s_name || '/' || c_name) AS pair_tag
             |FROM customer JOIN supplier
@@ -936,10 +904,8 @@ object Relational {
     // cost.
     "q98_or_join_distributed" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, c_name FROM customer
             |WHERE EXISTS (SELECT 1 FROM supplier
             |  WHERE (c_nationkey = s_nationkey OR c_name = s_name)
@@ -978,10 +944,8 @@ object Relational {
     // the plan). |L|-bounded output at every scale.
     "q99_not_in_null_aware" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.NullAwareAntiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, c_name FROM customer
             |WHERE (NULLIF(c_nationkey, 4), NULLIF(c_mktsegment, 'MACHINERY'))
             |  NOT IN (SELECT NULLIF(s_nationkey, 9), 'BUILDING' FROM supplier)"""
@@ -1022,16 +986,12 @@ object Relational {
     // instead of materializing the pair multiset through the bare
     // union. Plan gate: the IE term aliases present AND no BNLJ
     // remains (the bare-join rewrite carries no `__orj_` aliases at
-    // all, so the alias probe alone separates the two forms; since
-    // round 20 the eager plan merges its terms through a slotted Union
-    // + one aggregate, so Union ABSENCE no longer distinguishes them).
+    // all, so the alias probe alone separates the two forms).
     // |keys|-bounded pre-aggregations, |L|-bounded output.
     "q100_q19_eager_agg" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, COUNT(s_suppkey) AS n_match,
             |  CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
             |FROM customer JOIN supplier
@@ -1065,10 +1025,8 @@ object Relational {
     // aggregates). Non-headline: q100 carries the family's bench cost.
     "q101_residual_eager_agg" -> Q(
       (s, dir) => {
-        val child = s.newSession()
-        child.conf.set(graft.plans.OrEquiJoinRule.ConfKey, "true")
-        Lake(child, dir).registerViews()
-        val df = child.sql(
+        Lake(s, dir).registerViews()
+        val df = s.sql(
           """SELECT c_custkey, COUNT(s_suppkey) AS n_match,
             |  MIN(s_name) AS first_sup
             |FROM customer LEFT JOIN supplier

@@ -1747,4 +1747,111 @@ class OrEquiJoinRuleSpec extends AnyFunSuite {
     assert(typedPlan.contains("ObjectHashAggregate"), typedPlan)
     assert(stock.queryExecution.executedPlan.toString.contains("SortAggregate"))
   }
+
+  // ---- fused terms: every pre-aggregating form reads each input once ----
+
+  test("fused IE and min/max forms: one scan of each input, one Join, no Union") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, Union}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val lk = Lake(spark, sf0001)
+    val name = col("c_name") === col("s_name")
+    val bal = col("c_acctbal") === col("s_acctbal")
+    val nat = col("c_nationkey") === col("s_nationkey")
+    val counting = Seq(count(col("s_suppkey")).as("n"),
+      sum(col("s_acctbal")).as("s"), min(col("s_name")).as("mn"))
+    val minMax = Seq(min(col("s_name")).as("mn"), max(col("s_acctbal")).as("mx"))
+    for ((form, preds, aggs) <- Seq(
+        ("IE n=2", Seq(name, nat), counting),
+        ("IE n=3", Seq(name, bal, nat), counting),
+        ("min/max n=3", Seq(name, bal, nat), minMax))) {
+      def q() = lk.customer.join(lk.supplier, preds.reduce(_ || _), "left")
+        .groupBy("c_custkey").agg(aggs.head, aggs.tail: _*)
+      val expected = withRule(on = false) { canon(q()) }
+      withRule(on = true) {
+        val df = q()
+        val opt = df.queryExecution.optimizedPlan
+        assert(opt.toString.contains("__orj_t0_"), s"$form must fire\n$opt")
+        val scans = opt.collectLeaves().collect {
+          case lr: LogicalRelation => lr.relation match {
+            case fs: HadoopFsRelation => fs.location.rootPaths.mkString(",")
+          }
+        }
+        assert(scans.size === 2 && scans.distinct.size === 2,
+          s"$form: one scan of each input\n$opt")
+        assert(opt.collect { case j: Join => j }.size === 1, s"$form\n$opt")
+        assert(opt.collect { case u: Union => u }.isEmpty, s"$form\n$opt")
+        assert(canon(df) === expected, form)
+      }
+    }
+  }
+
+  test("fused form degenerate fixtures: rule-on ≡ rule-off") {
+    import spark.implicits._
+    // localCheckpoint keeps the optimizer from folding filters into the
+    // local data (an empty right must stay empty at run time only, or
+    // the join is pruned before the rule sees it)
+    def fixture(df: org.apache.spark.sql.DataFrame) = df.localCheckpoint()
+    val left = fixture(Seq(
+      (Some(1L), Some(5L), Some("x"), Some(7L)),
+      (Some(1L), Some(6L), Some("y"), Some(8L)),
+      (Some(2L), Some(5L), Some("z"), None),
+      (None, Some(5L), Some("x"), Some(7L)),      // null group key
+      (None, None, None, None),
+      (Some(3L), Some(9L), Some("w"), Some(9L))   // matches nothing
+    ).toDF("g", "k1", "k2", "k3"))
+    val right = fixture(Seq(
+      (Some(5L), Some("x"), Some(7L), Some(100L)),
+      (Some(5L), Some("y"), Some(8L), Some(200L)),
+      (Some(6L), None, Some(7L), Some(300L)),
+      (None, Some("x"), None, Some(400L)),
+      (Some(5L), Some("x"), Some(8L), None)
+    ).toDF("r1", "r2", "r3", "v"))
+    val emptyRight = right.where(col("v") > 10000)
+    val nullK2Left = fixture(Seq(
+      (Some(1L), Some(5L), None: Option[String], Some(7L)),
+      (Some(2L), Some(6L), None, None),
+      (None, None, None, Some(8L))
+    ).toDF("g", "k1", "k2", "k3"))
+    // every right row under one k1 key
+    val hotRight = fixture(Seq(
+      (Some(5L), Some("x"), Some(7L), Some(100L)),
+      (Some(5L), Some("y"), Some(8L), Some(200L)),
+      (Some(5L), None, Some(7L), None),
+      (Some(5L), Some("x"), None, Some(400L))
+    ).toDF("r1", "r2", "r3", "v"))
+    val two = col("k1") === col("r1") || col("k2") === col("r2")
+    val three = two || col("k3") === col("r3")
+    // a composite-key disjunct with a right-only residual
+    val composite = (col("k1") === col("r1") && col("k2") === col("r2") &&
+      col("v") > 150) || col("k3") === col("r3")
+    val counting = Seq(count(col("v")).as("n"), sum(col("v")).as("s"),
+      avg(col("v")).as("a"), min(col("r2")).as("mn"))
+    val minMax = Seq(min(col("r2")).as("mn"), max(col("v")).as("mx"))
+    val pairs = Seq(count(lit(1)).as("np"), sum(col("v")).as("s"))
+    val cases = Seq(
+      ("empty right side", left, emptyRight, three, "left", counting),
+      ("empty right side, min/max", left, emptyRight, two, "left", minMax),
+      ("all-null left keys on one predicate", nullK2Left, right, three,
+        "left", counting),
+      ("composite key with a right-only residual", left, right, composite,
+        "left", counting),
+      ("one key holds every right row", left, hotRight, three, "left",
+        counting),
+      ("one key holds every right row, min/max", left, hotRight, three,
+        "left", minMax),
+      ("null group key", left, right, two, "left", minMax),
+      ("inner OR-join with count(*)", left, right, three, "inner", pairs),
+      ("inner OR-join with count(*), empty right", left, emptyRight, two,
+        "inner", pairs))
+    for ((label, l, r, cond, jt, aggs) <- cases) {
+      def q() = l.join(r, cond, jt).groupBy("g").agg(aggs.head, aggs.tail: _*)
+      val expected = withRule(on = false) { canon(q()) }
+      withRule(on = true) {
+        val df = q()
+        val opt = df.queryExecution.optimizedPlan.toString
+        assert(opt.contains("__orj_t0_"), s"$label: fused form must fire\n$opt")
+        assert(canon(df) === expected, label)
+      }
+    }
+  }
 }
