@@ -34,13 +34,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sfDir2 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR2", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench")
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the set — the isolation
     // lever for chasing one query's scaling ratio without paying for the
     // whole headline suite at every rep
@@ -213,7 +207,8 @@ object Bench {
         } finally in.close()
       } catch { case _: Throwable => (-1.0, 0.0) }
       // cpus_configured: the parallelism the run actually EXECUTES at —
-      // $SPARK_GRAFT_CPUS as wired into master(local[N]) — distinct from
+      // the session's default parallelism (GraftSession.local's cores on
+      // a local master) — distinct from
       // `cpus` (the machine's availableProcessors). VERDICT r19 item 2:
       // the low-core scaling probe read `cpus` (32 on an 8-core-
       // configured run) and flagged the round `suspect_cpus_ignored`;

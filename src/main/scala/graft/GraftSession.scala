@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
@@ -62,9 +63,9 @@ import org.apache.spark.sql.SparkSession
   *    own filesystems. Hadoop's filesystem cache does not key on
   *    `fs.file.impl`, so a JVM that created a plain `file://` filesystem
   *    before this session was built keeps using that one.
-  *  - shuffle partitions default low for local runs; a real cluster
-  *    deployment overrides via spark-submit conf (AQE coalescing makes the
-  *    initial number mostly a ceiling).
+  *  - Shuffle partitions: [[local]] sets them to the core count on a
+  *    local master and leaves them to the deployment under spark-submit
+  *    (AQE coalescing makes the initial number mostly a ceiling).
   */
 object GraftSession {
 
@@ -132,17 +133,28 @@ object GraftSession {
       classOf[graft.InProcessLocalFileSystem].getName)
     .config("spark.ui.enabled", "false")
 
-  /** Local session for tests/tools. Cores and shuffle partitions track the
-    * `SPARK_GRAFT_CPUS` harness contract. */
+  /** The session every graft main and the test suite run on: no other
+    * main or test builds one (SessionBuilderSpec guards it). If the
+    * launch conf already names a master (spark-submit's `--master`), that
+    * master runs and the deployment keeps its shuffle partitions.
+    * Otherwise the session runs on `local[cores]` with one shuffle
+    * partition per core, where cores is `SPARK_GRAFT_CPUS`, else the
+    * available processors. Log level is WARN. */
   def local(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName(appName)
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
+    val b = SparkSession.builder().appName(appName)
+    launchSettings(new SparkConf(), cores).foreach { case (k, v) => b.config(k, v) }
+    val s = configure(b).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** What [[local]] adds to the launch conf: nothing when it names a
+    * master, else a `local[cores]` master and `cores` shuffle partitions. */
+  private[graft] def launchSettings(launch: SparkConf, cores: Int): Seq[(String, String)] =
+    if (launch.contains("spark.master")) Nil
+    else Seq("spark.master" -> s"local[$cores]",
+      "spark.sql.shuffle.partitions" -> cores.toString)
+
+  private def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 }

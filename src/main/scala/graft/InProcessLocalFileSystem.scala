@@ -1,10 +1,12 @@
 package graft
 
-import java.io.FileNotFoundException
+import java.io.{FileNotFoundException, IOException}
 import java.nio.file.{FileSystems, Files, NoSuchFileException}
 import java.nio.file.attribute.{FileTime, GroupPrincipal, UserPrincipal}
-import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException, FileStatus,
+  LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** The engine's `file://` filesystem: Hadoop's checksummed local
   * filesystem over a raw one that starts no process per file. Without
@@ -14,7 +16,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * Here both go through the JDK's `unix` file-attribute view, in
   * process, and give the stock values (InProcessLocalFileSystemSpec).
   * Where the JDK has no `unix` view (Windows) every call is the stock
-  * one. Bound by [[GraftSession]] as `fs.file.impl`. */
+  * one. A create without overwrite is exclusive, as Hadoop's contract
+  * asks and the stock local one is not. Bound by [[GraftSession]] as
+  * `fs.file.impl`. */
 class InProcessLocalFileSystem
     extends LocalFileSystem(new InProcessLocalFileSystem.Raw)
 
@@ -51,6 +55,28 @@ object InProcessLocalFileSystem {
           a.get("group").asInstanceOf[GroupPrincipal].getName,
           new Path(file.getPath).makeQualified(getUri, getWorkingDirectory))
       }
+
+    // The stock create without overwrite checks that the file is absent
+    // and then opens it, so two racing creators both succeed: two writers
+    // of LakeMaintenance.writeSnapshotVersion then claimed one version
+    // and wrote into the same directory. Creating the file exclusively
+    // first makes the check and the creation one step. The checksummed
+    // filesystem creates its data files through this overload.
+    override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                        bufferSize: Int, replication: Short, blockSize: Long,
+                        progress: Progressable): FSDataOutputStream = {
+      if (!overwrite) {
+        val parent = f.getParent
+        if (parent != null && !mkdirs(parent))
+          throw new IOException(s"Mkdirs failed to create $parent")
+        try Files.createFile(pathToFile(f).toPath)
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            throw new FileAlreadyExistsException(s"File already exists: $f")
+        }
+      }
+      super.create(f, permission, true, bufferSize, replication, blockSize, progress)
+    }
 
     // a directory's entries already come through getFileStatus; the stock
     // status of a plain file would still read its permission through `ls`

@@ -4,17 +4,31 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare (`scripts/check.py`).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name,name,...]
+  * With a name list, only those queries are dumped and only their oracle
+  * SQL is written: the per-query dev loop, checked by `scripts/check.py`
+  * with `GRAFT_CHECK_ONLY` set to the same list. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length == 2 || args.length == 3,
+      "usage: Verify <sfDir> <outDir> [name,name,...]")
+    val names = args.lift(2).fold(SparkEntry.queries.keys.toSeq)(
+      _.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+    val spark = GraftSession.local("graft-verify")
+    dump(spark, args(0), args(1), names)
+    spark.stop()
+  }
+
+  /** Dump the declared queries `names` over `sfDir` into `outDir`, in
+    * name order; `spark` is left running. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           names: Seq[String]): Unit = {
+    val queries = SparkEntry.queries
+    val todo = names.distinct.sorted
+    val unknown = todo.filterNot(queries.contains)
+    require(unknown.isEmpty, s"undeclared queries: ${unknown.mkString(", ")}")
     new java.io.File(outDir).mkdirs()
     // Schema-contract tripwire (the r8→r9 lesson): a driver-side
     // testdata regeneration that re-types a column must fail LOUDLY by
@@ -37,9 +51,9 @@ object Verify {
     // the summary line + verify_failures.txt make any drop visible both
     // in captured stdout and as an artifact (the round-9 lesson, where a
     // testdata schema change cost 17 queries and nothing flagged it).
-    val failed = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val failed = todo.flatMap { name =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         None
       } catch { case e: Throwable =>
@@ -47,24 +61,24 @@ object Verify {
         Some(name)
       }
     }
-    println(s"""{"metric":"verify_summary","declared":${SparkEntry.queries.size},"dumped":${SparkEntry.queries.size - failed.size},"failed":${failed.size},"failed_names":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
+    println(s"""{"metric":"verify_summary","declared":${todo.size},"dumped":${todo.size - failed.size},"failed":${failed.size},"failed_names":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
     Files.writeString(Paths.get(s"$outDir/verify_failures.txt"),
       failed.mkString("", "\n", "\n"))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.filter { case (k, _) => todo.contains(k) }
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
+
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (<0x20) — a tab or CR in oracle SQL would otherwise make the
+    * compare's json.load fail and silently zero the correctness report. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

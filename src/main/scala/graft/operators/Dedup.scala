@@ -156,13 +156,11 @@ object Dedup {
   def minHashLshPairs(df: DataFrame, id: String, text: String,
                       shingleN: Int = 3, numHashes: Int = 32,
                       bands: Int = 8, threshold: Double = 0.7,
-                      family: MinHashFamily = XxMinHash): DataFrame = {
-    val sigs = minHashSignatures(df, id, text, shingleN, numHashes, family)
-      .localCheckpoint(eager = true)
-    val sh = Parallelism.ensure(df)
-      .select(col(id), shingleSet(col(text), shingleN).as("sh"))
-    lshPairsVerify(sigs, sh, id, numHashes, bands, threshold)
-  }
+                      family: MinHashFamily = XxMinHash): DataFrame =
+    minHashLshPairsFromSignatures(df,
+      minHashSignatures(df, id, text, shingleN, numHashes, family)
+        .localCheckpoint(eager = true),
+      id, text, shingleN, numHashes, bands, threshold)
 
   /** Candidate+verify stages over PRE-COMPUTED signatures — the persist
     * escape hatch: `minHashSignatures(...).persist()` materializes the

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * The composable forms these replace — `aggregate(zip_with(...))` chains
   * over `array<float>` columns — are higher-order functions, which Spark
   * evaluates INTERPRETED (CodegenFallback): one lambda-variable eval per
-  * element per pass, with boxing. Profiled on the sf0.1 bench
-  * (tools.Profile qtime): s17's 3-round k-means fit spent ~19 s of task
+  * element per pass, with boxing. Profiled on the sf0.1 bench in round
+  * 19 (commit fd1e282): s17's 3-round k-means fit spent ~19 s of task
   * CPU on 2 000 rows — ~0.4 ms per nearest-centroid eval, k·dim lambda
   * steps each — and s18's 8 power-iteration rounds ~10 s. Each kernel
   * here is one tight loop over the raw array slots, whole-stage-codegen

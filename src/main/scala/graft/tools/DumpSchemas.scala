@@ -1,10 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object DumpSchemas {
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.configure(
-      SparkSession.builder().master("local[4]")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("graft-dump-schemas")
     val lake = graft.Lake(spark, "/root/testdata/sf0.01")
     for (n <- graft.Lake.tableNames) {
       val df = if (n == "events") lake.events else lake.table(n)

@@ -88,6 +88,36 @@ class InProcessLocalFileSystemSpec extends AnyFunSuite {
     intercept[java.io.FileNotFoundException](inProcess.listStatus(missing))
   }
 
+  test("create without overwrite: exactly one of two racing creators wins") {
+    val fs = new InProcessLocalFileSystem
+    fs.initialize(URI.create("file:///"), new Configuration())
+    val dir = Files.createTempDirectory("excl_create")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val winners = (1 to 200).map { i =>
+        val p = new Path(dir.resolve(s"f$i").toUri)
+        val barrier = new java.util.concurrent.CyclicBarrier(2)
+        val tries = (1 to 2).map(_ => pool.submit(new java.util.concurrent.Callable[Boolean] {
+          def call(): Boolean = {
+            barrier.await()
+            try { fs.create(p, false).close(); true }
+            catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+          }
+        }))
+        tries.count(_.get(30, java.util.concurrent.TimeUnit.SECONDS))
+      }
+      assert(winners.forall(_ == 1), s"rounds without exactly one winner: " +
+        winners.zipWithIndex.filter(_._1 != 1).map(_._2 + 1))
+    } finally pool.shutdownNow()
+    // overwrite still replaces; a missing parent is still created
+    val p = new Path(dir.resolve("a/b/c").toUri)
+    fs.create(p, false).close()
+    val out = fs.create(p, true)
+    try out.write(1) finally out.close()
+    assert(fs.getFileStatus(p).getLen === 1)
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException](fs.create(p, false))
+  }
+
   test("the recording sees a process start") {
     val starts = processStarts(new ProcessBuilder("true").start().waitFor())
     assert(starts.exists(_.contains("true")), starts)

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MainEnvKeysSpec extends AnyFunSuite {
 
   private val allowed = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SF_DIR2",
-    "SPARK_GRAFT_CPUS", "GRAFT_QTIME_JOBS")
+    "SPARK_GRAFT_CPUS")
   private def isAllowed(key: String): Boolean =
     allowed(key) || key.startsWith("SPARK_GRAFT_BENCH_")
 

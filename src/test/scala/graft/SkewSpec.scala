@@ -4,10 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Pins the engine's skew posture in the suite (tools.SkewBench measures
-  * the wall-clock side): with broadcast disabled and AQE skew thresholds
-  * scaled to fixture size, Spark must actually SPLIT the hot partition of
-  * a skewed sort-merge join — `isSkew` reads the final adaptive plan. */
+/** Pins the engine's skew posture in the suite (the wall-clock side was
+  * measured with the skew bench of commit 7f5eaff): with broadcast
+  * disabled and AQE skew thresholds scaled to fixture size, Spark must
+  * actually SPLIT the hot partition of a skewed sort-merge join —
+  * `isSkew` reads the final adaptive plan. */
 class SkewSpec extends AnyFunSuite {
   import TestSpark._
 

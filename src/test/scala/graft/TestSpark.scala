@@ -7,17 +7,11 @@ import org.apache.spark.sql.SparkSession
   * previous run's leftovers. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft_wh").toString))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    // SparkConf reads spark.* system properties: the one setting the suite
+    // adds to GraftSession.local
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    GraftSession.local("graft-test")
   }
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
