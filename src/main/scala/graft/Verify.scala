@@ -64,21 +64,15 @@ object Verify {
     println(s"""{"metric":"verify_summary","declared":${todo.size},"dumped":${todo.size - failed.size},"failed":${failed.size},"failed_names":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
     Files.writeString(Paths.get(s"$outDir/verify_failures.txt"),
       failed.mkString("", "\n", "\n"))
-    val json = SparkEntry.oracleSql.filter { case (k, _) => todo.contains(k) }
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql.filter { case (k, _) => todo.contains(k) }))
   }
 
-  /** JSON string literal: escapes backslash, quote and ALL control chars
-    * (<0x20) — a tab or CR in oracle SQL would otherwise make the
-    * compare's json.load fail and silently zero the correctness report. */
-  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** The oracle map as JSON. json4s escapes every control character — a
+    * tab or CR in oracle SQL must not make the compare's json.load fail
+    * and silently zero the correctness report. */
+  private[graft] def oracleJson(oracles: Map[String, String]): String = {
+    import org.json4s.JsonDSL._
+    org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(oracles))
+  }
 }

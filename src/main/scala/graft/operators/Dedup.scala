@@ -119,23 +119,8 @@ object Dedup {
         "native path wraps, breaking the advertised bit parity")
     val sigCol = graft.plans.MinHashSigExpr.sig(
       tokens(col(text)), shingleN, numHashes, family == Md5MinHash)
-    Parallelism.ensure(df)
-      .select(col(id), sigCol.as("__sig"))
-      .groupBy(col(id))
-      // null __sig = zero shingles. min/sum skip nulls, so null rows are
-      // inert inside a group, and an ALL-null group aggregates to null —
-      // dropped by the post-agg filter. Same rows as the aggregate form
-      // (which drops them by producing no postings), but WITHOUT a
-      // pre-agg `__sig IS NOT NULL` filter: predicate pushdown would
-      // duplicate the expression below the Project AND below the
-      // round-robin repartition, recomputing every signature on the
-      // scan's raw partitioning (measured 4.4 s vs 1.1 s cold at sf0.01).
-      .agg(
-        array((0 until numHashes).map(j =>
-          min(col("__sig").getField("signature").getItem(j))): _*)
-          .as("signature"),
-        sum(col("__sig").getField("n_shingles")).as("n_shingles"))
-      .where(col("n_shingles").isNotNull)
+    sigsFromBase(Parallelism.ensure(df).select(col(id), sigCol.as("__sig")),
+      id, numHashes)
   }
 
   /** LSH candidate pairs (idA < idB) from banded MinHash signatures, with
@@ -195,12 +180,20 @@ object Dedup {
       shingleSet(col(text), shingleN).as("sh"))
   }
 
-  /** Signature aggregation over a [[sigShingleBase]] frame — the groupBy
-    * tail of [[minHashSignatures]], reading only the struct column
-    * (columnar cache serves just those batches). */
+  /** Signature aggregation over an `(id, __sig)` frame — a
+    * [[sigShingleBase]] or [[minHashSignatures]]' projection — reading
+    * only the struct column (columnar cache serves just those batches). */
   private def sigsFromBase(base: DataFrame, id: String, numHashes: Int): DataFrame =
     base.select(col(id), col("__sig"))
       .groupBy(col(id))
+      // null __sig = zero shingles. min/sum skip nulls, so null rows are
+      // inert inside a group, and an ALL-null group aggregates to null —
+      // dropped by the post-agg filter. Same rows as the aggregate form
+      // (which drops them by producing no postings), but WITHOUT a
+      // pre-agg `__sig IS NOT NULL` filter: predicate pushdown would
+      // duplicate the expression below the Project AND below the
+      // round-robin repartition, recomputing every signature on the
+      // scan's raw partitioning (measured 4.4 s vs 1.1 s cold at sf0.01).
       .agg(
         array((0 until numHashes).map(j =>
           min(col("__sig").getField("signature").getItem(j))): _*)

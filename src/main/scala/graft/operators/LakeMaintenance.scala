@@ -187,136 +187,38 @@ object LakeMaintenance {
     overwritePartitions(merged, path, partitionCols)
   }
 
-  /** Manifest file whose PRESENCE is a version's commit marker (see
-    * [[writeSnapshotVersion]]). The leading underscore keeps Spark's
-    * parquet reader from treating it as data. */
-  private val ManifestName = "_graft_manifest.json"
-
   private def fsOf(spark: SparkSession, path: org.apache.hadoop.fs.Path) =
     path.getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Every `v=<n>` directory under `root`, committed or not, ascending.
-    * Version ALLOCATION must look at all of them — a crashed writer's
-    * partial directory still occupies its number and must never be
-    * written over. */
-  private def allVersionDirs(spark: SparkSession, root: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.drop(2).toLong }
-      .sorted
-  }
 
   /** COMMITTED versions under a versioned-snapshot root, ascending: a
     * `v=<n>` directory counts only once its manifest exists — a data
     * directory mid-write (or abandoned by a crashed writer) is invisible
-    * here and to every reader. Metadata-only: one directory listing plus
-    * one existence probe per version. */
+    * here and to every reader. */
   def snapshotVersions(spark: SparkSession, root: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = fsOf(spark, p)
-    allVersionDirs(spark, root).filter { v =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/v=$v/$ManifestName"))
-    }
+    val r = new org.apache.hadoop.fs.Path(root)
+    Generations.committed(fsOf(spark, r), r)
   }
 
   /** TIME-TRAVEL writes with an ATOMIC COMMIT: land `df` as the next
-    * immutable version under `root` (`root/v=<n>` — the Delta/Iceberg
-    * snapshot idea with plain-Parquet machinery).
-    *
-    * Commit protocol (the round-6 torn-directory hole closed; the
-    * round-10 allocation race closed with OPTIMISTIC CONCURRENCY):
-    *  1. allocate n = max over ALL `v=` directories + 1 — committed or
-    *     torn — so a partial directory is never written over;
-    *  2. CLAIM the version by atomically creating `v=<n>/_claim`
-    *     (create-fail-if-exists — the one primitive that serializes
-    *     writers): exactly one contender owns each version number; a
-    *     loser re-reads the directory listing and retries on the next
-    *     number, so concurrent writers land on DISTINCT consecutive
-    *     versions and none is lost or mixed;
-    *  3. write the data files into the claimed `v=<n>`; the directory
-    *     is INVISIBLE to [[snapshotVersions]]/[[readSnapshotVersion]]
-    *     because it has no manifest yet — a crash here leaves garbage
-    *     (a permanently-claimed torn dir vacuum clears), never a
-    *     readable-but-torn version;
-    *  4. list the files actually written and stage a manifest (name →
-    *     byte length) as a hidden temp file inside the directory;
-    *  5. PUBLISH with a single rename of the temp to `_graft_manifest
-    *     .json` — the one atomic step (rename atomicity is the same
-    *     primitive every file-listing-based table format leans on;
-    *     object stores without atomic rename or atomic create need
-    *     their usual metastore/log shim).
-    * Readers validate the manifest against the files on disk
-    * ([[readSnapshotVersion]]) and scan exactly the manifested files, so
-    * a reader can never serve a half-written version. Old versions are
-    * never rewritten; [[vacuumVersions]] retires superseded ones.
-    * Returns the version written. */
+    * immutable version under `root` through the [[Generations]]
+    * protocol — claim `v=<n>`, write the data files into it, publish a
+    * manifest of those files (path → byte length). Concurrent writers
+    * land on distinct versions; a crash before the publish leaves a torn
+    * directory no reader serves. Old versions are never rewritten;
+    * [[vacuumVersions]] retires superseded ones. Returns the version
+    * written. */
   def writeSnapshotVersion(df: DataFrame, root: String,
                            maxAttempts: Int = 20): Long = {
-    require(maxAttempts >= 1)
-    val spark = df.sparkSession
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val next = allVersionDirs(spark, root).lastOption.getOrElse(0L) + 1
-      val dirPath = new org.apache.hadoop.fs.Path(s"$root/v=$next")
-      fs.mkdirs(dirPath)
-      val claimed =
-        try { fs.create(new org.apache.hadoop.fs.Path(dirPath, "_claim"), false).close(); true }
-        catch { case _: java.io.IOException => false }
-      if (claimed) {
-        // append mode: the dir exists (it holds the claim marker) but
-        // the claim guarantees this writer is its only owner
-        df.write.mode(SaveMode.Append).parquet(dirPath.toString)
-        val files = fs.listStatus(dirPath).toSeq
-          .filter(f => f.isFile && isDataFile(f.getPath.getName))
-          .sortBy(_.getPath.getName)
-        val manifest = files
-          .map(f => "\"" + f.getPath.getName + "\":" + f.getLen)
-          .mkString(s"""{"version":$next,"files":{""", ",", "}}")
-        val tmp = new org.apache.hadoop.fs.Path(dirPath, s".$ManifestName.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(manifest.getBytes("UTF-8")) finally out.close()
-        val target = new org.apache.hadoop.fs.Path(dirPath, ManifestName)
-        if (!fs.rename(tmp, target))
-          throw new java.io.IOException(
-            s"snapshot commit of v=$next lost the publish rename: $target")
-        return next
-      }
-      if (attempt >= maxAttempts)
-        throw new java.io.IOException(
-          s"could not claim a snapshot version under $root after $maxAttempts attempts")
-      // lost the claim race: the winner's directory is now visible to
-      // allocation, so the retry lands on the next number
-    }
-    -1L // unreachable
-  }
-
-  /** Spark data files only — success markers, CRCs and staged manifests
-    * are not part of a version's content. */
-  private def isDataFile(name: String): Boolean =
-    !name.startsWith("_") && !name.startsWith(".")
-
-  /** Parse a version's manifest into (file name → byte length). */
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-                           dir: org.apache.hadoop.fs.Path): Map[String, Long] = {
-    val in = fs.open(new org.apache.hadoop.fs.Path(dir, ManifestName))
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    import org.json4s._
-    org.json4s.jackson.JsonMethods.parse(text) \ "files" match {
-      case JObject(fields) => fields.collect {
-        case (k, JInt(v))    => k -> v.toLong
-        case (k, JDouble(v)) => k -> v.toLong
-      }.toMap
-      case other => throw new java.io.IOException(
-        s"malformed snapshot manifest under $dir: $other")
-    }
+    import org.json4s.JsonDSL._
+    val r = new org.apache.hadoop.fs.Path(root)
+    val fs = fsOf(df.sparkSession, r)
+    val n = Generations.claim(fs, r, maxAttempts)
+    // append mode: the dir exists (it holds the claim marker) but the
+    // claim guarantees this writer is its only owner
+    df.write.mode(SaveMode.Append).parquet(Generations.dir(r, n).toString)
+    Generations.commit(fs, r, n, ("version" -> n) ~
+      ("files" -> Generations.filesJson(Generations.dataFiles(fs, r, n))))
+    n
   }
 
   /** Read a pinned snapshot version, or the latest when `version` is
@@ -328,51 +230,32 @@ object LakeMaintenance {
     * version, or a manifest/files mismatch. */
   def readSnapshotVersion(spark: SparkSession, root: String,
                           version: Long = -1L): DataFrame = {
-    val versions = snapshotVersions(spark, root)
+    val r = new org.apache.hadoop.fs.Path(root)
+    val fs = fsOf(spark, r)
+    val versions = Generations.committed(fs, r)
     require(versions.nonEmpty, s"no committed snapshot versions under $root")
     val v = if (version < 0) versions.last else version
     require(versions.contains(v), s"version $v not in $versions")
-    val dir = new org.apache.hadoop.fs.Path(s"$root/v=$v")
-    val fs = fsOf(spark, dir)
-    val manifest = readManifest(fs, dir)
-    val onDisk = fs.listStatus(dir).toSeq
-      .filter(f => f.isFile && isDataFile(f.getPath.getName))
-      .map(f => f.getPath.getName -> f.getLen).toMap
-    val broken = manifest.collect {
-      case (name, len) if !onDisk.get(name).contains(len) =>
-        s"$name (manifest $len bytes, on disk ${onDisk.get(name).fold("missing")(_.toString)})"
-    }
-    if (broken.nonEmpty)
-      throw new java.io.IOException(
-        s"snapshot v=$v under $root failed manifest validation: ${broken.mkString(", ")}")
-    spark.read.parquet(manifest.keys.toSeq.sorted.map(n => s"$root/v=$v/$n"): _*)
+    val files = Generations.filesOf(Generations.manifest(fs, r, v))
+    Generations.validate(fs, r, files, s"snapshot v=$v")
+    spark.read.parquet(files.keys.toSeq.sorted.map(f => s"$root/$f"): _*)
   }
 
   /** Retention for versioned snapshots: keep the newest `keepLast`
     * COMMITTED versions, delete every older committed one, and (when
-    * `includeAborted`) clear torn directories — `v=` dirs without a
-    * manifest whose number is below the newest committed version, which
-    * can only be crashed-writer leftovers because allocation is monotone
-    * over all existing directories. A torn dir ABOVE the newest commit
-    * is left alone: it may be a writer mid-flight. Returns the versions
-    * deleted, ascending. */
+    * `includeAborted`) clear torn directories below the newest committed
+    * version ([[Generations.vacuum]]). Returns the versions deleted,
+    * ascending. */
   def vacuumVersions(spark: SparkSession, root: String, keepLast: Int,
                      includeAborted: Boolean = true): Seq[Long] = {
-    require(keepLast >= 1, "keepLast must be >= 1")
-    val committed = snapshotVersions(spark, root)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = fsOf(spark, p)
-    val expired = committed.dropRight(keepLast)
-    val aborted =
-      if (includeAborted && committed.nonEmpty)
-        allVersionDirs(spark, root)
-          .filter(v => v < committed.last && !committed.contains(v))
-      else Seq.empty
-    val doomed = (expired ++ aborted).distinct.sorted
-    doomed.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/v=$v"), true)
+    val r = new org.apache.hadoop.fs.Path(root)
+    val fs = fsOf(spark, r)
+    if (includeAborted) Generations.vacuum(fs, r, keepLast)
+    else {
+      val committed = Generations.committed(fs, r).toSet
+      Generations.vacuum(fs, r, keepLast, pinned = v => !committed(v))
+        .filter(committed)
     }
-    doomed
   }
 
   /** Compaction PLAN over a file manifest: assigns each file to an output

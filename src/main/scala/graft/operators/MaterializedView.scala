@@ -273,48 +273,18 @@ object MaterializedView {
       }
     }
 
-  /** Next `gen-<n>` dir under the view root. */
-  private def nextGen(spark: SparkSession, mvPath: String): String = {
-    val root = new Path(mvPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val gens: Seq[Long] =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .collect { case s if s.startsWith("gen-") => s.drop(4).toLong }
-        .sorted
-    s"$mvPath/gen-${gens.lastOption.getOrElse(0L) + 1}"
-  }
-
-  /** The dataDir the on-disk `_mvdef.json` currently points at, if any —
-    * what a recovered process (or an already-optimized plan built from
-    * it) may still be reading. */
-  private def persistedDataDir(spark: SparkSession, mvPath: String): Option[String] = {
-    val p = new Path(s"$mvPath/_mvdef.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      import org.json4s._
-      org.json4s.jackson.JsonMethods.parse(text) \ "dataDir" match {
-        case JString(s) => Some(s)
-        case _ => None
-      }
-    }
-  }
-
-  /** Write `content` as a fresh generation, persist the definition as
-    * `_mvdef.json` (temp + atomic rename — [[load]]'s recovery record),
+  /** Write `content` as a fresh generation under the view root through
+    * the [[Generations]] protocol — claim `v=<n>`, write the data, commit
+    * a manifest holding the definition ([[load]]'s recovery record) —
     * register it (the pointer swap IS the in-process commit), then
-    * best-effort-vacuum every OTHER generation except the one the
-    * PREVIOUSLY-persisted `_mvdef.json` pointed at (plans optimized
-    * before this publish may still read it). Vacuuming by exclusion —
-    * not by numeric adjacency — means an orphan generation left by a
-    * crash between data write and definition rename can never shift
-    * the window onto the generation a recovered definition serves. */
+    * vacuum every generation except the newest two committed — this one
+    * and the previously persisted one, which plans optimized before this
+    * publish may still read — and the one the in-memory registration
+    * served until now, which can differ from both when a previous
+    * publish failed after its data write or another process republished
+    * concurrently. Vacuuming by exclusion means an orphan generation
+    * left by a crash between data write and commit can never shift the
+    * window onto the generation a recovered definition serves. */
   private def publish(spark: SparkSession, name: String, basePath: String,
                       groupCols: Seq[String], aggs: Seq[MvAgg],
                       mvPath: String, baseFp: String,
@@ -322,169 +292,111 @@ object MaterializedView {
                       groupExprs: Seq[MvGroupExpr],
                       joins: Seq[MvJoin], joinFps: Seq[String],
                       baseFiles: Seq[String]): MvDef = {
-    val priorDir = persistedDataDir(spark, mvPath)
-    // captured BEFORE catalog.put below swaps the pointer: the dir the
-    // in-memory registration serves right now, which can differ from
-    // the on-disk json's dir if a previous writeDefJson failed after
-    // its data write or another process republished concurrently
-    val registeredDir = catalog.get(name).map(_.dataDir)
-    val dataDir = nextGen(spark, mvPath)
-    content.write.mode("errorifexists").parquet(dataDir)
-    val rel = spark.read.parquet(dataDir).queryExecution.analyzed
-      .collectFirst { case lr: LogicalRelation => lr }
-      .getOrElse(throw new IllegalStateException(
-        s"materialized view at $dataDir did not analyze to a file relation"))
+    val root = new Path(mvPath)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    // captured BEFORE catalog.put below swaps the pointer; qualified, as
+    // a registered dir may be relative and the root absolute or not
+    val registered = catalog.get(name).map(d => fs.makeQualified(new Path(d.dataDir)))
+      .filter(_.getParent == fs.makeQualified(root))
+      .flatMap(p => Generations.number(p.getName))
+    val n = Generations.claim(fs, root)
+    val dataDir = Generations.dir(root, n).toString
+    content.write.mode("append").parquet(dataDir)
     val d = MvDef(name, basePath, groupCols, aggs, mvPath, dataDir, baseFp,
-      rel, lastBatchId, groupExprs,
+      relationOf(spark, dataDir), lastBatchId, groupExprs,
       resolveTemplates(spark, basePath, groupExprs), joins, joinFps,
       baseFiles)
-    writeDefJson(spark, d)
+    Generations.commit(fs, root, n, definitionJson(d))
     catalog.put(name, d)
-    val fs = new Path(mvPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // qualify both sides: registered dirs may be relative, listed ones
-    // are absolute — a naive compare would vacuum the LIVE generation
-    def qualifiedNorm(p: String): String =
-      normalizePath(fs.makeQualified(new Path(p)).toString)
-    // keep set = {new gen, on-disk _mvdef.json's gen, previously
-    // registered in-memory gen}. The third matters when a previous
-    // writeDefJson failed after its data write (or another process
-    // republished): the registered definition can point at a generation
-    // NEITHER of the first two name, and a live plan may still read it.
-    val keep = (Seq(dataDir) ++ priorDir ++ registeredDir)
-      .map(qualifiedNorm).toSet
-    fs.listStatus(new Path(mvPath)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
-      .map(_.getPath)
-      .filterNot(p => keep(qualifiedNorm(p.toString)))
-      .foreach(p => fs.delete(p, true))
+    Generations.vacuum(fs, root, keepLast = 2, pinned = registered.toSet)
     d
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private def writeDefJson(spark: SparkSession, d: MvDef): Unit = {
-    val aggsJson = d.aggs.map(a =>
-      s"""{"func":${jsonStr(a.func)},"inputCol":${jsonStr(a.inputCol)},""" +
-        s""""castTo":${a.castTo.map(jsonStr).getOrElse("null")},""" +
-        s""""lgK":${a.lgK.map(_.toString).getOrElse("null")},""" +
-        s""""outCol":${jsonStr(a.outCol)}}""").mkString("[", ",", "]")
-    val groupExprsJson = d.groupExprs.map(g =>
-      s"""{"name":${jsonStr(g.name)},"sql":${jsonStr(g.sql)}}""")
-      .mkString("[", ",", "]")
-    val joinsJson = d.joins.map(j =>
-      s"""{"rightPath":${jsonStr(j.rightPath)},""" +
-        s""""leftKeys":${j.leftKeys.map(jsonStr).mkString("[", ",", "]")},""" +
-        s""""rightKeys":${j.rightKeys.map(jsonStr).mkString("[", ",", "]")}}""")
-      .mkString("[", ",", "]")
-    val body =
-      s"""{"name":${jsonStr(d.name)},"basePath":${jsonStr(d.basePath)},""" +
-        s""""groupCols":${d.groupCols.map(jsonStr).mkString("[", ",", "]")},""" +
-        s""""groupExprs":$groupExprsJson,"joins":$joinsJson,""" +
-        s""""joinFingerprints":${d.joinFingerprints.map(jsonStr).mkString("[", ",", "]")},""" +
-        s""""aggs":$aggsJson,"dataDir":${jsonStr(d.dataDir)},""" +
-        s""""baseFingerprint":${jsonStr(d.baseFingerprint)},""" +
-        s""""baseFiles":${d.baseFiles.map(jsonStr).mkString("[", ",", "]")},""" +
-        s""""lastBatchId":${d.lastBatchId}}"""
-    val root = new Path(d.mvPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(root)
-    val tmp = new Path(root, "._mvdef.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    val target = new Path(root, "_mvdef.json")
-    fs.delete(target, false)
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"could not publish $target")
-  }
-
-  /** Re-register a view from its persisted `_mvdef.json` (a new JVM's
-    * recovery path — the in-memory catalog dies with the process, the
-    * definition and data do not). The stored dataDir must still exist;
-    * freshness is re-judged against the CURRENT base on every routing
-    * decision as usual, so a base that moved on while the process was
-    * down simply doesn't route until refresh/absorb. */
-  def load(spark: SparkSession, mvPath: String): MvDef = {
-    val p = new Path(s"$mvPath/_mvdef.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    import org.json4s._
-    val j = org.json4s.jackson.JsonMethods.parse(text)
-    def str(f: String): String = j \ f match {
-      case JString(s) => s
-      case other => throw new java.io.IOException(s"bad _mvdef.json $f: $other")
-    }
-    def strList(v: JValue): Seq[String] = v match {
-      case JArray(xs) => xs.collect { case JString(s) => s }
-      case _ => Nil
-    }
-    val groupCols = j \ "groupCols" match {
-      case JArray(xs) => xs.map { case JString(s) => s
-        case other => throw new java.io.IOException(s"bad groupCol: $other") }
-      case other => throw new java.io.IOException(s"bad groupCols: $other")
-    }
-    val aggs = j \ "aggs" match {
-      case JArray(xs) => xs.map { a =>
-        MvAgg(
-          a \ "func" match { case JString(s) => s; case _ => "?" },
-          a \ "inputCol" match { case JString(s) => s; case _ => "" },
-          a \ "castTo" match { case JString(s) => Some(s); case _ => None },
-          outCol = a \ "outCol" match { case JString(s) => s; case _ => "?" },
-          lgK = a \ "lgK" match { case JInt(v) => Some(v.toInt); case _ => None })
-      }
-      case other => throw new java.io.IOException(s"bad aggs: $other")
-    }
-    val lastBatchId = j \ "lastBatchId" match {
-      case JInt(v) => v.toLong
-      case _ => -1L
-    }
-    val groupExprs = j \ "groupExprs" match {
-      case JArray(xs) => xs.map { g =>
-        MvGroupExpr(
-          g \ "name" match { case JString(s) => s; case _ => "?" },
-          g \ "sql" match { case JString(s) => s; case _ => "?" })
-      }
-      case _ => Nil // pre-groupExprs definition records
-    }
-    def parseJoin(v: JValue): MvJoin = MvJoin(
-      v \ "rightPath" match { case JString(s) => s; case _ => "?" },
-      strList(v \ "leftKeys"),
-      strList(v \ "rightKeys"))
-    val joins = j \ "joins" match {
-      case JArray(xs) => xs.map(parseJoin)
-      case _ => j \ "join" match { // pre-chain single-join records
-        case o: JObject => Seq(parseJoin(o))
-        case _ => Nil
-      }
-    }
-    val joinFps = strList(j \ "joinFingerprints") match {
-      case Nil => j \ "rightFingerprint" match {
-        case JString(s) if s.nonEmpty => Seq(s)
-        case _ => Nil
-      }
-      case fps => fps
-    }
-    val baseFiles = strList(j \ "baseFiles")
-    val dataDir = str("dataDir")
-    val rel = spark.read.parquet(dataDir).queryExecution.analyzed
+  private def relationOf(spark: SparkSession, dataDir: String): LogicalRelation =
+    spark.read.parquet(dataDir).queryExecution.analyzed
       .collectFirst { case lr: LogicalRelation => lr }
       .getOrElse(throw new IllegalStateException(
         s"materialized view at $dataDir did not analyze to a file relation"))
-    val basePath = str("basePath")
-    val d = MvDef(str("name"), basePath, groupCols, aggs, mvPath,
-      dataDir, str("baseFingerprint"), rel, lastBatchId, groupExprs,
-      resolveTemplates(spark, basePath, groupExprs), joins, joinFps,
-      baseFiles)
+
+  private def definitionJson(d: MvDef): org.json4s.JObject = {
+    import org.json4s.JsonDSL._
+    ("name" -> d.name) ~ ("basePath" -> d.basePath) ~
+      ("groupCols" -> d.groupCols) ~
+      ("groupExprs" -> d.groupExprs.map(g => ("name" -> g.name) ~ ("sql" -> g.sql))) ~
+      ("joins" -> d.joins.map(j => ("rightPath" -> j.rightPath) ~
+        ("leftKeys" -> j.leftKeys) ~ ("rightKeys" -> j.rightKeys))) ~
+      ("joinFingerprints" -> d.joinFingerprints) ~
+      ("aggs" -> d.aggs.map(a => ("func" -> a.func) ~ ("inputCol" -> a.inputCol) ~
+        ("castTo" -> a.castTo) ~ ("lgK" -> a.lgK) ~ ("outCol" -> a.outCol))) ~
+      ("baseFingerprint" -> d.baseFingerprint) ~ ("baseFiles" -> d.baseFiles) ~
+      ("lastBatchId" -> d.lastBatchId)
+  }
+
+  /** Whether `mvPath` holds a committed view generation [[load]] can
+    * re-register. */
+  def persisted(spark: SparkSession, mvPath: String): Boolean = {
+    val root = new Path(mvPath)
+    Generations.committed(
+      root.getFileSystem(spark.sessionState.newHadoopConf()), root).nonEmpty
+  }
+
+  /** Re-register a view from its newest committed generation (a new
+    * JVM's recovery path — the in-memory catalog dies with the process,
+    * the definition and data do not). Freshness is re-judged against the
+    * CURRENT base on every routing decision as usual, so a base that
+    * moved on while the process was down simply doesn't route until
+    * refresh/absorb. */
+  def load(spark: SparkSession, mvPath: String): MvDef = {
+    import org.json4s._
+    val root = new Path(mvPath)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val n = Generations.committed(fs, root).lastOption.getOrElse(
+      throw new java.io.FileNotFoundException(
+        s"no committed materialized view under $mvPath"))
+    val j = Generations.manifest(fs, root, n)
+    def bad(what: String, v: JValue) =
+      throw new java.io.IOException(s"bad view definition under $mvPath: $what $v")
+    def str(v: JValue, what: String): String = v match {
+      case JString(s) => s
+      case other => bad(what, other)
+    }
+    def strs(v: JValue, what: String): Seq[String] = v match {
+      case JArray(xs) => xs.map(str(_, what))
+      case other => bad(what, other)
+    }
+    def objs(f: String): List[JValue] = j \ f match {
+      case JArray(xs) => xs
+      case other => bad(f, other)
+    }
+    def opt(v: JValue): Option[JValue] = v match {
+      case JNothing | JNull => None
+      case other => Some(other)
+    }
+    val aggs = objs("aggs").map { a =>
+      MvAgg(str(a \ "func", "func"), str(a \ "inputCol", "inputCol"),
+        opt(a \ "castTo").map(str(_, "castTo")),
+        outCol = str(a \ "outCol", "outCol"),
+        lgK = opt(a \ "lgK").map {
+          case JInt(v) => v.toInt
+          case other => bad("lgK", other)
+        })
+    }
+    val lastBatchId = j \ "lastBatchId" match {
+      case JInt(v) => v.toLong
+      case other => bad("lastBatchId", other)
+    }
+    val groupExprs = objs("groupExprs").map(g =>
+      MvGroupExpr(str(g \ "name", "name"), str(g \ "sql", "sql")))
+    val joins = objs("joins").map(v => MvJoin(str(v \ "rightPath", "rightPath"),
+      strs(v \ "leftKeys", "leftKeys"), strs(v \ "rightKeys", "rightKeys")))
+    val dataDir = Generations.dir(root, n).toString
+    val basePath = str(j \ "basePath", "basePath")
+    val d = MvDef(str(j \ "name", "name"), basePath,
+      strs(j \ "groupCols", "groupCols"), aggs, mvPath, dataDir,
+      str(j \ "baseFingerprint", "baseFingerprint"), relationOf(spark, dataDir),
+      lastBatchId, groupExprs, resolveTemplates(spark, basePath, groupExprs),
+      joins, strs(j \ "joinFingerprints", "joinFingerprints"),
+      strs(j \ "baseFiles", "baseFiles"))
     catalog.put(d.name, d)
     d
   }
@@ -493,7 +405,7 @@ object MaterializedView {
     * groupCols ++ agg outCols; the registered relation is re-read AFTER
     * the write so its file index sees exactly the persisted files.
     *
-    * Each create/refresh writes a FRESH `gen-<n>` dir under `mvPath`
+    * Each create/refresh writes a FRESH generation under `mvPath`
     * rather than overwriting in place — two lessons baked in:
     *  - self-route: the defining query is by construction EXACTLY the
     *    shape the rule rewrites, so recomputing an already-registered
@@ -508,10 +420,10 @@ object MaterializedView {
     *    generation's file list; in-place overwrite would break it at
     *    execution time. Generations make recreate publish-by-pointer —
     *    the catalog swaps to the new dir, existing plans keep reading
-    *    the old one (the snapshot-family protocol, minus the manifest:
-    *    this catalog is in-memory, so the pointer swap IS the commit).
-    * Other generations are vacuumed best-effort, keeping the one the
-    * previously-persisted definition pointed at. */
+    *    the old one (the [[Generations]] protocol; the catalog is
+    *    in-memory, so for this process the pointer swap IS the commit).
+    * Older generations are vacuumed, keeping the previously persisted
+    * one. */
   def create(spark: SparkSession, name: String, basePath: String,
              groupCols: Seq[String], aggs: Seq[MvAgg],
              mvPath: String, groupExprs: Seq[MvGroupExpr] = Nil,

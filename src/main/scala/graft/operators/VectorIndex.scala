@@ -11,26 +11,28 @@ import graft.functions.VectorFunctions.{cosine, cosineHof}
   * train-and-query (which re-trains per call — right for one-shot
   * analytics, wrong for a 100 TB corpus serving many query batches).
   *
-  * Layout under `dir` — GENERATIONAL, with an atomic commit marker (the
-  * snapshot family's `_manifest` protocol, applied to the index):
-  *   - `cells/g=<n>/bucket=<b>/…parquet` — cell data files; a build
-  *     writes a full generation, an append writes ONLY its delta files
-  *     under a fresh `g=` dir (existing files are never rewritten)
-  *   - `centroids/g=<n>/` — the centroid table each generation serves
-  *     (at most 2^planes rows)
-  *   - `_manifests/m=<n>.json` — generation n's commit marker: planes /
-  *     trained flag, its centroid dir, and the EXACT cell-file list
-  *     (path → byte length) that constitutes the generation.
+  * Layout under `dir` — GENERATIONAL, through the engine's one commit
+  * protocol ([[Generations]]):
+  *   - `v=<n>/bucket=<b>/…parquet` — cell data files; a build writes a
+  *     full generation, an append writes ONLY its delta files into a
+  *     fresh generation (existing files are never rewritten)
+  *   - `v=<n>/_centroids/` — the centroid table a generation serves (at
+  *     most 2^planes rows)
+  *   - `v=<n>/_graft_manifest.json` — generation n's commit: planes /
+  *     trained flag, the generation whose centroid table it serves, the
+  *     EXACT cell-file list (path → byte length) that constitutes it —
+  *     an append's list spans earlier generations' files — the last
+  *     absorbed batch id and the frames' schemas.
   *
-  * A generation exists only once its manifest does, and the manifest
-  * lands via write-temp + one atomic rename — so a writer dying at ANY
-  * earlier point (partial delta files, refreshed centroids, staged
-  * manifest) leaves the previous generation byte-identically servable:
-  * readers resolve the newest committed manifest and scan exactly its
-  * manifested files, never whatever else the directory holds. A RETRIED
-  * append allocates a fresh `g=` dir, so the crashed attempt's orphan
-  * files are never referenced (no duplicate rows — the batch-guard
-  * convention SnapshotStream follows); [[vacuum]] reclaims them.
+  * A generation exists only once its manifest does, so a writer dying
+  * at ANY earlier point (partial delta files, refreshed centroids,
+  * staged manifest) leaves the previous generation byte-identically
+  * servable: readers resolve the newest committed manifest and scan
+  * exactly its manifested files, never whatever else the directory
+  * holds. A RETRIED append claims a fresh generation, so the crashed
+  * attempt's orphan files are never referenced (no duplicate rows — the
+  * batch-guard convention SnapshotStream follows); [[vacuum]] reclaims
+  * them.
   *
   * The bucket partitioning is the scale design: `query` joins the cell
   * scan on `bucket` against a broadcast probe list, so Spark's dynamic
@@ -41,33 +43,15 @@ import graft.functions.VectorFunctions.{cosine, cosineHof}
   */
 object VectorIndex {
 
-  private val ManifestDir = "_manifests"
+  private val CentroidDir = "_centroids"
 
   private def fsOf(spark: SparkSession, path: Path): FileSystem =
     path.getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Committed generations under `dir`, ascending: one per manifest. */
+  /** Committed generations under `dir`, ascending. */
   def generations(spark: SparkSession, dir: String): Seq[Long] = {
-    val p = new Path(s"$dir/$ManifestDir")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("m=") && s.endsWith(".json") =>
-        s.stripPrefix("m=").stripSuffix(".json").toLong }
-      .sorted
-  }
-
-  /** Every generation NUMBER in use, committed or torn — allocation must
-    * never write over a crashed writer's partial `g=` directory. */
-  private def allGenNumbers(spark: SparkSession, dir: String): Seq[Long] = {
-    def gDirs(sub: String): Seq[Long] = {
-      val p = new Path(s"$dir/$sub")
-      val fs = fsOf(spark, p)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-        .collect { case s if s.startsWith("g=") => s.drop(2).toLong }
-    }
-    (generations(spark, dir) ++ gDirs("cells") ++ gDirs("centroids")).distinct.sorted
+    val root = new Path(dir)
+    Generations.committed(fsOf(spark, root), root)
   }
 
   /** One exchange keyed on (bucket, id-hash mod n) so the partitioned
@@ -80,19 +64,33 @@ object VectorIndex {
       pmod(xxhash64(col("neighbor_id")), lit(filesPerBucket)))
   }
 
+  private def claim(spark: SparkSession, dir: String): Long = {
+    val root = new Path(dir)
+    Generations.claim(fsOf(spark, root), root)
+  }
+
+  /** Cells partitioned by bucket into claimed generation `gen` (append
+    * mode: the directory already holds the claim). */
+  private def writeCells(cells: DataFrame, dir: String, gen: Long): Unit =
+    cells.write.mode("append").partitionBy("bucket")
+      .parquet(Generations.dir(new Path(dir), gen).toString)
+
+  private def genFiles(spark: SparkSession, dir: String, gen: Long): Map[String, Long] = {
+    val root = new Path(dir)
+    Generations.dataFiles(fsOf(spark, root), root, gen)
+  }
+
   /** `cellSchema`/`centroidSchema` are the DDL of the frames the writer
     * persisted (known statically at write time — recording them costs
     * nothing). Readers pass them to `spark.read.schema(...)`, so serving
     * never runs a footer-sampling schema-inference job (guide §6 — the
     * manifest is the source of truth, the Iceberg/Delta pattern; `Lake`'s
-    * fingerprint cache does the same for raw tables). Empty on manifests
-    * written before the field existed — readers then fall back to
-    * inference. */
+    * fingerprint cache does the same for raw tables). `centroidGen` is
+    * the generation holding the centroid table this one serves. */
   private case class Manifest(gen: Long, planes: Int, trained: Boolean,
-                              centroidDir: String, files: Map[String, Long],
-                              batchId: Long = -1L,
-                              cellSchema: String = "",
-                              centroidSchema: String = "")
+                              centroidGen: Long, files: Map[String, Long],
+                              batchId: Long, cellSchema: String,
+                              centroidSchema: String)
 
   /** DDL with every field relaxed to nullable — exactly the shape parquet
     * schema inference reports, so a manifest-schema read plans identically
@@ -100,84 +98,29 @@ object VectorIndex {
   private def nullableDDL(s: org.apache.spark.sql.types.StructType): String =
     graft.Lake.nullableDDL(s)
 
-  /** Data files only — success markers / CRCs / staged manifests are not
-    * part of a generation's content. */
-  private def isDataFile(name: String): Boolean =
-    !name.startsWith("_") && !name.startsWith(".")
-
-  /** Recursive (path-relative-to-dir → length) listing of one `g=` dir. */
-  private def listGenFiles(spark: SparkSession, dir: String,
-                           gen: Long): Map[String, Long] = {
-    val root = new Path(s"$dir/cells/g=$gen")
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) Map.empty
-    else {
-      val it = fs.listFiles(root, true)
-      val out = Map.newBuilder[String, Long]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile && isDataFile(f.getPath.getName)) {
-          val full = f.getPath.toUri.getPath
-          val rel = full.substring(full.indexOf("/cells/g=") + 1)
-          out += (rel -> f.getLen)
-        }
-      }
-      out.result()
-    }
-  }
-
-  private def writeManifest(spark: SparkSession, dir: String,
-                            m: Manifest): Unit = {
-    def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val body = m.files.toSeq.sorted
-      .map { case (p, len) => "\"" + p + "\":" + len }
-      .mkString(
-        s"""{"gen":${m.gen},"planes":${m.planes},"trained":${m.trained},""" +
-          s""""batchId":${m.batchId},""" +
-          s""""cellSchema":"${esc(m.cellSchema)}",""" +
-          s""""centroidSchema":"${esc(m.centroidSchema)}",""" +
-          s""""centroids":"${m.centroidDir}","files":{""", ",", "}}")
-    val mDir = new Path(s"$dir/$ManifestDir")
-    val fs = fsOf(spark, mDir)
-    fs.mkdirs(mDir)
-    val tmp = new Path(mDir, s".m=${m.gen}.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    val target = new Path(mDir, s"m=${m.gen}.json")
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(
-        s"index commit of g=${m.gen} lost the publish rename " +
-          s"(concurrent writer?): $target")
+  private def commit(spark: SparkSession, dir: String, m: Manifest): Unit = {
+    import org.json4s.JsonDSL._
+    val root = new Path(dir)
+    Generations.commit(fsOf(spark, root), root, m.gen,
+      ("planes" -> m.planes) ~ ("trained" -> m.trained) ~
+        ("centroids" -> m.centroidGen) ~ ("batchId" -> m.batchId) ~
+        ("cellSchema" -> m.cellSchema) ~ ("centroidSchema" -> m.centroidSchema) ~
+        ("files" -> Generations.filesJson(m.files)))
   }
 
   private def readManifest(spark: SparkSession, dir: String,
                            gen: Long): Manifest = {
-    val p = new Path(s"$dir/$ManifestDir/m=$gen.json")
-    val fs = fsOf(spark, p)
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
     import org.json4s._
-    val j = org.json4s.jackson.JsonMethods.parse(text)
-    val files = j \ "files" match {
-      case JObject(fields) => fields.collect {
-        case (k, JInt(v))    => k -> v.toLong
-        case (k, JDouble(v)) => k -> v.toLong
-      }.toMap
-      case other => throw new java.io.IOException(
-        s"malformed index manifest m=$gen under $dir: $other")
-    }
+    val root = new Path(dir)
+    val j = Generations.manifest(fsOf(spark, root), root, gen)
     def fail(field: String) = throw new java.io.IOException(
-      s"malformed index manifest m=$gen under $dir: bad $field")
-    val planes = j \ "planes" match { case JInt(v) => v.toInt; case _ => fail("planes") }
-    val trained = j \ "trained" match { case JBool(v) => v; case _ => fail("trained") }
-    val centroidDir = j \ "centroids" match { case JString(v) => v; case _ => fail("centroids") }
-    val batchId = j \ "batchId" match { case JInt(v) => v.toLong; case _ => -1L }
-    val cellSchema = j \ "cellSchema" match { case JString(v) => v; case _ => "" }
-    val centroidSchema = j \ "centroidSchema" match { case JString(v) => v; case _ => "" }
-    Manifest(gen, planes, trained, centroidDir, files, batchId,
-      cellSchema, centroidSchema)
+      s"malformed index manifest v=$gen under $dir: bad $field")
+    def long(field: String) = j \ field match { case JInt(v) => v.toLong; case _ => fail(field) }
+    def str(field: String) = j \ field match { case JString(v) => v; case _ => fail(field) }
+    Manifest(gen, long("planes").toInt,
+      j \ "trained" match { case JBool(v) => v; case _ => fail("trained") },
+      long("centroids"), Generations.filesOf(j), long("batchId"),
+      str("cellSchema"), str("centroidSchema"))
   }
 
   private def latestManifest(spark: SparkSession, dir: String,
@@ -200,46 +143,29 @@ object VectorIndex {
   def cells(spark: SparkSession, dir: String, gen: Long = -1L,
             validate: Boolean = true): DataFrame = {
     val m = latestManifest(spark, dir, gen)
-    if (validate) validateManifest(spark, dir, m)
+    if (validate) {
+      val root = new Path(dir)
+      Generations.validate(fsOf(spark, root), root, m.files, s"index v=${m.gen}")
+    }
     if (m.files.isEmpty)
       return spark.range(0).select(col("id").as("neighbor_id"),
         array().cast("array<float>").as("c_vec"), lit(0).as("bucket"))
-    val rd = spark.read.option("basePath", s"$dir/cells")
-    val rdS = if (m.cellSchema.nonEmpty)
-      rd.schema(org.apache.spark.sql.types.StructType.fromDDL(m.cellSchema))
-    else rd // pre-schema manifest: one-time inference, as before
-    rdS.parquet(m.files.keys.toSeq.sorted.map(f => s"$dir/$f"): _*)
+    spark.read.option("basePath", dir)
+      .schema(org.apache.spark.sql.types.StructType.fromDDL(m.cellSchema))
+      .parquet(m.files.keys.toSeq.sorted.map(f => s"$dir/$f"): _*)
       .select(col("neighbor_id"), col("c_vec"), col("bucket"))
   }
 
   /** A committed generation's centroid table `(bucket, centroid)`. */
   def centroids(spark: SparkSession, dir: String, gen: Long = -1L): DataFrame = {
     val m = latestManifest(spark, dir, gen)
-    val rd = spark.read
-    val rdS = if (m.centroidSchema.nonEmpty)
-      rd.schema(org.apache.spark.sql.types.StructType.fromDDL(m.centroidSchema))
-    else rd
-    rdS.parquet(s"$dir/${m.centroidDir}")
+    spark.read
+      .schema(org.apache.spark.sql.types.StructType.fromDDL(m.centroidSchema))
+      .parquet(centroidPath(dir, m.centroidGen))
   }
 
-  private def validateManifest(spark: SparkSession, dir: String,
-                               m: Manifest): Unit = {
-    val fs = fsOf(spark, new Path(dir))
-    val broken = m.files.collect {
-      case (rel, len) =>
-        val p = new Path(s"$dir/$rel")
-        if (!fs.exists(p)) Some(s"$rel (missing)")
-        else {
-          val got = fs.getFileStatus(p).getLen
-          if (got != len) Some(s"$rel (manifest $len bytes, on disk $got)")
-          else None
-        }
-    }.flatten
-    if (broken.nonEmpty)
-      throw new java.io.IOException(
-        s"index g=${m.gen} under $dir failed manifest validation: " +
-          broken.mkString(", "))
-  }
+  private def centroidPath(dir: String, gen: Long): String =
+    new Path(Generations.dir(new Path(dir), gen), CentroidDir).toString
 
   /** Train and persist the index as generation `lastGen + 1`. An
     * existing index stays SERVABLE throughout — the new generation
@@ -263,25 +189,22 @@ object VectorIndex {
             planes: Int = 4, kmeansIters: Int = 0, retain: Int = 2,
             filesPerBucket: Int = 1): Unit = {
     val spark = corpus.sparkSession
-    val gen = allGenNumbers(spark, dir).lastOption.getOrElse(0L) + 1
+    val gen = claim(spark, dir)
     val (cellRows, centroidRows) =
       Similarity.trainCells(corpus, idCol, vecCol, planes, kmeansIters)
     val cellOut = cellRows.select(col("neighbor_id"), col("c_vec"), col("bucket"))
-    bucketSized(cellOut, filesPerBucket)
-      .write.mode("errorifexists").partitionBy("bucket")
-      .parquet(s"$dir/cells/g=$gen")
-    centroidRows.write.mode("errorifexists").parquet(s"$dir/centroids/g=$gen")
-    writeManifest(spark, dir, Manifest(gen, planes, kmeansIters > 0,
-      s"centroids/g=$gen", listGenFiles(spark, dir, gen),
-      cellSchema = nullableDDL(cellOut.schema),
-      centroidSchema = nullableDDL(centroidRows.schema)))
+    writeCells(bucketSized(cellOut, filesPerBucket), dir, gen)
+    centroidRows.write.mode("errorifexists").parquet(centroidPath(dir, gen))
+    commit(spark, dir, Manifest(gen, planes, kmeansIters > 0, gen,
+      genFiles(spark, dir, gen), -1L, nullableDDL(cellOut.schema),
+      nullableDDL(centroidRows.schema)))
     if (retain > 0) vacuum(spark, dir, keepLast = retain)
   }
 
   /** Incremental index maintenance: route new vectors into the EXISTING
     * cells — the quantizer is not retrained, so the index absorbs a
     * delta batch at delta cost: assign + one partitioned delta write
-    * (only the batch's rows land, under a fresh `g=` dir) + a centroid
+    * (only the batch's rows land, in a fresh generation) + a centroid
     * refresh over the touched buckets' cells (bounded by their
     * occupancy, never the index size) + one manifest rename. Crash-safe
     * and retry-safe per the commit protocol above. LSH mode re-derives
@@ -302,7 +225,7 @@ object VectorIndex {
     val spark = newVecs.sparkSession
     val prev = latestManifest(spark, dir)
     if (batchId >= 0 && prev.batchId >= batchId) return // replay: already absorbed
-    val gen = allGenNumbers(spark, dir).lastOption.getOrElse(0L) + 1
+    val gen = claim(spark, dir)
     val v = newVecs.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
     val assigned =
       if (!prev.trained)
@@ -320,11 +243,10 @@ object VectorIndex {
             max_by(col("bucket"), struct(col("__sim"), -col("bucket")))
               .as("bucket"))
       }
-    bucketSized(assigned.select(col("neighbor_id"), col("c_vec"), col("bucket")),
-        filesPerBucket = 1)
-      .write.mode("errorifexists").partitionBy("bucket")
-      .parquet(s"$dir/cells/g=$gen")
-    val deltaFiles = listGenFiles(spark, dir, gen)
+    writeCells(bucketSized(
+      assigned.select(col("neighbor_id"), col("c_vec"), col("bucket")),
+      filesPerBucket = 1), dir, gen)
+    val deltaFiles = genFiles(spark, dir, gen)
     if (deltaFiles.isEmpty) return // empty batch: nothing to commit
     // Touched-bucket centroid refresh: recompute means from the merged
     // cells so probe ranking tracks what the buckets now hold. The
@@ -338,7 +260,7 @@ object VectorIndex {
     val mergedFiles = prev.files ++ deltaFiles
     val touchedPaths = mergedFiles.keys.toSeq.sorted
       .filter(p => touched.exists(b => p.contains(s"/bucket=$b/")))
-    val touchedCells = spark.read.option("basePath", s"$dir/cells")
+    val touchedCells = spark.read.option("basePath", dir)
       .parquet(touchedPaths.map(f => s"$dir/$f"): _*)
       .select(col("neighbor_id"), col("c_vec"), col("bucket"))
     val dim = touchedCells.select(size(col("c_vec"))).limit(1).collect()
@@ -348,16 +270,16 @@ object VectorIndex {
     val kept = centroids(spark, dir, prev.gen)
       .where(!col("bucket").isin(touched: _*))
     val centOut = kept.unionByName(fresh)
-    centOut.write.mode("errorifexists").parquet(s"$dir/centroids/g=$gen")
-    writeManifest(spark, dir, Manifest(gen, prev.planes, prev.trained,
-      s"centroids/g=$gen", mergedFiles, math.max(prev.batchId, batchId),
-      cellSchema = nullableDDL(
+    centOut.write.mode("errorifexists").parquet(centroidPath(dir, gen))
+    commit(spark, dir, Manifest(gen, prev.planes, prev.trained, gen,
+      mergedFiles, math.max(prev.batchId, batchId),
+      nullableDDL(
         assigned.select(col("neighbor_id"), col("c_vec"), col("bucket")).schema),
-      centroidSchema = nullableDDL(centOut.schema)))
+      nullableDDL(centOut.schema)))
   }
 
   /** Generation compaction: rewrite the CURRENT cell set as one fresh
-    * `g=` dir (one partitioned write, one file batch per bucket) and
+    * generation (one partitioned write, one file batch per bucket) and
     * republish — a data-layout no-op that collapses a long append
     * chain's small delta files, the index-side analog of
     * [[LakeMaintenance.compactSnapshotInPlace]]. A continuous ingest
@@ -370,62 +292,43 @@ object VectorIndex {
     * (spec-pinned). */
   def compact(spark: SparkSession, dir: String): Unit = {
     val prev = latestManifest(spark, dir)
-    val gen = allGenNumbers(spark, dir).lastOption.getOrElse(0L) + 1
+    val gen = claim(spark, dir)
     val current = cells(spark, dir, prev.gen)
     // one task per bucket -> each bucket dir collapses to one file
-    current.repartition(col("bucket"))
-      .write.mode("errorifexists").partitionBy("bucket")
-      .parquet(s"$dir/cells/g=$gen")
-    writeManifest(spark, dir, Manifest(gen, prev.planes, prev.trained,
-      prev.centroidDir, listGenFiles(spark, dir, gen), prev.batchId,
-      cellSchema = nullableDDL(current.schema),
-      centroidSchema = prev.centroidSchema))
+    writeCells(current.repartition(col("bucket")), dir, gen)
+    commit(spark, dir, Manifest(gen, prev.planes, prev.trained,
+      prev.centroidGen, genFiles(spark, dir, gen), prev.batchId,
+      nullableDDL(current.schema), prev.centroidSchema))
   }
 
-  /** Retention: keep the newest `keepLast` committed generations; delete
-    * older manifests, then every `cells/g=`/`centroids/g=` artifact no
-    * kept manifest references — which reclaims superseded centroid
-    * tables, compacted-away cell generations AND crashed-writer orphans
-    * (a `g=` dir below the newest commit with no manifest can only be a
-    * dead writer's leftovers; one ABOVE it may be a writer mid-flight
-    * and is left alone). Returns the deleted generation numbers. */
+  /** Retention: keep the newest `keepLast` committed generations and
+    * retire the rest through [[Generations.vacuum]], which also clears
+    * crashed-writer orphans below the newest commit. Cells and centroids
+    * are referenced independently: an append's manifest keeps earlier
+    * generations' CELL files but carries its OWN centroid table, and a
+    * compaction carries its predecessor's — so every generation a kept
+    * manifest references stays on disk, and a retired one keeps only the
+    * half (cells or centroid table) still referenced. Returns the retired
+    * generation numbers. */
   def vacuum(spark: SparkSession, dir: String, keepLast: Int = 1): Seq[Long] = {
     require(keepLast >= 1, "keepLast must be >= 1")
     val committed = generations(spark, dir)
-    if (committed.isEmpty) return Seq.empty
-    val keep = committed.takeRight(keepLast)
-    val kept = keep.map(readManifest(spark, dir, _))
-    // cells and centroids reference independently: an append's manifest
-    // keeps the OLD generations' cell files but carries its OWN
-    // centroid table, so the superseded centroid dirs free up even
-    // while those cell dirs stay live
-    val cellGens: Set[Long] = kept.flatMap(_.files.keys.flatMap(p =>
-      "cells/g=(\\d+)/".r.findFirstMatchIn(p).map(_.group(1).toLong))).toSet
-    val centroidGens: Set[Long] = kept.flatMap(m =>
-      "centroids/g=(\\d+)".r.findFirstMatchIn(m.centroidDir)
-        .map(_.group(1).toLong)).toSet
-    val fs = fsOf(spark, new Path(dir))
-    val dropped = committed.filterNot(keep.contains)
-    dropped.foreach { g =>
-      fs.delete(new Path(s"$dir/$ManifestDir/m=$g.json"), false)
+    val kept = committed.takeRight(keepLast).map(readManifest(spark, dir, _))
+    val cellGens = kept.flatMap(_.files.keys.flatMap(f =>
+      Generations.number(f.takeWhile(_ != '/')))).toSet
+    val centroidGens = kept.map(_.centroidGen).toSet
+    val root = new Path(dir)
+    val fs = fsOf(spark, root)
+    Generations.vacuum(fs, root, keepLast, cellGens ++ centroidGens)
+    val retired = committed.dropRight(keepLast)
+    for (g <- retired if cellGens(g) || centroidGens(g);
+         st <- fs.listStatus(Generations.dir(root, g))) {
+      val name = st.getPath.getName
+      if (if (name == CentroidDir) !centroidGens(g)
+          else name.startsWith("bucket=") && !cellGens(g))
+        fs.delete(st.getPath, true)
     }
-    // an unreferenced g-dir is safe to drop when it is not a possibly
-    // in-flight writer (strictly above the newest commit). Kept
-    // manifests can reference individual files inside an older g-dir —
-    // referenced dirs are skipped wholesale, so nothing kept can break.
-    def sweep(sub: String, referenced: Set[Long]): Unit = {
-      val p = new Path(s"$dir/$sub")
-      if (fs.exists(p)) fs.listStatus(p).toSeq
-        .filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith("g="))
-        .foreach { gp =>
-          val g = gp.getName.drop(2).toLong
-          if (!referenced.contains(g) && g < committed.last)
-            fs.delete(gp, true)
-        }
-    }
-    sweep("cells", cellGens); sweep("centroids", centroidGens)
-    dropped
+    retired
   }
 
   /** Top-k cosine neighbors for each query row, served from the newest

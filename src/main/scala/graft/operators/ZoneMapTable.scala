@@ -29,16 +29,16 @@ import scala.jdk.CollectionConverters._
   * see [[statsOf]]. */
 object ZoneMapTable {
 
-  // The manifest is CRASH-ATOMIC via the same generational commit the
-  // rest of the engine's persisted state uses: each manifest version
-  // lands under `_zonemap/g=<n>/` and becomes visible only when its
-  // `_committed` marker (atomic create, written LAST) exists. A torn
-  // manifest must never be readable — unlike torn DATA (a missing file
-  // fails the read loudly), a half-written manifest would silently
-  // SKIP files and serve a wrong answer. Readers resolve the newest
-  // committed generation; publish prunes superseded ones.
+  // The manifest is CRASH-ATOMIC via the engine's one commit protocol
+  // ([[Generations]]): each manifest version lands under
+  // `_zonemap/v=<n>/` and becomes visible only when its commit record
+  // (`_graft_manifest.json`: the table and manifest DDL and the last
+  // absorbed batch id) exists. A torn manifest must never be readable —
+  // unlike torn DATA (a missing file fails the read loudly), a
+  // half-written manifest would silently SKIP files and serve a wrong
+  // answer. Readers resolve the newest committed generation; publish
+  // vacuums superseded ones.
 
-  private val Marker = "_committed"
   private val StarStatsDir = "_starstats"
 
   /** lgK of the write-time key sketches: exact below 2^14 distinct keys
@@ -49,126 +49,78 @@ object ZoneMapTable {
   private def zfsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def manifestGens(spark: SparkSession, dir: String,
-                           committedOnly: Boolean): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(s"$dir/_zonemap")
+  private def manifestRoot(dir: String) = new org.apache.hadoop.fs.Path(s"$dir/_zonemap")
+
+  /** Whether `dir` holds a committed zone-mapped table — the "already
+    * built" probe of the build-once-if-absent query stages. */
+  def isBuilt(spark: SparkSession, dir: String): Boolean = {
+    val root = manifestRoot(dir)
+    Generations.committed(zfsOf(spark, root), root).nonEmpty
+  }
+
+  /** The newest committed manifest generation: its directory and its
+    * commit record. */
+  private def liveGen(spark: SparkSession, dir: String)
+      : Option[(org.apache.hadoop.fs.Path, org.json4s.JValue)] = {
+    val root = manifestRoot(dir)
     val fs = zfsOf(spark, root)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("g=") => s.drop(2).toLong }
-      .filter(g => !committedOnly || fs.exists(
-        new org.apache.hadoop.fs.Path(s"$dir/_zonemap/g=$g/$Marker")))
-      .sorted
+    Generations.committed(fs, root).lastOption.map(n =>
+      (Generations.dir(root, n), Generations.manifest(fs, root, n)))
+  }
+
+  /** [[liveGen]] for a read: a table without one (never written, or its
+    * first publish died) fails loudly rather than serving a torn
+    * manifest. */
+  private def live(spark: SparkSession, dir: String) =
+    liveGen(spark, dir).getOrElse(throw new java.io.FileNotFoundException(
+      s"no committed zone-map generation under $dir"))
+
+  private def ddlOf(commit: org.json4s.JValue, field: String) = commit \ field match {
+    case org.json4s.JString(ddl) => org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    case other => throw new java.io.IOException(
+      s"zone-map commit without a $field schema: $other")
   }
 
   /** The live manifest, one row per file — exposed for tests and
     * observability. */
-  def manifest(spark: SparkSession, dir: String): DataFrame =
-    readManifest(spark, dir)
-
-  /** Newest committed manifest (legacy flat `_zonemap` layouts read as
-    * a fallback when no committed generation exists). Reads with the
-    * generation's recorded manifest schema when the `_schemas.json`
-    * sidecar carries one — no footer-sampling inference job per pruned
-    * read (r20, guide §6); pre-sidecar generations still infer. */
-  private def readManifest(spark: SparkSession, dir: String): DataFrame =
-    manifestGens(spark, dir, committedOnly = true).lastOption match {
-      case Some(g) =>
-        val rd = spark.read
-        readSchemas(spark, dir, g).flatMap(_._2) match {
-          case Some(ddl) => rd.schema(
-            org.apache.spark.sql.types.StructType.fromDDL(ddl))
-              .parquet(s"$dir/_zonemap/g=$g")
-          case None => rd.parquet(s"$dir/_zonemap/g=$g")
-        }
-      case None    => spark.read.parquet(s"$dir/_zonemap")
-    }
-
-  /** Name of the per-generation schema sidecar (no '=' — Spark's file
-    * index treats `_x=y` names as data). */
-  private val SchemasSidecar = "_schemas.json"
-
-  /** The generation's recorded (tableDDL, manifestDDL) — either may be
-    * absent (pre-sidecar generation, or a publish without a table
-    * schema). Driver-side FS read, no Spark job. */
-  private def readSchemas(spark: SparkSession, dir: String,
-                          gen: Long): Option[(Option[String], Option[String])] = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$dir/_zonemap/g=$gen/$SchemasSidecar")
-    val fs = zfsOf(spark, p)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    import org.json4s._
-    val j = org.json4s.jackson.JsonMethods.parse(text)
-    def field(n: String): Option[String] = j \ n match {
-      case JString(v) if v.nonEmpty => Some(v)
-      case _ => None
-    }
-    Some((field("table"), field("manifest")))
+  def manifest(spark: SparkSession, dir: String): DataFrame = {
+    val (gen, commit) = live(spark, dir)
+    manifestOf(spark, gen, commit)
   }
 
-  /** The newest committed generation's recorded TABLE schema, when one
-    * was published — what [[prunedReadMulti]] hands to
-    * `spark.read.schema(...)` so survivor reads skip inference. */
-  private def tableSchemaOf(spark: SparkSession, dir: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    manifestGens(spark, dir, committedOnly = true).lastOption
-      .flatMap(g => readSchemas(spark, dir, g)).flatMap(_._1)
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
+  /** A generation's manifest, read with its recorded schema — no
+    * footer-sampling inference job per pruned read (r20, guide §6). */
+  private def manifestOf(spark: SparkSession, gen: org.apache.hadoop.fs.Path,
+                         commit: org.json4s.JValue): DataFrame =
+    spark.read.schema(ddlOf(commit, "manifest")).parquet(gen.toString)
 
-  /** Land a manifest as the next committed generation (allocation skips
-    * torn dirs), then prune every OTHER generation below it — derived
-    * state keeps no history; [[writeVersion]] is the time-travel form.
-    * `batchId >= 0` stamps the generation with the last absorbed ingest
-    * batch (a `_batch-<id>` sidecar, written BEFORE the commit marker so
-    * a committed generation always carries its stamp — the replay guard
-    * [[append]] and [[graft.streaming.ZoneMapStream]] read). */
+  /** Land a manifest as the next committed generation, then vacuum
+    * every other one — derived state keeps no history; [[writeVersion]]
+    * is the time-travel form. The commit records the table's and the
+    * manifest's DDL (relaxed to the all-nullable shape inference reports,
+    * so readers plan without inference jobs and identically) and
+    * `batchId`, the last absorbed ingest batch — the replay guard
+    * [[append]] and [[graft.streaming.ZoneMapStream]] read. */
   private def publishManifest(spark: SparkSession, dir: String,
                               manifest: DataFrame,
+                              tableSchema: org.apache.spark.sql.types.StructType,
                               batchId: Long = -1L,
-                              starStats: Option[DataFrame] = None,
-                              tableSchema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
-    // ONE generation listing serves both allocation and the
-    // post-publish prune — commit metadata round trips stay O(1) in
-    // table size and generation count (a concurrent writer's new dir
-    // simply survives until its own publish prunes)
-    val known = manifestGens(spark, dir, committedOnly = false)
-    val next = known.lastOption.getOrElse(0L) + 1
-    manifest.write.mode("errorifexists").parquet(s"$dir/_zonemap/g=$next")
-    // schema sidecar (r20, guide §6): record the manifest's and (when
-    // the writer has it) the table's DDL inside the generation dir,
-    // BEFORE the commit marker — crash-atomic with the manifest — so
-    // readers plan without schema-inference jobs. Relaxed to the
-    // all-nullable shape inference reports (identical downstream plans).
-    locally {
-      def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-      val body = "{" +
-        tableSchema.map(st =>
-          "\"table\":\"" + esc(graft.Lake.nullableDDL(st)) + "\",").getOrElse("") +
-        "\"manifest\":\"" + esc(graft.Lake.nullableDDL(manifest.schema)) + "\"}"
-      val sp = new org.apache.hadoop.fs.Path(
-        s"$dir/_zonemap/g=$next/$SchemasSidecar")
-      val out = zfsOf(spark, sp).create(sp, false)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
+                              starStats: Option[DataFrame] = None): Unit = {
+    import org.json4s.JsonDSL._
+    val root = manifestRoot(dir)
+    val fs = zfsOf(spark, root)
+    val n = Generations.claim(fs, root)
+    val gen = Generations.dir(root, n).toString
+    manifest.write.mode("append").parquet(gen)
     // write-time key sketches land INSIDE the generation dir, before the
-    // commit marker — crash-atomic with the zone manifest (the leading
+    // commit — crash-atomic with the zone manifest (the leading
     // underscore keeps the manifest's parquet read from seeing them)
-    starStats.foreach(_.write.mode("errorifexists")
-      .parquet(s"$dir/_zonemap/g=$next/$StarStatsDir"))
-    val fs = zfsOf(spark, new org.apache.hadoop.fs.Path(dir))
-    if (batchId >= 0)
-      fs.create(new org.apache.hadoop.fs.Path(
-        s"$dir/_zonemap/g=$next/_batch-$batchId"), false).close()
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/_zonemap/g=$next/$Marker")
-    fs.create(marker, false).close() // publish
-    known.filter(_ < next)
-      .foreach(g => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$dir/_zonemap/g=$g"), true))
+    starStats.foreach(_.write.mode("errorifexists").parquet(s"$gen/$StarStatsDir"))
+    Generations.commit(fs, root, n,
+      ("table" -> graft.Lake.nullableDDL(tableSchema)) ~
+        ("manifest" -> graft.Lake.nullableDDL(manifest.schema)) ~
+        ("batchId" -> batchId))
+    Generations.vacuum(fs, root, keepLast = 1)
   }
 
   // ---- write-time key sketches (transparent star ordering) ------------
@@ -190,8 +142,8 @@ object ZoneMapTable {
     * column: (col, n_rows, sketch). None when the table was written
     * without `sketchCols`. */
   def starStats(spark: SparkSession, dir: String): Option[DataFrame] =
-    manifestGens(spark, dir, committedOnly = true).lastOption.flatMap { g =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/_zonemap/g=$g/$StarStatsDir")
+    liveGen(spark, dir).flatMap { case (gen, _) =>
+      val p = new org.apache.hadoop.fs.Path(gen, StarStatsDir)
       // known fixed sidecar schema: skip the per-call 1-task schema-
       // inference job (the r19 Lake.read rationale; the lazy rule-side
       // loader already reads with this schema)
@@ -239,18 +191,10 @@ object ZoneMapTable {
   private[graft] def readStarStatsDriverSide(
       conf: org.apache.hadoop.conf.Configuration,
       tableRoot: String): Option[Seq[(String, Long, Array[Byte])]] = {
-    val zm = new org.apache.hadoop.fs.Path(s"$tableRoot/_zonemap")
-    val fs = zm.getFileSystem(conf)
-    if (!fs.exists(zm)) return None
-    val committed = fs.listStatus(zm).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("g=") => s.drop(2).toLong }
-      .filter(g => fs.exists(new org.apache.hadoop.fs.Path(
-        s"$tableRoot/_zonemap/g=$g/$Marker")))
-      .sorted
-    committed.lastOption.flatMap { g =>
-      val sd = new org.apache.hadoop.fs.Path(
-        s"$tableRoot/_zonemap/g=$g/$StarStatsDir")
+    val root = manifestRoot(tableRoot)
+    val fs = root.getFileSystem(conf)
+    Generations.committed(fs, root).lastOption.flatMap { n =>
+      val sd = new org.apache.hadoop.fs.Path(Generations.dir(root, n), StarStatsDir)
       if (!fs.exists(sd)) None
       else {
         val files = fs.listStatus(sd).toSeq.filter(f => f.isFile &&
@@ -300,13 +244,13 @@ object ZoneMapTable {
   /** Last ingest batch id the newest committed generation absorbed
     * (−1 when none recorded — e.g. a fresh [[write]]). */
   def lastBatchId(spark: SparkSession, dir: String): Long =
-    manifestGens(spark, dir, committedOnly = true).lastOption.map { g =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/_zonemap/g=$g")
-      val fs = zfsOf(spark, p)
-      fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .collect { case s if s.startsWith("_batch-") => s.drop(7).toLong }
-        .sorted.lastOption.getOrElse(-1L)
-    }.getOrElse(-1L)
+    liveGen(spark, dir).fold(-1L) { case (_, commit) =>
+      commit \ "batchId" match {
+        case org.json4s.JInt(id) => id.toLong
+        case other => throw new java.io.IOException(
+          s"zone-map commit under $dir without a batchId: $other")
+      }
+    }
 
   /** Cluster `df` by `clusterCol` into `files` files under `dir/data`
     * and persist the per-file min/max manifest for `statsCols`.
@@ -334,7 +278,7 @@ object ZoneMapTable {
         if (written.isEmpty) df.limit(0) else spark.read.parquet(written: _*),
         sketchCols))
     val star =
-      if (manifestGens(spark, dir, committedOnly = true).nonEmpty) {
+      if (isBuilt(spark, dir)) {
         val before = listDataFiles(spark, dir).map(fileName).toSet
         df.repartitionByRange(files, df.col(clusterCol))
           .sortWithinPartitions(clusterCol)
@@ -346,16 +290,14 @@ object ZoneMapTable {
         // before it must stay no-ops on replay (the rebuild's contents
         // already reflect them)
         publishManifest(spark, dir, statsOf(spark, fresh, statsCols, df.schema),
-          lastBatchId(spark, dir), st.map(starStatsDf(spark, _)),
-          tableSchema = Some(df.schema))
+          df.schema, lastBatchId(spark, dir), st.map(starStatsDf(spark, _)))
         st
       } else {
         LakeMaintenance.clusterBy(df, s"$dir/data", clusterCol, files)
         val all = listDataFiles(spark, dir)
         val st = starOf(all)
         publishManifest(spark, dir, statsOf(spark, all, statsCols, df.schema),
-          starStats = st.map(starStatsDf(spark, _)),
-          tableSchema = Some(df.schema))
+          df.schema, starStats = st.map(starStatsDf(spark, _)))
         st
       }
     star match {
@@ -682,11 +624,9 @@ object ZoneMapTable {
     // manifest (not a torn one) servable. The batch stamp carries the
     // MAX of old and new so batch (-1) and streaming appends interleave
     // without regressing the guard.
-    publishManifest(spark, dir,
-      readManifest(spark, dir).unionByName(freshStats),
-      math.max(lastAbsorbed, batchId),
-      mergedStar.map(starStatsDf(spark, _)),
-      tableSchema = Some(df.schema))
+    publishManifest(spark, dir, manifest(spark, dir).unionByName(freshStats),
+      df.schema, math.max(lastAbsorbed, batchId),
+      mergedStar.map(starStatsDf(spark, _)))
     mergedStar.foreach(registerStarStats(spark, dir, _))
   }
 
@@ -702,7 +642,7 @@ object ZoneMapTable {
     * [[VectorIndex.compact]]. */
   def compact(spark: SparkSession, dir: String, clusterCol: String,
               statsCols: Seq[String], targetFiles: Int): Unit = {
-    val kept = readManifest(spark, dir)
+    val kept = manifest(spark, dir)
       .select("file").collect().map(_.getString(0)).toSeq
     if (kept.isEmpty) return
     val current = spark.read.parquet(kept: _*)
@@ -715,13 +655,12 @@ object ZoneMapTable {
     // star stats carry forward VERBATIM: compaction is a data-layout
     // no-op, the key sets (and so the sketches) are unchanged
     publishManifest(spark, dir,
-      statsOf(spark, fresh, statsCols, current.schema),
+      statsOf(spark, fresh, statsCols, current.schema), current.schema,
       lastBatchId(spark, dir),
       starStats(spark, dir).map { prev =>
         starStatsDf(spark, prev.collect().map(r =>
           (r.getString(0), r.getLong(1), r.getAs[Array[Byte]](2))).toSeq)
-      },
-      tableSchema = Some(current.schema))
+      })
   }
 
   /** Reclaim every file under `data/` the newest committed manifest
@@ -731,7 +670,7 @@ object ZoneMapTable {
     * in the engine — schedule with a retention delay in production).
     * Returns the deleted file names. */
   def vacuumData(spark: SparkSession, dir: String): Seq[String] = {
-    val referenced = readManifest(spark, dir)
+    val referenced = manifest(spark, dir)
       .select("file").collect().map(r => fileName(r.getString(0))).toSet
     val fs = zfsOf(spark, new org.apache.hadoop.fs.Path(s"$dir/data"))
     listDataFiles(spark, dir)
@@ -775,9 +714,12 @@ object ZoneMapTable {
     * [[write]]'s secondary column — correct either way, selective only
     * where the layout gives the column locality). */
   def survivingFilesMulti(spark: SparkSession, dir: String,
-                          preds: Seq[(String, Column, Column)]): (Seq[String], Long) = {
+                          preds: Seq[(String, Column, Column)]): (Seq[String], Long) =
+    surviving(manifest(spark, dir), preds)
+
+  private def surviving(manifest: DataFrame,
+                        preds: Seq[(String, Column, Column)]): (Seq[String], Long) = {
     require(preds.nonEmpty, "give at least one (column, lo, hi) predicate")
-    val manifest = readManifest(spark, dir)
     val keep = preds.map { case (c, lo, hi) =>
       !(col(s"max_$c") < lo || col(s"min_$c") > hi)
     }.reduce(_ && _)
@@ -796,16 +738,13 @@ object ZoneMapTable {
     * predicates, then re-apply the exact conjunction. */
   def prunedReadMulti(spark: SparkSession, dir: String,
                       preds: Seq[(String, Column, Column)]): DataFrame = {
-    val (kept, _) = survivingFilesMulti(spark, dir, preds)
-    // read through the generation's recorded table schema when present —
-    // no inference job over the survivors; and the full-table frame
-    // exists only for the empty-survivor schema fallback (building it
-    // unconditionally ran an inference job over the whole data dir on
-    // EVERY pruned read — r20, guide §6)
-    val rd = tableSchemaOf(spark, dir) match {
-      case Some(st) => spark.read.schema(st)
-      case None     => spark.read
-    }
+    // one resolution of the live generation serves the manifest and the
+    // recorded table schema: no inference job over the survivors, and
+    // the full-table frame exists only for the empty-survivor fallback
+    // (r20, guide §6)
+    val (gen, commit) = live(spark, dir)
+    val (kept, _) = surviving(manifestOf(spark, gen, commit), preds)
+    val rd = spark.read.schema(ddlOf(commit, "table"))
     val base = if (kept.isEmpty) rd.parquet(s"$dir/data").limit(0)
                else rd.parquet(kept: _*)
     preds.foldLeft(base) { case (df, (c, lo, hi)) =>
@@ -824,49 +763,34 @@ object ZoneMapTable {
     val spark = df.sparkSession
     LakeMaintenance.zOrderBy(df, s"$dir/data", clusterCols, files)
     publishManifest(spark, dir,
-      statsOf(spark, listDataFiles(spark, dir), statsCols, df.schema),
-      tableSchema = Some(df.schema))
+      statsOf(spark, listDataFiles(spark, dir), statsCols, df.schema), df.schema)
   }
 
   // ---- versioned zone-mapped tables: time travel × data skipping ------
   // The composition the snapshot family and the zone maps were built
   // for: each committed version is an immutable clustered table WITH its
   // own per-file manifest, so a pinned historical read skips files
-  // exactly like the live one. Commit discipline matches the rest of
-  // the engine: `v=<n>/` is invisible until its `_zonemap_commit`
-  // marker lands (atomic create, written LAST, after data + manifest) —
-  // a writer dying mid-version leaves a torn dir no reader ever serves,
-  // and version allocation never reuses a torn number.
-
-  private val CommitMarker = "_zonemap_commit"
-
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def allVersionDirs(spark: SparkSession, root: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.drop(2).toLong }.sorted
-  }
+  // exactly like the live one. Versions are [[Generations]] under the
+  // root: `v=<n>/` is claimed first and invisible until its commit
+  // lands, after data + manifest — a writer dying mid-version leaves a
+  // torn dir no reader ever serves, and racing writers land distinct
+  // versions.
 
   /** Committed versions under `root`, ascending. */
-  def versions(spark: SparkSession, root: String): Seq[Long] =
-    allVersionDirs(spark, root).filter { v =>
-      fsOf(spark, new org.apache.hadoop.fs.Path(root)).exists(
-        new org.apache.hadoop.fs.Path(s"$root/v=$v/$CommitMarker"))
-    }
+  def versions(spark: SparkSession, root: String): Seq[Long] = {
+    val r = new org.apache.hadoop.fs.Path(root)
+    Generations.committed(zfsOf(spark, r), r)
+  }
 
   /** Land `df` as the next committed zone-mapped version. */
   def writeVersion(df: DataFrame, root: String, clusterCol: String,
                    statsCols: Seq[String], files: Int): Long = {
-    val spark = df.sparkSession
-    val next = allVersionDirs(spark, root).lastOption.getOrElse(0L) + 1
-    write(df, s"$root/v=$next", clusterCol, statsCols, files)
-    val marker = new org.apache.hadoop.fs.Path(s"$root/v=$next/$CommitMarker")
-    fsOf(spark, marker).create(marker, false).close() // publish
-    next
+    val r = new org.apache.hadoop.fs.Path(root)
+    val fs = zfsOf(df.sparkSession, r)
+    val n = Generations.claim(fs, r)
+    write(df, Generations.dir(r, n).toString, clusterCol, statsCols, files)
+    Generations.commit(fs, r, n, org.json4s.JObject())
+    n
   }
 
   /** Zone-map-pruned range read of a pinned version (latest when
@@ -878,6 +802,7 @@ object ZoneMapTable {
     require(vs.nonEmpty, s"no committed zone-mapped versions under $root")
     val v = if (version < 0) vs.last else version
     require(vs.contains(v), s"version $v not in $vs")
-    prunedRead(spark, s"$root/v=$v", statsCol, lo, hi)
+    prunedRead(spark, Generations.dir(new org.apache.hadoop.fs.Path(root), v).toString,
+      statsCol, lo, hi)
   }
 }

@@ -866,11 +866,7 @@ object EventsQueries {
         val base = s"$dir/events.parquet"
         val mvPath =
           s"target/mv/serve_by_type_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-        val hasDef = {
-          val p = new org.apache.hadoop.fs.Path(s"$mvPath/_mvdef.json")
-          p.getFileSystem(sess.sessionState.newHadoopConf()).exists(p)
-        }
-        if (hasDef) MaterializedView.load(sess, mvPath)
+        if (MaterializedView.persisted(sess, mvPath)) MaterializedView.load(sess, mvPath)
         else MaterializedView.create(sess, "serve_by_type", base,
           groupCols = Seq("event_type"),
           aggs = Seq(

@@ -487,9 +487,7 @@ object JoinQueries {
         import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin, LogicalPlan, Project => LProject}
         import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
         val stage = s"target/star_stage/q85_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-        val marker = new org.apache.hadoop.fs.Path(s"$stage/fact/_zonemap")
-        val fs = marker.getFileSystem(s.sessionState.newHadoopConf())
-        if (!fs.exists(marker)) {
+        if (!ZoneMapTable.isBuilt(s, s"$stage/fact")) {
           val lk = Lake(s, dir)
           ZoneMapTable.write(
             lk.lineitem.select(col("l_orderkey"), col("l_partkey"),

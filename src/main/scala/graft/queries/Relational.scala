@@ -39,9 +39,7 @@ object Relational {
   private def orjStatsStage(s: SparkSession, dir: String): String = {
     import graft.operators.ZoneMapTable
     val stage = s"target/star_stage/q87_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    val marker = new org.apache.hadoop.fs.Path(s"$stage/customer/_zonemap")
-    val fs = marker.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(marker)) {
+    if (!ZoneMapTable.isBuilt(s, s"$stage/customer")) {
       val lk = Lake(s, dir)
       ZoneMapTable.write(lk.customer, s"$stage/customer", "c_custkey",
         Seq("c_custkey"), 2,

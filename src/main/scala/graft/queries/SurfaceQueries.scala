@@ -981,9 +981,7 @@ object SurfaceQueries {
       (s, dir) => {
         import graft.operators.ZoneMapTable
         val stage = s"target/zm_stage/serve_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-        val zm = new org.apache.hadoop.fs.Path(s"$stage/_zonemap")
-        val fs = zm.getFileSystem(s.sessionState.newHadoopConf())
-        if (!fs.exists(zm))
+        if (!ZoneMapTable.isBuilt(s, stage))
           ZoneMapTable.write(Lake(s, dir).lineitem, stage,
             clusterCol = "l_orderkey", statsCols = Seq("l_orderkey"),
             files = 16)
@@ -1014,9 +1012,7 @@ object SurfaceQueries {
       (s, dir) => {
         import graft.operators.ZoneMapTable
         val stage = s"target/zm_stage/zorder_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-        val zm = new org.apache.hadoop.fs.Path(s"$stage/_zonemap")
-        val fs = zm.getFileSystem(s.sessionState.newHadoopConf())
-        if (!fs.exists(zm))
+        if (!ZoneMapTable.isBuilt(s, stage))
           ZoneMapTable.writeZOrdered(Lake(s, dir).lineitem, stage,
             Seq("l_orderkey", "l_partkey"),
             Seq("l_orderkey", "l_partkey"), files = 16)

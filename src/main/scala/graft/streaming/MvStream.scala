@@ -33,8 +33,8 @@ import graft.operators.MaterializedView
   * expected-set check keeps routing parked — with a detached feed, pair
   * the stream with periodic [[MaterializedView.refresh]] instead.
   *
-  * Exactly-once: the batch id persists with the definition
-  * (`_mvdef.json`, republished each absorb), so a crash-replayed batch
+  * Exactly-once: the batch id persists with the definition (each
+  * absorb commits a new generation carrying it), so a crash-replayed batch
   * is folded ONCE — absorb alone would double-count it. The view must
   * exist ([[MaterializedView.create]] over the base dir) before the
   * stream starts; a new JVM re-registers it with
@@ -47,7 +47,7 @@ object MvStream {
     * Scale note: each batch's input-file list rides through the driver
     * (the per-batch ledger diff), so size `maxFilesPerTrigger` to keep
     * per-batch file lists driver-friendly — the same bound the
-    * file-name ledger in `_mvdef.json` already implies for a plain
+    * file-name ledger in the view's definition already implies for a plain
     * parquet dir. A million-file base belongs behind a
     * snapshot-versioned manifest, where the delta IS the version diff. */
   def maintain(rows: DataFrame, name: String,

@@ -16,8 +16,8 @@ import graft.operators.ZoneMapTable
   * ingest, because readers resolve the newest COMMITTED manifest
   * generation.
   *
-  * Exactly-once: the batch id rides the manifest generation
-  * (`_batch-<id>` sidecar, committed with the generation), so a
+  * Exactly-once: the batch id rides the manifest generation (recorded
+  * in its commit), so a
   * crash-replayed batch is absorbed once — a batch that died mid-append
   * left only orphan data files no manifest references, and the replay
   * appends fresh ones. The table must exist ([[ZoneMapTable.write]])

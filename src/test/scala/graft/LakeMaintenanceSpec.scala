@@ -426,6 +426,82 @@ class LakeMaintenanceSpec extends AnyFunSuite {
       Seq("l_orderkey"), files = 1) === 4L)
   }
 
+  test("race law: racing zone-mapped writeVersion calls land distinct versions, each serving its own rows") {
+    import graft.operators.ZoneMapTable
+    val root = Files.createTempDirectory("zm_race").toString + "/t"
+    val li = Lake(spark, sf0001).lineitem.select("l_orderkey", "l_quantity")
+    def rowsOf(w: Int) = li.where(col("l_orderkey") % 2 === w - 1)
+      .withColumn("writer", lit(w.toLong))
+    // two writers released together from the same start state: each
+    // commit wins a DISTINCT version, none is lost, and each committed
+    // version serves exactly its own writer's rows
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    try {
+      val futures = (1 to 2).map { w =>
+        pool.submit(new java.util.concurrent.Callable[Long] {
+          def call(): Long = {
+            barrier.await()
+            ZoneMapTable.writeVersion(rowsOf(w), root, "l_orderkey",
+              Seq("l_orderkey"), files = 2)
+          }
+        })
+      }
+      val won = futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(won.toSet === Set(1L, 2L), s"versions shared or lost: $won")
+      assert(ZoneMapTable.versions(spark, root) === Seq(1L, 2L))
+      for ((v, i) <- won.zipWithIndex) {
+        val served = ZoneMapTable.prunedReadVersion(spark, root, "l_orderkey",
+          lit(0L), lit(Long.MaxValue), v)
+        assert(served.select("writer").distinct().collect().map(_.getLong(0)).toSet ===
+          Set((i + 1).toLong), s"version $v mixed writers")
+        assert(served.count() === rowsOf(i + 1).count(), s"version $v lost rows")
+      }
+    } finally pool.shutdown()
+  }
+
+  test("a torn first zone-map publish fails range reads with a named error") {
+    import graft.operators.ZoneMapTable
+    val dir = Files.createTempDirectory("zm_torn_first").toString + "/t"
+    val li = Lake(spark, sf0001).lineitem.select("l_orderkey", "l_quantity")
+      .limit(40)
+    ZoneMapTable.write(li, dir, "l_orderkey", Seq("l_orderkey"), files = 4)
+    // the crash: the first publish died after its claim and some stats
+    // parts — nothing it writes later (commit, sidecars) ever landed, and
+    // one stats part is missing too
+    val gen = new java.io.File(s"$dir/_zonemap").listFiles()
+      .filter(_.isDirectory).head
+    gen.listFiles().filter(f => f.isFile && f.getName != "_claim" &&
+      !f.getName.contains("part-")).foreach(_.delete())
+    val part = gen.listFiles().filter(_.getName.startsWith("part-")).head
+    assert(part.delete())
+    new java.io.File(gen, s".${part.getName}.crc").delete()
+    // a torn manifest would silently skip files: the read must refuse
+    val e = intercept[java.io.FileNotFoundException] {
+      ZoneMapTable.prunedRead(spark, dir, "l_orderkey", lit(0L),
+        lit(Long.MaxValue)).collect()
+    }
+    assert(e.getMessage.contains("no committed zone-map generation"))
+  }
+
+  test("zone maps whose stats columns hold tab and quote characters publish and read back") {
+    import graft.operators.ZoneMapTable
+    import spark.implicits._
+    val dir = Files.createTempDirectory("zm_json").toString + "/t"
+    val (k, q) = ("a\tb", "q\"x")
+    val df = (1 to 40).map(i => (i.toLong, f"v$i%02d")).toDF(k, q)
+    ZoneMapTable.write(df, dir, k, Seq(k, q), files = 4)
+    def canon(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toString).sorted.toSeq
+    assert(canon(ZoneMapTable.prunedRead(spark, dir, k, lit(10L), lit(20L))) ===
+      canon(df.where(col(k).between(10L, 20L))))
+    assert(canon(ZoneMapTable.prunedReadMulti(spark, dir,
+        Seq((k, lit(1L), lit(40L)), (q, lit("v05"), lit("v07"))))) ===
+      canon(df.where(col(q).between("v05", "v07"))))
+    assert(ZoneMapTable.manifest(spark, dir).columns.toSet
+      .contains("max_" + q))
+  }
+
   test("zone-map append maintains the manifest from the delta; append == rebuild") {
     import graft.operators.ZoneMapTable
     val li = Lake(spark, sf0001).lineitem
@@ -463,14 +539,14 @@ class LakeMaintenanceSpec extends AnyFunSuite {
       Seq("l_orderkey"), files = 4)
     assert(m(incDir) === m(fullDir))
     // a writer killed mid-manifest-publish is invisible: partial stats
-    // under an uncommitted g= dir must not shift any read (a torn
+    // under an uncommitted v= dir must not shift any read (a torn
     // manifest would silently SKIP files - the one failure mode worse
     // than an error)
     def mrows() = ZoneMapTable.manifest(spark, incDir)
       .collect().map(_.toString).sorted.toSeq
     val beforeTorn = mrows()
     ZoneMapTable.manifest(spark, incDir).limit(2)
-      .write.parquet(s"$incDir/_zonemap/g=99")
+      .write.parquet(s"$incDir/_zonemap/v=99")
     assert(mrows() === beforeTorn)
     assert(canon(ZoneMapTable.prunedRead(spark, incDir,
         "l_orderkey", lit(200L), lit(900L))) ===
@@ -478,7 +554,7 @@ class LakeMaintenanceSpec extends AnyFunSuite {
     // the next publish allocates past the torn dir and prunes it
     ZoneMapTable.append(li.limit(3), incDir, "l_orderkey",
       Seq("l_orderkey"), files = 1)
-    assert(!new java.io.File(s"$incDir/_zonemap/g=99").exists())
+    assert(!new java.io.File(s"$incDir/_zonemap/v=99").exists())
   }
 
   test("zone-map footer stats == scan stats; unsupported types fall back, reads stay exact") {

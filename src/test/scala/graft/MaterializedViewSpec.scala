@@ -25,6 +25,26 @@ class MaterializedViewSpec extends AnyFunSuite {
     p
   }
 
+  /** Generation directories under a view root, committed or torn. */
+  private def gensOf(mv: String): Set[String] =
+    new java.io.File(mv).listFiles().toSeq
+      .filter(f => f.isDirectory && f.getName.startsWith("v="))
+      .map(_.getName).toSet
+
+  /** The newest committed generation's manifest: the view's durable
+    * definition. */
+  private def newestCommit(mv: String): java.io.File =
+    gensOf(mv).toSeq.map(g => new java.io.File(s"$mv/$g/_graft_manifest.json"))
+      .filter(_.isFile).maxBy(_.getParentFile.getName.stripPrefix("v=").toLong)
+
+  /** A kill before the newest generation's commit landed: its manifest
+    * and the manifest's checksum sidecar are gone. */
+  private def uncommitNewest(mv: String): Unit = {
+    val m = newestCommit(mv)
+    assert(m.delete())
+    new java.io.File(m.getParentFile, s".${m.getName}.crc").delete()
+  }
+
   private def readsPath(df: DataFrame, path: String): Boolean =
     df.queryExecution.optimizedPlan.collectLeaves().exists {
       case lr: LogicalRelation => lr.relation match {
@@ -185,6 +205,8 @@ class MaterializedViewSpec extends AnyFunSuite {
     } finally MaterializedView.drop("mv_absorb")
   }
 
+  // The durable definition is the newest committed generation's manifest
+  // (`_graft_manifest.json`); `_mvdef.json` in the title is its former file.
   test("a view survives the process: load() re-registers from _mvdef.json") {
     val base = freshDir("durable/base"); val mv = freshDir("durable/mv")
     writeBase(base, rows)
@@ -1236,24 +1258,24 @@ class MaterializedViewSpec extends AnyFunSuite {
   test("vacuum keeps the generation the persisted definition points at") {
     val base = freshDir("vac/base"); val mv = freshDir("vac/mv")
     writeBase(base, rows)
-    define("mv_vac", base, mv) // gen-1, _mvdef -> gen-1
+    define("mv_vac", base, mv) // v=1, committed
     val gen1 = MaterializedView.get("mv_vac").get.dataDir
     try {
-      // orphan: a crashed writer's data directory with no definition
-      // rename — occupies gen-2 but nothing points at it
-      val orphan = new java.io.File(s"$mv/gen-2")
+      // orphan: a crashed writer's data directory with no commit —
+      // occupies v=2 but nothing points at it
+      val orphan = new java.io.File(s"$mv/v=2")
       orphan.mkdirs()
       new java.io.FileOutputStream(new java.io.File(orphan, "junk.bin"))
         .close()
-      MaterializedView.refresh(spark, "mv_vac") // publishes gen-3
+      MaterializedView.refresh(spark, "mv_vac") // publishes v=3
       val gen3 = MaterializedView.get("mv_vac").get.dataDir
       assert(gen3 != gen1)
-      // the orphan is vacuumed; gen-1 (what the pre-refresh _mvdef.json
-      // pointed at — and any plan optimized against it) survives
+      // the orphan is vacuumed; v=1 (the pre-refresh commit — and any
+      // plan optimized against it) survives
       assert(!orphan.exists(), "orphan generation must be vacuumed")
       assert(new java.io.File(gen1).exists(),
         "the previously-persisted generation must survive the vacuum")
-      // a second refresh retires gen-1 (the ledger now points past it)
+      // a second refresh retires v=1 (two newer commits exist)
       MaterializedView.refresh(spark, "mv_vac")
       assert(!new java.io.File(gen1).exists())
       assert(new java.io.File(gen3).exists())
@@ -1362,11 +1384,7 @@ class MaterializedViewSpec extends AnyFunSuite {
         MvAgg("hll_sketch", "o_user", outCol = "uhll", lgK = Some(12))),
       mvPath = mv,
       joins = Seq(MvJoin(dim, Seq("o_cust"), Seq("c_id"))))
-    val defJson = new java.io.File(mv, "_mvdef.json")
-    def gensOf(): Set[String] =
-      new java.io.File(mv).listFiles().toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
-        .map(_.getName).toSet
+    def gensOf(): Set[String] = MaterializedViewSpec.this.gensOf(mv)
     def appendFact(lo: Int, hi: Int): Unit =
       (lo until hi).map(i => (i.toLong, (i % 3) * 10L, (i % 91).toLong, (i % 10) / 2.0))
         .toDF("o_id", "o_cust", "o_user", "o_amt")
@@ -1418,7 +1436,7 @@ class MaterializedViewSpec extends AnyFunSuite {
       // ---- window A: checkpoint commit lost, absorb fully committed --
       appendFact(120, 160)
       runStream("A-initial")
-      val ledgerA = java.nio.file.Files.readAllBytes(defJson.toPath)
+      val ledgerA = java.nio.file.Files.readAllBytes(newestCommit(mv).toPath)
       val gensA = gensOf()
       val dataDirA = MaterializedView.get("mv_skchaos").get.dataDir
       val commits = new java.io.File(s"$ckpt/commits")
@@ -1432,17 +1450,15 @@ class MaterializedViewSpec extends AnyFunSuite {
       assert(MaterializedView.get("mv_skchaos").get.dataDir == dataDirA,
         "a replayed committed batch must not republish (hll never re-unioned)")
       assert(java.util.Arrays.equals(
-          java.nio.file.Files.readAllBytes(defJson.toPath), ledgerA),
+          java.nio.file.Files.readAllBytes(newestCommit(mv).toPath), ledgerA),
         "the ledger must be byte-identical after the replay no-op")
       checkServes()
 
       // ---- window B: kill INSIDE absorb (gen written, ledger old) ----
-      val ledgerB = java.nio.file.Files.readAllBytes(defJson.toPath)
       val gensB = gensOf()
       appendFact(160, 200)
       runStream("B-crashed") // the "crashed" run: absorb publishes + commits
-      java.nio.file.Files.write(defJson.toPath, ledgerB) // the kill:
-      new java.io.File(mv, "._mvdef.json.crc").delete()  // old ledger back
+      uncommitNewest(mv) // the kill: the absorb's commit never landed
       val commitsB = new java.io.File(s"$ckpt/commits")
       val lastB = commitsB.listFiles()
         .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
@@ -1471,8 +1487,8 @@ class MaterializedViewSpec extends AnyFunSuite {
 
   test("exactly-once chaos: a kill in either half of the commit window never double-counts") {
     // The streamed-maintenance commit sequence is: (1) write the new
-    // generation's parquet, (2) atomically rename _mvdef.json (the
-    // ledger commit, carrying lastBatchId), (3) the stream's checkpoint
+    // generation's parquet, (2) commit its manifest (the ledger: the
+    // definition, carrying lastBatchId), (3) the stream's checkpoint
     // commits the batch. A kill between (1) and (2) leaves an orphan
     // generation + the OLD ledger; a kill between (2) and (3) leaves
     // the NEW ledger but a checkpoint that will REPLAY the batch. The
@@ -1483,11 +1499,7 @@ class MaterializedViewSpec extends AnyFunSuite {
     def filesOf(): Seq[String] =
       new java.io.File(base).listFiles().toSeq
         .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
-    def gensOf(): Set[String] =
-      new java.io.File(mv).listFiles().toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
-        .map(_.getName).toSet
-    val defJson = new java.io.File(mv, "_mvdef.json")
+    def gensOf(): Set[String] = MaterializedViewSpec.this.gensOf(mv)
     try withRouting {
       // batch 0 commits cleanly
       val before0 = filesOf().toSet
@@ -1496,14 +1508,13 @@ class MaterializedViewSpec extends AnyFunSuite {
       val f0 = filesOf().filterNot(before0)
       MaterializedView.absorb(spark, "mv_chaos",
         spark.read.parquet(f0: _*), batchId = 0L, deltaFiles = Some(f0))
-      val committedLedger = java.nio.file.Files.readAllBytes(defJson.toPath)
       val committedGens = gensOf()
 
       // ---- leg 1: kill between generation write and ledger commit ----
-      // run the absorb, then restore the pre-absorb ledger: the disk
-      // now holds exactly what a kill after publish's parquet write but
-      // before writeDefJson leaves — an orphan generation, the old
-      // json, the old lastBatchId
+      // run the absorb, then take back its commit: the disk now holds
+      // exactly what a kill after publish's parquet write but before
+      // the commit leaves — an orphan generation, the old newest
+      // definition, the old lastBatchId
       val before1 = filesOf().toSet
       Seq(("d", 51L, 4.0)).toDF("k", "n", "v")
         .coalesce(1).write.mode("append").parquet(base)
@@ -1511,10 +1522,7 @@ class MaterializedViewSpec extends AnyFunSuite {
       def delta1 = spark.read.parquet(f1: _*)
       MaterializedView.absorb(spark, "mv_chaos", delta1,
         batchId = 1L, deltaFiles = Some(f1))
-      java.nio.file.Files.write(defJson.toPath, committedLedger) // the kill
-      // drop the checksum sidecar the raw restore invalidated (test
-      // plumbing only: a real kill never rewrites the json at all)
-      new java.io.File(mv, "._mvdef.json.crc").delete()
+      uncommitNewest(mv) // the kill
       val orphans = gensOf() -- committedGens
       assert(orphans.nonEmpty, "the crashed publish must leave its generation")
       MaterializedView.drop("mv_chaos") // the process dies

@@ -46,7 +46,7 @@ class VectorIndexSpec extends AnyFunSuite {
   }
 
   test("index layout: cells are bucket-partitioned, centroids bounded by 2^planes") {
-    val buckets = new java.io.File(s"$dir/cells/g=1").listFiles()
+    val buckets = new java.io.File(s"$dir/v=1").listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("bucket="))
     assert(buckets.length > 1, s"expected bucket partitions, got ${buckets.toSeq}")
     assert(VectorIndex.centroids(spark, dir).count() <= 16)
@@ -138,6 +138,32 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(n > 0)
   }
 
+  test("race law: racing builds land distinct generations, each serving its own corpus") {
+    val p = freshDir("vector_index_spec_race")
+    val halves = Seq(corpus.where(col("vec_id") % 2 === 0),
+      corpus.where(col("vec_id") % 2 === 1))
+    def ids(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(c).collect().map(_.getLong(0)).toSet
+    // retain = 0: vacuum reads a torn generation below the newest commit
+    // as a dead writer's, so a build that vacuums could clear its racing
+    // peer's generation mid-write; this pins claim and commit alone
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    try {
+      halves.map { h =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = {
+            barrier.await()
+            VectorIndex.build(h, p, "vec_id", "embedding", planes = 4, retain = 0)
+          }
+        })
+      }.foreach(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    assert(VectorIndex.generations(spark, p) === Seq(1L, 2L))
+    assert(Seq(1L, 2L).map(g => ids(VectorIndex.cells(spark, p, g), "neighbor_id")).toSet ===
+      halves.map(ids(_, "vec_id")).toSet, "a generation mixed or lost a writer's cells")
+  }
+
   test("a writer killed mid-append is invisible: query serves the pre-append index byte-identically") {
     val p = freshDir("vector_index_spec_torn")
     VectorIndex.build(corpus.where(col("vec_id") % 2 === 0), p,
@@ -149,24 +175,24 @@ class VectorIndexSpec extends AnyFunSuite {
     val cellsBefore = VectorIndex.cells(spark, p)
       .collect().map(_.toString).sorted.toSeq
     // simulate a writer dying after its DATA writes but before the
-    // manifest rename: delta cell files under a fresh g= dir, refreshed
-    // centroids, even a staged (hidden) manifest — everything an append
-    // does except the final commit
+    // manifest rename: delta cell files under a fresh generation,
+    // refreshed centroids, even a staged (hidden) manifest — everything
+    // an append does except the final commit
     corpus.where(col("vec_id") % 2 === 1)
       .select(col("vec_id").as("neighbor_id"),
         col("embedding").as("c_vec"),
         graft.functions.VectorFunctions.lshBucket(col("embedding"), 4)
           .as("bucket"))
-      .write.partitionBy("bucket").parquet(s"$p/cells/g=2")
+      .write.partitionBy("bucket").parquet(s"$p/v=2")
     VectorIndex.centroids(spark, p)
-      .write.parquet(s"$p/centroids/g=2")
+      .write.parquet(s"$p/v=2/_centroids")
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$p/_manifests/.m=2.json.tmp"),
+      java.nio.file.Paths.get(s"$p/v=2/._graft_manifest.json.tmp"),
       "{\"gen\":2}")
     // a stray orphan inside an EXISTING manifested bucket dir must be
     // ignored too (readers scan exactly the manifested files)
-    val bucketDir = new java.io.File(s"$p/cells/g=1").listFiles()
-      .filter(_.isDirectory).head
+    val bucketDir = new java.io.File(s"$p/v=1").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("bucket=")).head
     val donor = bucketDir.listFiles().filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.copy(donor.toPath,
       bucketDir.toPath.resolve("part-orphan-from-dead-writer.parquet"))
@@ -174,7 +200,8 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(VectorIndex.cells(spark, p)
       .collect().map(_.toString).sorted.toSeq === cellsBefore)
     assert(canon() === before)
-    // a RETRIED append then commits normally (fresh g=, no duplicates)
+    // a RETRIED append then commits normally (fresh generation, no
+    // duplicates)
     VectorIndex.append(corpus.where(col("vec_id") % 2 === 1), p,
       "vec_id", "embedding")
     val served = VectorIndex.cells(spark, p)
@@ -226,7 +253,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(canon() === before)
     // post-compaction the live generation holds ONE file batch per bucket
     val gen = VectorIndex.generations(spark, p).last
-    val bucketDirs = new java.io.File(s"$p/cells/g=$gen").listFiles()
+    val bucketDirs = new java.io.File(s"$p/v=$gen").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
     assert(bucketDirs.nonEmpty)
     for (b <- bucketDirs)
@@ -295,8 +322,8 @@ class VectorIndexSpec extends AnyFunSuite {
     // superseded cell dirs are physically gone (the recovered manifest
     // references only its own generation's files)
     for (g <- 1L to 4L)
-      assert(!new java.io.File(s"$p/cells/g=$g").exists(),
-        s"superseded cells/g=$g must be reclaimed")
+      assert(!new java.io.File(s"$p/v=$g").exists(),
+        s"superseded v=$g must be reclaimed")
     // the replay guard survives both compactions
     VectorIndex.append(batches(3), p, "vec_id", "embedding", batchId = 3L)
     assert(cellSet(p) === after3)
@@ -323,17 +350,18 @@ class VectorIndexSpec extends AnyFunSuite {
     VectorIndex.build(half1, p, "vec_id", "embedding", planes = 4, retain = 0)
     VectorIndex.append(half2, p, "vec_id", "embedding")
     // torn writer leftovers below the newest commit
-    VectorIndex.centroids(spark, p).write.parquet(s"$p/centroids/g=0")
+    VectorIndex.centroids(spark, p).write.parquet(s"$p/v=0/_centroids")
     val before = VectorIndex.query(spark, p, queries,
         "vec_id", "embedding", k = 5, nProbe = 16)
       .collect().map(_.toString).sorted.toSeq
     assert(VectorIndex.vacuum(spark, p, keepLast = 1) === Seq(1L))
     assert(VectorIndex.generations(spark, p) === Seq(2L))
     // superseded centroid table + orphan gone; manifested cells intact
-    assert(!new java.io.File(s"$p/centroids/g=1").exists())
-    assert(!new java.io.File(s"$p/centroids/g=0").exists())
-    // gen-2 (append) manifest still references gen-1 CELL files: kept
-    assert(new java.io.File(s"$p/cells/g=1").exists())
+    assert(!new java.io.File(s"$p/v=1/_centroids").exists())
+    assert(!new java.io.File(s"$p/v=0").exists())
+    // the v=2 (append) manifest still references v=1's CELL files: kept
+    assert(new java.io.File(s"$p/v=1").listFiles()
+      .exists(_.getName.startsWith("bucket=")))
     val after = VectorIndex.query(spark, p, queries,
         "vec_id", "embedding", k = 5, nProbe = 16)
       .collect().map(_.toString).sorted.toSeq
