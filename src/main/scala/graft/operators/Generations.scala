@@ -111,18 +111,22 @@ object Generations {
     try parse(in) finally in.close()
   }
 
-  /** Generation `n`'s data files, recursively: (path relative to `root`
-    * → byte length). Claims, manifests, success markers, CRCs and hidden
-    * subdirectories (`_x/…`) are not data. */
-  def dataFiles(fs: FileSystem, root: Path, n: Long): Map[String, Long] = {
-    val base = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
-    val it = fs.listFiles(dir(root, n), true)
+  /** Generation `n`'s data files, recursively, or those of its
+    * subdirectory `sub`: (path relative to `root` → byte length). Claims,
+    * manifests, success markers, CRCs and hidden subdirectories (`_x/…`)
+    * below the listed directory are not data. */
+  def dataFiles(fs: FileSystem, root: Path, n: Long, sub: String = ""): Map[String, Long] = {
+    def prefix(p: Path) = fs.makeQualified(p).toUri.getPath.stripSuffix("/") + "/"
+    val from = if (sub.isEmpty) dir(root, n) else new Path(dir(root, n), sub)
+    val (base, listed) = (prefix(root), prefix(from))
+    val it = fs.listFiles(from, true)
     val out = Map.newBuilder[String, Long]
     while (it.hasNext) {
       val f = it.next()
-      val rel = f.getPath.toUri.getPath.stripPrefix(base)
-      if (rel.split('/').forall(s => !s.startsWith("_") && !s.startsWith(".")))
-        out += rel -> f.getLen
+      val path = f.getPath.toUri.getPath
+      if (path.stripPrefix(listed).split('/')
+            .forall(s => !s.startsWith("_") && !s.startsWith(".")))
+        out += path.stripPrefix(base) -> f.getLen
     }
     out.result()
   }
@@ -131,11 +135,12 @@ object Generations {
   def filesJson(files: Map[String, Long]): JObject =
     JObject(files.toList.sorted.map { case (k, len) => k -> JInt(len) })
 
-  /** The file list a manifest's `files` field holds. */
-  def filesOf(manifest: JValue): Map[String, Long] = manifest \ "files" match {
-    case JObject(fields) => fields.collect { case (k, JInt(len)) => k -> len.toLong }.toMap
-    case other => throw new IOException(s"malformed manifest file list: $other")
-  }
+  /** The file list a manifest's `field` (by default `files`) holds. */
+  def filesOf(manifest: JValue, field: String = "files"): Map[String, Long] =
+    manifest \ field match {
+      case JObject(fields) => fields.collect { case (k, JInt(len)) => k -> len.toLong }.toMap
+      case other => throw new IOException(s"malformed manifest file list $field: $other")
+    }
 
   /** Refuse a manifested file list (paths relative to `root`) that the
     * disk no longer matches — a lost or truncated file must fail the read

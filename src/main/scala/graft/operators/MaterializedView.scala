@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.json4s.{JObject, JValue}
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 import scala.collection.concurrent.TrieMap
 
 /** Materialized-view registry + builder: the declarative end of the
@@ -318,26 +320,42 @@ object MaterializedView {
       .getOrElse(throw new IllegalStateException(
         s"materialized view at $dataDir did not analyze to a file relation"))
 
-  private def definitionJson(d: MvDef): org.json4s.JObject = {
+  /** What decides whether a committed generation answers a [[create]]:
+    * the definition and every input's fingerprint, as its manifest holds
+    * them. */
+  private def identityJson(name: String, basePath: String,
+                           groupCols: Seq[String], groupExprs: Seq[MvGroupExpr],
+                           joins: Seq[MvJoin], aggs: Seq[MvAgg],
+                           baseFp: String, joinFps: Seq[String]): JObject = {
     import org.json4s.JsonDSL._
-    ("name" -> d.name) ~ ("basePath" -> d.basePath) ~
-      ("groupCols" -> d.groupCols) ~
-      ("groupExprs" -> d.groupExprs.map(g => ("name" -> g.name) ~ ("sql" -> g.sql))) ~
-      ("joins" -> d.joins.map(j => ("rightPath" -> j.rightPath) ~
+    ("name" -> name) ~ ("basePath" -> basePath) ~
+      ("groupCols" -> groupCols) ~
+      ("groupExprs" -> groupExprs.map(g => ("name" -> g.name) ~ ("sql" -> g.sql))) ~
+      ("joins" -> joins.map(j => ("rightPath" -> j.rightPath) ~
         ("leftKeys" -> j.leftKeys) ~ ("rightKeys" -> j.rightKeys))) ~
-      ("joinFingerprints" -> d.joinFingerprints) ~
-      ("aggs" -> d.aggs.map(a => ("func" -> a.func) ~ ("inputCol" -> a.inputCol) ~
+      ("joinFingerprints" -> joinFps) ~
+      ("aggs" -> aggs.map(a => ("func" -> a.func) ~ ("inputCol" -> a.inputCol) ~
         ("castTo" -> a.castTo) ~ ("lgK" -> a.lgK) ~ ("outCol" -> a.outCol))) ~
-      ("baseFingerprint" -> d.baseFingerprint) ~ ("baseFiles" -> d.baseFiles) ~
-      ("lastBatchId" -> d.lastBatchId)
+      ("baseFingerprint" -> baseFp)
   }
 
-  /** Whether `mvPath` holds a committed view generation [[load]] can
-    * re-register. */
-  def persisted(spark: SparkSession, mvPath: String): Boolean = {
-    val root = new Path(mvPath)
-    Generations.committed(
-      root.getFileSystem(spark.sessionState.newHadoopConf()), root).nonEmpty
+  private def definitionJson(d: MvDef): JObject = {
+    import org.json4s.JsonDSL._
+    identityJson(d.name, d.basePath, d.groupCols, d.groupExprs, d.joins,
+      d.aggs, d.baseFingerprint, d.joinFingerprints) ~
+      ("baseFiles" -> d.baseFiles) ~ ("lastBatchId" -> d.lastBatchId)
+  }
+
+  /** `j` as a manifest holds it: rendering drops absent options. */
+  private def written(j: JObject): JValue = parse(compact(render(j)))
+
+  /** Whether manifest `have` records every field of identity `want`. */
+  private def answers(have: JValue, want: JObject): Boolean = {
+    import org.json4s._
+    written(want) match {
+      case JObject(fields) => fields.forall { case (k, v) => have \ k == v }
+      case _ => false
+    }
   }
 
   /** Re-register a view from its newest committed generation (a new
@@ -347,13 +365,19 @@ object MaterializedView {
     * moved on while the process was down simply doesn't route until
     * refresh/absorb. */
   def load(spark: SparkSession, mvPath: String): MvDef = {
-    import org.json4s._
     val root = new Path(mvPath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val n = Generations.committed(fs, root).lastOption.getOrElse(
       throw new java.io.FileNotFoundException(
         s"no committed materialized view under $mvPath"))
-    val j = Generations.manifest(fs, root, n)
+    register(spark, mvPath, n, Generations.manifest(fs, root, n))
+  }
+
+  /** Register committed generation `n` under `mvPath`, whose manifest is
+    * `j`. */
+  private def register(spark: SparkSession, mvPath: String, n: Long,
+                       j: JValue): MvDef = {
+    import org.json4s._
     def bad(what: String, v: JValue) =
       throw new java.io.IOException(s"bad view definition under $mvPath: $what $v")
     def str(v: JValue, what: String): String = v match {
@@ -389,7 +413,7 @@ object MaterializedView {
       MvGroupExpr(str(g \ "name", "name"), str(g \ "sql", "sql")))
     val joins = objs("joins").map(v => MvJoin(str(v \ "rightPath", "rightPath"),
       strs(v \ "leftKeys", "leftKeys"), strs(v \ "rightKeys", "rightKeys")))
-    val dataDir = Generations.dir(root, n).toString
+    val dataDir = Generations.dir(new Path(mvPath), n).toString
     val basePath = str(j \ "basePath", "basePath")
     val d = MvDef(str(j \ "name", "name"), basePath,
       strs(j \ "groupCols", "groupCols"), aggs, mvPath, dataDir,
@@ -401,12 +425,26 @@ object MaterializedView {
     d
   }
 
-  /** Compute, persist and register the view. The stored table holds
-    * groupCols ++ agg outCols; the registered relation is re-read AFTER
-    * the write so its file index sees exactly the persisted files.
+  /** Compute, persist and register the view, or reuse it when nothing
+    * has changed. The stored table holds groupCols ++ agg outCols; the
+    * registered relation is re-read AFTER the write so its file index
+    * sees exactly the persisted files.
     *
-    * Each create/refresh writes a FRESH generation under `mvPath`
-    * rather than overwriting in place — two lessons baked in:
+    * Reuse: when the newest committed generation under `mvPath` records
+    * this exact definition (name, base path, group columns and
+    * expressions, aggs, joins) and the fingerprints the base and every
+    * join input have now, `create` registers that generation and returns
+    * it without running a job. The fingerprints are the file-level
+    * (path, length, mtime) listings of [[fingerprint]], so an appended,
+    * rewritten or deleted file forces a rebuild; an in-place rewrite that
+    * keeps every file's name, length and mtime does not (the caveat
+    * `graft.Lake`'s schema cache documents). When the in-memory
+    * registration already points at that generation, it is returned as
+    * is: no manifest read, no re-analysis. Any other case publishes a new
+    * generation; [[refresh]] always does.
+    *
+    * Each publish writes a FRESH generation under `mvPath` rather than
+    * overwriting in place — two lessons baked in:
     *  - self-route: the defining query is by construction EXACTLY the
     *    shape the rule rewrites, so recomputing an already-registered
     *    view with routing enabled would read the view's own files while
@@ -427,32 +465,59 @@ object MaterializedView {
   def create(spark: SparkSession, name: String, basePath: String,
              groupCols: Seq[String], aggs: Seq[MvAgg],
              mvPath: String, groupExprs: Seq[MvGroupExpr] = Nil,
-             joins: Seq[MvJoin] = Nil): MvDef = {
+             joins: Seq[MvJoin] = Nil): MvDef =
+    define(spark, name, basePath, groupCols, aggs, mvPath, groupExprs, joins,
+      reuse = true)
+
+  private def define(spark: SparkSession, name: String, basePath: String,
+                     groupCols: Seq[String], aggs: Seq[MvAgg],
+                     mvPath: String, groupExprs: Seq[MvGroupExpr],
+                     joins: Seq[MvJoin], reuse: Boolean): MvDef = {
     require(aggs.nonEmpty, "a view needs at least one aggregate column")
     require(joins.isEmpty || groupExprs.isEmpty,
       "join-backed views with derived grouping dimensions are not supported")
-    if (joins.nonEmpty) validateJoinChain(spark, basePath, joins)
-    // a refresh carries the replay guard forward: the recomputed view
-    // already CONTAINS every absorbed batch's rows (they are in the
-    // base), so a crash-replayed batch arriving after the refresh must
-    // still be recognized as absorbed
-    val prior = catalog.get(name)
-    catalog.remove(name) // the defining query must never route to itself
-    try {
-      val baseListing = listBase(spark, basePath).getOrElse(
-        throw new java.io.FileNotFoundException(s"MV base absent: $basePath"))
-      val fp = fingerprintOfFiles(baseListing)
-      val files = baseListing.map(f => normalizePath(f.getPath.toString))
-      val joinFps = joins.map(jn => fingerprint(spark, jn.rightPath))
-      publish(spark, name, basePath, groupCols, aggs, mvPath, fp,
+    val baseListing = listBase(spark, basePath).getOrElse(
+      throw new java.io.FileNotFoundException(s"MV base absent: $basePath"))
+    val fp = fingerprintOfFiles(baseListing)
+    val joinFps = joins.map(jn => fingerprint(spark, jn.rightPath))
+    val identity = identityJson(name, basePath, groupCols, groupExprs, joins,
+      aggs, fp, joinFps)
+    (if (reuse) current(spark, name, mvPath, identity) else None).getOrElse {
+      if (joins.nonEmpty) validateJoinChain(spark, basePath, joins)
+      // a refresh carries the replay guard forward: the recomputed view
+      // already CONTAINS every absorbed batch's rows (they are in the
+      // base), so a crash-replayed batch arriving after the refresh must
+      // still be recognized as absorbed
+      val prior = catalog.get(name)
+      catalog.remove(name) // the defining query must never route to itself
+      try publish(spark, name, basePath, groupCols, aggs, mvPath, fp,
         definingQuery(spark, basePath, groupCols, aggs, groupExprs, joins),
         prior.map(_.lastBatchId).getOrElse(-1L), groupExprs, joins, joinFps,
-        files)
-    } catch {
-      case t: Throwable =>
-        // restore the prior (still-servable) generation's registration
-        prior.foreach(p => catalog.put(name, p))
-        throw t
+        baseListing.map(f => normalizePath(f.getPath.toString)))
+      catch {
+        case t: Throwable =>
+          // restore the prior (still-servable) generation's registration
+          prior.foreach(p => catalog.put(name, p))
+          throw t
+      }
+    }
+  }
+
+  /** The newest committed generation under `mvPath`, registered, if its
+    * manifest records `identity`; the registration itself when it
+    * already points there. */
+  private def current(spark: SparkSession, name: String, mvPath: String,
+                      identity: JObject): Option[MvDef] = {
+    val root = new Path(mvPath)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    Generations.committed(fs, root).lastOption.flatMap { n =>
+      val newest = fs.makeQualified(Generations.dir(root, n))
+      catalog.get(name).filter(d => fs.makeQualified(new Path(d.dataDir)) == newest) match {
+        case Some(d) => Some(d).filter(d => answers(written(definitionJson(d)), identity))
+        case None =>
+          val j = Generations.manifest(fs, root, n)
+          if (answers(j, identity)) Some(register(spark, mvPath, n, j)) else None
+      }
     }
   }
 
@@ -606,8 +671,8 @@ object MaterializedView {
   def refresh(spark: SparkSession, name: String): MvDef = {
     val d = catalog.getOrElse(name,
       throw new NoSuchElementException(s"no materialized view named $name"))
-    create(spark, name, d.basePath, d.groupCols, d.aggs, d.mvPath,
-      d.groupExprs, d.joins)
+    define(spark, name, d.basePath, d.groupCols, d.aggs, d.mvPath,
+      d.groupExprs, d.joins, reuse = false)
   }
 
   /** One advisor recommendation: a single view definition whose

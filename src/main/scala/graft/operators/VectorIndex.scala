@@ -21,8 +21,9 @@ import graft.functions.VectorFunctions.{cosine, cosineHof}
   *   - `v=<n>/_graft_manifest.json` — generation n's commit: planes /
   *     trained flag, the generation whose centroid table it serves, the
   *     EXACT cell-file list (path → byte length) that constitutes it —
-  *     an append's list spans earlier generations' files — the last
-  *     absorbed batch id and the frames' schemas.
+  *     an append's list spans earlier generations' files — the exact
+  *     centroid-file list, the last absorbed batch id and the frames'
+  *     schemas.
   *
   * A generation exists only once its manifest does, so a writer dying
   * at ANY earlier point (partial delta files, refreshed centroids,
@@ -75,9 +76,10 @@ object VectorIndex {
     cells.write.mode("append").partitionBy("bucket")
       .parquet(Generations.dir(new Path(dir), gen).toString)
 
-  private def genFiles(spark: SparkSession, dir: String, gen: Long): Map[String, Long] = {
+  private def genFiles(spark: SparkSession, dir: String, gen: Long,
+                       sub: String = ""): Map[String, Long] = {
     val root = new Path(dir)
-    Generations.dataFiles(fsOf(spark, root), root, gen)
+    Generations.dataFiles(fsOf(spark, root), root, gen, sub)
   }
 
   /** `cellSchema`/`centroidSchema` are the DDL of the frames the writer
@@ -86,11 +88,13 @@ object VectorIndex {
     * never runs a footer-sampling schema-inference job (guide §6 — the
     * manifest is the source of truth, the Iceberg/Delta pattern; `Lake`'s
     * fingerprint cache does the same for raw tables). `centroidGen` is
-    * the generation holding the centroid table this one serves. */
+    * the generation holding the centroid table this one serves, and
+    * `centroidFiles` that table's files. */
   private case class Manifest(gen: Long, planes: Int, trained: Boolean,
                               centroidGen: Long, files: Map[String, Long],
                               batchId: Long, cellSchema: String,
-                              centroidSchema: String)
+                              centroidSchema: String,
+                              centroidFiles: Map[String, Long])
 
   /** DDL with every field relaxed to nullable — exactly the shape parquet
     * schema inference reports, so a manifest-schema read plans identically
@@ -105,7 +109,8 @@ object VectorIndex {
       ("planes" -> m.planes) ~ ("trained" -> m.trained) ~
         ("centroids" -> m.centroidGen) ~ ("batchId" -> m.batchId) ~
         ("cellSchema" -> m.cellSchema) ~ ("centroidSchema" -> m.centroidSchema) ~
-        ("files" -> Generations.filesJson(m.files)))
+        ("files" -> Generations.filesJson(m.files)) ~
+        ("centroidFiles" -> Generations.filesJson(m.centroidFiles)))
   }
 
   private def readManifest(spark: SparkSession, dir: String,
@@ -120,7 +125,8 @@ object VectorIndex {
     Manifest(gen, long("planes").toInt,
       j \ "trained" match { case JBool(v) => v; case _ => fail("trained") },
       long("centroids"), Generations.filesOf(j), long("batchId"),
-      str("cellSchema"), str("centroidSchema"))
+      str("cellSchema"), str("centroidSchema"),
+      Generations.filesOf(j, "centroidFiles"))
   }
 
   private def latestManifest(spark: SparkSession, dir: String,
@@ -156,12 +162,17 @@ object VectorIndex {
       .select(col("neighbor_id"), col("c_vec"), col("bucket"))
   }
 
-  /** A committed generation's centroid table `(bucket, centroid)`. */
+  /** A committed generation's centroid table `(bucket, centroid)`: its
+    * manifested centroid files, validated like [[cells]], never whatever
+    * else the centroid directory holds. */
   def centroids(spark: SparkSession, dir: String, gen: Long = -1L): DataFrame = {
     val m = latestManifest(spark, dir, gen)
+    val root = new Path(dir)
+    Generations.validate(fsOf(spark, root), root, m.centroidFiles,
+      s"index v=${m.gen} centroids")
     spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(m.centroidSchema))
-      .parquet(centroidPath(dir, m.centroidGen))
+      .parquet(m.centroidFiles.keys.toSeq.sorted.map(f => s"$dir/$f"): _*)
   }
 
   private def centroidPath(dir: String, gen: Long): String =
@@ -197,7 +208,7 @@ object VectorIndex {
     centroidRows.write.mode("errorifexists").parquet(centroidPath(dir, gen))
     commit(spark, dir, Manifest(gen, planes, kmeansIters > 0, gen,
       genFiles(spark, dir, gen), -1L, nullableDDL(cellOut.schema),
-      nullableDDL(centroidRows.schema)))
+      nullableDDL(centroidRows.schema), genFiles(spark, dir, gen, CentroidDir)))
     if (retain > 0) vacuum(spark, dir, keepLast = retain)
   }
 
@@ -275,7 +286,7 @@ object VectorIndex {
       mergedFiles, math.max(prev.batchId, batchId),
       nullableDDL(
         assigned.select(col("neighbor_id"), col("c_vec"), col("bucket")).schema),
-      nullableDDL(centOut.schema)))
+      nullableDDL(centOut.schema), genFiles(spark, dir, gen, CentroidDir)))
   }
 
   /** Generation compaction: rewrite the CURRENT cell set as one fresh
@@ -298,7 +309,7 @@ object VectorIndex {
     writeCells(current.repartition(col("bucket")), dir, gen)
     commit(spark, dir, Manifest(gen, prev.planes, prev.trained,
       prev.centroidGen, genFiles(spark, dir, gen), prev.batchId,
-      nullableDDL(current.schema), prev.centroidSchema))
+      nullableDDL(current.schema), prev.centroidSchema, prev.centroidFiles))
   }
 
   /** Retention: keep the newest `keepLast` committed generations and

@@ -457,7 +457,9 @@ object EventsQueries {
     // Fallback soundness (stale base, distinct/filter shapes, disabled
     // flag) is law-pinned in MaterializedViewSpec. The routing flag
     // lives on a CHILD session (mvSession) so the shared bench/verify
-    // session never optimizes any OTHER query with routing armed.
+    // session never optimizes any OTHER query with routing armed. The
+    // first call builds the view; a later call over an unchanged base
+    // reuses it (MaterializedView.create's reuse rule).
     "q63_mv_rewrite" -> Q(
       (s, dir) => {
         import graft.operators.MaterializedView
@@ -852,12 +854,11 @@ object EventsQueries {
           |  TRUE AS served_from_mv""".stripMargin)),
 
     // ---- MV serving path (steady-state routed read) ---------------------
-    // q63 measures the full lifecycle (create + route) per bench rep;
-    // this is the complementary steady-state signal — load the durable
-    // definition if one is already published, else create once — so the
-    // headline bench tracks the ROUTED READ latency separately from
-    // view-build cost (the s19/q64 serve-split convention applied to
-    // the MV family). Same hash-gated served_from_mv + oracle compare.
+    // q63's twin over its own view root, kept under target/mv/serve_*
+    // across processes (the s19/q64 serve-split convention applied to
+    // the MV family): `create` reuses the committed generation while the
+    // base is unchanged, so a new process registers it without a
+    // rebuild. Same hash-gated served_from_mv + oracle compare.
     "q74_mv_serve" -> Q(
       (s, dir) => {
         import graft.operators.MaterializedView
@@ -866,8 +867,7 @@ object EventsQueries {
         val base = s"$dir/events.parquet"
         val mvPath =
           s"target/mv/serve_by_type_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-        if (MaterializedView.persisted(sess, mvPath)) MaterializedView.load(sess, mvPath)
-        else MaterializedView.create(sess, "serve_by_type", base,
+        MaterializedView.create(sess, "serve_by_type", base,
           groupCols = Seq("event_type"),
           aggs = Seq(
             MvAgg("count_star", outCol = "n_events"),

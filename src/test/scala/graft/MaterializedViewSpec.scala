@@ -1611,4 +1611,142 @@ class MaterializedViewSpec extends AnyFunSuite {
         Seq(("h0", 5L), ("h1", 5L), ("h2", 5L), ("h3", 5L)))
     } finally MaterializedView.drop("mv_budget_top")
   }
+
+  /** The jobs `f` starts, counted with the listener bus drained on both
+    * sides of the window. */
+  private def jobsDuring[A](f: => A): (A, Int) = {
+    import org.apache.spark.GraftTestSparkBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftTestSparkBridge.waitListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      GraftTestSparkBridge.waitListenerBusEmpty(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The routed answer equals the direct aggregate over the live base. */
+  private def assertServesLiveBase(base: String, mv: String): Unit = withRouting {
+    val q = query(base)
+    assert(readsPath(q, mv), "the view must route")
+    val direct = {
+      spark.conf.set(MaterializedViewRule.ConfKey, "false")
+      try collectQ(query(base))
+      finally spark.conf.set(MaterializedViewRule.ConfKey, "true")
+    }
+    assert(collectQ(q) == direct)
+  }
+
+  test("create reuses an unchanged view: same generation, no job; refresh still publishes") {
+    val base = freshDir("reuse/base"); val mv = freshDir("reuse/mv")
+    writeBase(base, rows)
+    val first = define("mv_reuse", base, mv)
+    try {
+      val (again, jobs) = jobsDuring(define("mv_reuse", base, mv))
+      assert(again.dataDir == first.dataDir)
+      assert(again eq first, "the registration is returned as is")
+      assert(jobs == 0, s"a reused create ran $jobs jobs")
+      assert(gensOf(mv) == Set("v=1"))
+      assertServesLiveBase(base, mv)
+      assert(MaterializedView.refresh(spark, "mv_reuse").dataDir != first.dataDir,
+        "refresh recomputes and publishes a new generation")
+    } finally MaterializedView.drop("mv_reuse")
+  }
+
+  test("an appended, rewritten or deleted base file forces a rebuild") {
+    val base = freshDir("rebuild/base"); val mv = freshDir("rebuild/mv")
+    // two files, so one can be deleted and rows remain
+    rows.take(2).toDF("k", "n", "v").coalesce(1).write.parquet(base)
+    rows.drop(2).toDF("k", "n", "v").coalesce(1).write.mode("append").parquet(base)
+    var dataDir = define("mv_rebuild", base, mv).dataDir
+    def rebuilt(change: String): Unit = {
+      val d = define("mv_rebuild", base, mv)
+      assert(d.dataDir != dataDir, s"$change must publish a new generation")
+      dataDir = d.dataDir
+      assertServesLiveBase(base, mv)
+    }
+    try {
+      Seq(("d", 5L, 4.0)).toDF("k", "n", "v").coalesce(1)
+        .write.mode("append").parquet(base)
+      rebuilt("an appended file")
+      Seq(("a", 6L, 9.0), ("e", 7L, 1.0)).toDF("k", "n", "v").coalesce(1)
+        .write.mode("overwrite").parquet(base)
+      Seq(("f", 8L, 2.0)).toDF("k", "n", "v").coalesce(1)
+        .write.mode("append").parquet(base)
+      rebuilt("a rewritten base")
+      val parts = new java.io.File(base).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      assert(parts.length == 2)
+      assert(parts.head.delete())
+      rebuilt("a deleted file")
+    } finally MaterializedView.drop("mv_rebuild")
+  }
+
+  test("a changed definition or join input forces a rebuild") {
+    import MaterializedView.MvJoin
+    val base = freshDir("redefine/base"); val mv = freshDir("redefine/mv")
+    writeBase(base, rows)
+    val first = define("mv_redefine", base, mv)
+    val fact = freshDir("redefine/fact"); val dim = freshDir("redefine/dim")
+    val jmv = freshDir("redefine/jmv")
+    Seq((1L, 10L, 2.0), (2L, 20L, 3.0)).toDF("o_id", "o_cust", "o_amt")
+      .write.parquet(fact)
+    Seq((10L, "gold"), (20L, "iron")).toDF("c_id", "c_tier").write.parquet(dim)
+    def defineJ() = MaterializedView.create(spark, "mv_redefine_j", fact,
+      groupCols = Seq("c_tier"), aggs = Seq(MvAgg("count_star", outCol = "n")),
+      mvPath = jmv, joins = Seq(MvJoin(dim, Seq("o_cust"), Seq("c_id"))))
+    try {
+      val narrower = MaterializedView.create(spark, "mv_redefine", base,
+        Seq("k"), Seq(MvAgg("count_star", outCol = "cnt")), mv)
+      assert(narrower.dataDir != first.dataDir)
+      assert(narrower.aggs == Seq(MvAgg("count_star", outCol = "cnt")))
+      val j1 = defineJ()
+      assert(defineJ().dataDir == j1.dataDir, "an unchanged join view is reused")
+      Seq((10L, "iron")).toDF("c_id", "c_tier").write.mode("overwrite").parquet(dim)
+      val j2 = defineJ()
+      assert(j2.dataDir != j1.dataDir, "a changed join input must rebuild")
+      assert(spark.read.parquet(j2.dataDir).collect().map(r =>
+        (r.getString(0), r.getLong(1))).toSeq == Seq(("iron", 1L)))
+    } finally {
+      MaterializedView.drop("mv_redefine")
+      MaterializedView.drop("mv_redefine_j")
+    }
+  }
+
+  test("after drop, create re-registers the committed generation from its manifest") {
+    val base = freshDir("reregister/base"); val mv = freshDir("reregister/mv")
+    writeBase(base, rows)
+    val first = define("mv_reregister", base, mv)
+    try {
+      MaterializedView.drop("mv_reregister")
+      val again = define("mv_reregister", base, mv)
+      assert(again.dataDir == first.dataDir)
+      assert(!(again eq first), "re-registered from the manifest")
+      assert(gensOf(mv) == Set("v=1"))
+      assert(MaterializedView.get("mv_reregister").map(_.dataDir).contains(first.dataDir))
+      assertServesLiveBase(base, mv)
+    } finally MaterializedView.drop("mv_reregister")
+  }
+
+  test("create after absorb answers the same as the direct aggregate") {
+    val base = freshDir("reabsorb/base"); val mv = freshDir("reabsorb/mv")
+    writeBase(base, rows)
+    define("mv_reabsorb", base, mv)
+    val delta = Seq(("a", 7L, 4.5), ("d", 8L, 3.0))
+    try {
+      delta.toDF("k", "n", "v").write.mode("append").parquet(base)
+      val absorbed = MaterializedView.absorb(spark, "mv_reabsorb",
+        delta.toDF("k", "n", "v"))
+      val again = define("mv_reabsorb", base, mv)
+      assert(again.dataDir == absorbed.dataDir,
+        "the absorbed generation records the live base")
+      assertServesLiveBase(base, mv)
+    } finally MaterializedView.drop("mv_reabsorb")
+  }
 }

@@ -44,4 +44,9 @@ class SessionBuilderSpec extends AnyFunSuite {
     val wh = TestSpark.spark.conf.get("spark.sql.warehouse.dir")
     assert(wh.contains("graft_wh"), s"warehouse $wh is not the suite's temp dir")
   }
+
+  test("the session keeps ObjectHashAggregate's hash map up to 64k groups per task") {
+    assert(TestSpark.spark.conf
+      .get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") === "65536")
+  }
 }

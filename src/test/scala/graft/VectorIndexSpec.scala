@@ -367,4 +367,22 @@ class VectorIndexSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(after === before)
   }
+
+  test("a stray parquet file in the centroid directory changes no answer") {
+    val p = freshDir("vector_index_spec_stray")
+    VectorIndex.build(corpus, p, "vec_id", "embedding", planes = 4)
+    def answers() = VectorIndex.query(spark, p, queries,
+        "vec_id", "embedding", k = 5, nProbe = 16)
+      .collect().map(_.toString).sorted.toSeq
+    val before = answers()
+    val nCentroids = VectorIndex.centroids(spark, p).count()
+    // a copy of a real centroid file: read as data, every centroid row
+    // would appear twice
+    val centroidDir = new java.io.File(s"$p/v=1/_centroids")
+    val part = centroidDir.listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath,
+      new java.io.File(centroidDir, "part-99999-stray.snappy.parquet").toPath)
+    assert(VectorIndex.centroids(spark, p).count() === nCentroids)
+    assert(answers() === before)
+  }
 }
