@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
   * sketch state instead of scanning either side twice.
   *
   * Each side contributes ONE 1-row aggregate: row count + a theta
-  * sketch of its join key ([[graft.plans.ThetaSketchExprs]], lgK
-  * sized so test-scale keyspaces stay in exact mode), optionally a
-  * frequency sketch ([[graft.plans.FreqSketchExprs]]) for the heavy
-  * hitter. The estimates compose on the 1-row cross of those
-  * aggregates — a broadcast of two single rows, never data-sized — and
+  * sketch of its join key (Spark's `theta_sketch_agg`, lgK sized so
+  * test-scale keyspaces stay in exact mode), optionally a frequency
+  * sketch ([[Sketches.freqSketchAgg]]) for the heavy hitter. The
+  * estimates compose on the 1-row cross of those aggregates — a
+  * broadcast of two single rows, never data-sized — and
   * because sketches MERGE, per-partition/per-day sketch tables already
   * in the lake answer the same questions without touching the tables
   * at all (the q49/q54 persistence playbook).
@@ -38,16 +38,15 @@ object JoinPlanner {
                 right: DataFrame, rKey: String,
                 broadcastMaxRows: Long = 1000000L,
                 lgK: Int = 18): DataFrame = {
-    import graft.plans.ThetaSketchExprs._
     val l = left.agg(count(lit(1)).as("n_left"),
-      thetaSketchAgg(col(lKey), lgK).as("skl"))
+      theta_sketch_agg(col(lKey), lgK).as("skl"))
     val r = right.agg(count(lit(1)).as("n_right"),
-      thetaSketchAgg(col(rKey), lgK).as("skr"))
+      theta_sketch_agg(col(rKey), lgK).as("skr"))
     l.crossJoin(broadcast(r))
       .select(col("n_left"), col("n_right"),
-        thetaEstimate(col("skl")).as("d_left"),
-        thetaEstimate(col("skr")).as("d_right"),
-        thetaEstimate(thetaIntersect(col("skl"), col("skr")))
+        theta_sketch_estimate(col("skl")).as("d_left"),
+        theta_sketch_estimate(col("skr")).as("d_right"),
+        theta_sketch_estimate(theta_intersection(col("skl"), col("skr")))
           .as("n_common"))
       .withColumn("est_out",
         // an empty side has d = 0: the estimate is 0, not a division
@@ -76,16 +75,15 @@ object JoinPlanner {
                             rightState: DataFrame, rSketchCol: String,
                             rCountCol: String,
                             broadcastMaxRows: Long = 1000000L): DataFrame = {
-    import graft.plans.ThetaSketchExprs._
     val l = leftState.agg(sum(col(lCountCol)).as("n_left"),
-      thetaUnionAgg(col(lSketchCol)).as("skl"))
+      theta_union_agg(col(lSketchCol)).as("skl"))
     val r = rightState.agg(sum(col(rCountCol)).as("n_right"),
-      thetaUnionAgg(col(rSketchCol)).as("skr"))
+      theta_union_agg(col(rSketchCol)).as("skr"))
     l.crossJoin(broadcast(r))
       .select(col("n_left"), col("n_right"),
-        thetaEstimate(col("skl")).as("d_left"),
-        thetaEstimate(col("skr")).as("d_right"),
-        thetaEstimate(thetaIntersect(col("skl"), col("skr")))
+        theta_sketch_estimate(col("skl")).as("d_left"),
+        theta_sketch_estimate(col("skr")).as("d_right"),
+        theta_sketch_estimate(theta_intersection(col("skl"), col("skr")))
           .as("n_common"))
       .withColumn("est_out",
         // an empty side has d = 0: the estimate is 0, not a division
@@ -141,8 +139,6 @@ object JoinPlanner {
     // is a wasted map-side sketch on a scan that had to happen anyway,
     // in every other case it replaces a full re-scan. Decision inputs
     // and thresholds are unchanged (JoinOpsSpec pins them).
-    import graft.plans.ThetaSketchExprs._
-    import graft.plans.FreqSketchExprs._
     // top-k, not top-1 (ADVICE r19): with SEVERAL keys above the skew
     // threshold, surfacing only the heaviest would pin every other heavy
     // key to salt 0 on one task — worse than legacy full-replication
@@ -150,14 +146,15 @@ object JoinPlanner {
     // whose share clears skewShareThreshold is surfaced as hot; the salt
     // count still sizes to the single heaviest key (the straggler bound).
     val l = left.agg(count(lit(1)).as("n_left"),
-      thetaSketchAgg(col(lKey), 18).as("skl"),
-      freqTopItems(freqSketchAgg(col(lKey).cast("string"), 1024),
-        lit(maxSalts)).as("top"))
+      theta_sketch_agg(col(lKey), 18).as("skl"),
+      Sketches.freqTopItems(
+        Sketches.freqSketchAgg(col(lKey).cast("string"), 768),
+        maxSalts, 768).as("top"))
     val r = right.agg(count(lit(1)).as("n_right"),
-      thetaSketchAgg(col(rKey), 18).as("skr"))
+      theta_sketch_agg(col(rKey), 18).as("skr"))
     val st = l.crossJoin(broadcast(r))
       .select(col("n_left"), col("n_right"),
-        thetaEstimate(col("skl")).as("d_left"), col("top"))
+        theta_sketch_estimate(col("skl")).as("d_left"), col("top"))
       .head()
     val nLeft = st.getAs[Long]("n_left")
     val nRight = st.getAs[Long]("n_right")
@@ -166,7 +163,7 @@ object JoinPlanner {
     else {
       val dLeft = math.max(1L, st.getAs[Long]("d_left"))
       val top = st.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("top")
-      val topRows = top.headOption.map(_.getAs[Long]("est")).getOrElse(0L)
+      val topRows = top.headOption.map(_.getAs[Long]("count")).getOrElse(0L)
       val share = if (nLeft == 0L) 0.0 else topRows.toDouble / nLeft
       if (share >= skewShareThreshold) {
         val mean = nLeft.toDouble / dLeft
@@ -174,7 +171,7 @@ object JoinPlanner {
         if (need <= 1) JoinPlan("shuffle-hash", 1)
         else JoinPlan("salted", math.min(need, maxSalts),
           top.filter(r => r.getAs[String]("item") != null &&
-              r.getAs[Long]("est").toDouble / nLeft >= skewShareThreshold)
+              r.getAs[Long]("count").toDouble / nLeft >= skewShareThreshold)
             .map(_.getAs[String]("item")).toSeq)
       } else JoinPlan("shuffle-hash", 1)
     }
@@ -259,22 +256,21 @@ object JoinPlanner {
     * more. */
   def starOrder(fact: DataFrame, dims: Seq[StarDim],
                 lgK: Int = 18): StarPlan = {
-    import graft.plans.ThetaSketchExprs._
     require(dims.nonEmpty, "star chain needs at least one dim")
     require(dims.map(_.name).distinct.size == dims.size,
       s"dim names must be unique, got ${dims.map(_.name)}")
     val factCols = dims.map(d =>
-      thetaSketchAgg(col(d.factKey), lgK).as(s"fk_${d.name}"))
+      theta_sketch_agg(col(d.factKey), lgK).as(s"fk_${d.name}"))
     val factAgg = fact.agg(factCols.head, factCols.tail: _*)
     val dimAggs = dims.map(d => d.dim.agg(
       count(lit(1)).as(s"n_${d.name}"),
-      thetaSketchAgg(col(d.dimKey), lgK).as(s"dk_${d.name}")))
+      theta_sketch_agg(col(d.dimKey), lgK).as(s"dk_${d.name}")))
     // 1-row × 1-row crosses: broadcast by construction, data-sized never
     val crossed = dimAggs.foldLeft(factAgg)(
       (acc, r) => acc.crossJoin(broadcast(r)))
     val sel = dims.flatMap(d => Seq(
-      thetaEstimate(col(s"fk_${d.name}")).as(s"df_${d.name}"),
-      thetaEstimate(thetaIntersect(col(s"fk_${d.name}"),
+      theta_sketch_estimate(col(s"fk_${d.name}")).as(s"df_${d.name}"),
+      theta_sketch_estimate(theta_intersection(col(s"fk_${d.name}"),
         col(s"dk_${d.name}"))).as(s"dc_${d.name}"),
       col(s"n_${d.name}")))
     val row = crossed.select(sel: _*).head()
@@ -317,21 +313,21 @@ object JoinPlanner {
     * key's whole row set — feed [[SkewJoin]] salting.
     *
     * The NO_FALSE_POSITIVES list is EMPTY when no key's count clears
-    * the sketch's error bound (~n/maxMapSize) — the uniform-keys case
+    * the sketch's error bound (~n/mapSize) — the uniform-keys case
     * at scale (6M rows over 1.5M orderkeys ⇒ every count ≈ 4 ≪ the
     * ~5.9k bound). That is a "no demonstrably heavy key" answer, not
     * an error: report top_key null / top_rows 0 / top_share 0.0 so
     * [[planFor]] falls through to the plain shuffle join. A bare
     * element_at here threw under ANSI and killed q61 at sf1. */
   def skewProbe(df: DataFrame, keyCol: String,
-                maxMapSize: Int = 1024): DataFrame = {
-    import graft.plans.FreqSketchExprs._
+                maxItemsTracked: Int = 768): DataFrame = {
     df.agg(count(lit(1)).as("n_rows"),
-        freqTopItems(freqSketchAgg(col(keyCol).cast("string"), maxMapSize),
-          lit(1)).as("top"))
+        Sketches.freqTopItems(
+          Sketches.freqSketchAgg(col(keyCol).cast("string"), maxItemsTracked),
+          1, maxItemsTracked).as("top"))
       .select(col("n_rows"),
         try_element_at(col("top"), lit(1)).getField("item").as("top_key"),
-        coalesce(try_element_at(col("top"), lit(1)).getField("est"), lit(0L))
+        coalesce(try_element_at(col("top"), lit(1)).getField("count"), lit(0L))
           .as("top_rows"))
       .withColumn("top_share",
         // An empty relation gives 0.0/0.0 = NaN (IEEE division, not

@@ -131,7 +131,7 @@ object MaterializedView {
   /** The default lgK `hll_sketch_agg` uses when none is given. */
   val DefaultLgK = 12
 
-  /** The default k `kll_agg` uses when none is given. */
+  /** The default k `kll_sketch_agg_double` uses when none is given. */
   val DefaultKllK = 200
 
   private def aggColumn(a: MvAgg): Column = {
@@ -146,7 +146,7 @@ object MaterializedView {
       case "hll_sketch" =>
         hll_sketch_agg(in, lit(a.lgK.getOrElse(DefaultLgK)))
       case "kll" =>
-        expr(s"kll_agg(${a.inputCol}, ${a.lgK.getOrElse(DefaultKllK)})")
+        kll_sketch_agg_double(in, a.lgK.getOrElse(DefaultKllK))
     }
     c.as(a.outCol)
   }
@@ -644,7 +644,7 @@ object MaterializedView {
           // KLL merge is associative (quantiles stay within the rank
           // bound under any schedule; exact below k retained values)
           case "kll" =>
-            expr(s"kll_merge_agg(${a.outCol}, ${a.lgK.getOrElse(DefaultKllK)})")
+            kll_merge_agg_double(col(a.outCol), a.lgK.getOrElse(DefaultKllK))
         }
         c.cast(storedTypes(a.outCol)).as(a.outCol)
       }

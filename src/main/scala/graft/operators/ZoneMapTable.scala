@@ -164,9 +164,8 @@ object ZoneMapTable {
     * column, returned driver-side (sketchCols.size small rows). */
   private def computeStarStats(df: DataFrame, sketchCols: Seq[String])
       : Seq[(String, Long, Array[Byte])] = {
-    import graft.plans.ThetaSketchExprs._
     val aggs = count(lit(1)).as("n") +:
-      sketchCols.map(c => thetaSketchAgg(col(c), StarLgK).as(s"sk_$c"))
+      sketchCols.map(c => theta_sketch_agg(col(c), StarLgK).as(s"sk_$c"))
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     val n = row.getLong(0)
     sketchCols.zipWithIndex.map { case (c, i) =>

@@ -19,126 +19,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           s"cosine_similarity takes exactly 2 arguments, got ${exprs.length}")
         CosineSimilarityExpr(exprs(0), exprs(1))
       }))
-    // theta sketch family (ThetaSketchExprs): aggregate builders return
-    // the bare AggregateFunction — the analyzer wraps it, exactly as
-    // Spark's own registry entries do. Optional second argument =
-    // lgNominalEntries, a foldable int literal.
-    def lgK(exprs: Seq[Expression], name: String): Int =
-      if (exprs.length < 2) 12
-      else {
-        require(exprs(1).foldable, s"$name lgK must be a literal")
-        exprs(1).eval().asInstanceOf[Number].intValue()
-      }
-    e.injectFunction((
-      FunctionIdentifier("theta_sketch_agg"),
-      new ExpressionInfo(classOf[ThetaSketchAgg].getName, "theta_sketch_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.nonEmpty && exprs.length <= 2,
-          s"theta_sketch_agg takes 1-2 arguments, got ${exprs.length}")
-        ThetaSketchAgg(exprs.head, lgK(exprs, "theta_sketch_agg"))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("theta_union_agg"),
-      new ExpressionInfo(classOf[ThetaUnionAgg].getName, "theta_union_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.nonEmpty && exprs.length <= 2,
-          s"theta_union_agg takes 1-2 arguments, got ${exprs.length}")
-        ThetaUnionAgg(exprs.head, lgK(exprs, "theta_union_agg"))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("theta_estimate"),
-      new ExpressionInfo(classOf[ThetaEstimate].getName, "theta_estimate"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"theta_estimate takes exactly 1 argument, got ${exprs.length}")
-        ThetaEstimate(exprs.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("theta_intersect"),
-      new ExpressionInfo(classOf[ThetaIntersect].getName, "theta_intersect"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"theta_intersect takes exactly 2 arguments, got ${exprs.length}")
-        ThetaIntersect(exprs(0), exprs(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("theta_a_not_b"),
-      new ExpressionInfo(classOf[ThetaANotB].getName, "theta_a_not_b"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"theta_a_not_b takes exactly 2 arguments, got ${exprs.length}")
-        ThetaANotB(exprs(0), exprs(1))
-      }))
-    // KLL quantile family (KllSketchExprs); optional second argument on
-    // the aggregates = k, a foldable int literal
-    e.injectFunction((
-      FunctionIdentifier("kll_agg"),
-      new ExpressionInfo(classOf[KllDoublesAgg].getName, "kll_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.nonEmpty && exprs.length <= 2,
-          s"kll_agg takes 1-2 arguments, got ${exprs.length}")
-        KllDoublesAgg(exprs.head,
-          if (exprs.length < 2) 200
-          else { require(exprs(1).foldable, "kll_agg k must be a literal")
-            exprs(1).eval().asInstanceOf[Number].intValue() })
-      }))
-    e.injectFunction((
-      FunctionIdentifier("kll_merge_agg"),
-      new ExpressionInfo(classOf[KllMergeAgg].getName, "kll_merge_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.nonEmpty && exprs.length <= 2,
-          s"kll_merge_agg takes 1-2 arguments, got ${exprs.length}")
-        KllMergeAgg(exprs.head,
-          if (exprs.length < 2) 200
-          else { require(exprs(1).foldable, "kll_merge_agg k must be a literal")
-            exprs(1).eval().asInstanceOf[Number].intValue() })
-      }))
-    e.injectFunction((
-      FunctionIdentifier("kll_quantile"),
-      new ExpressionInfo(classOf[KllQuantile].getName, "kll_quantile"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"kll_quantile takes exactly 2 arguments, got ${exprs.length}")
-        KllQuantile(exprs(0), exprs(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("kll_rank"),
-      new ExpressionInfo(classOf[KllRank].getName, "kll_rank"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"kll_rank takes exactly 2 arguments, got ${exprs.length}")
-        KllRank(exprs(0), exprs(1))
-      }))
-    // frequent-items family (FreqSketchExprs); optional second argument
-    // on the aggregates = maxMapSize, a foldable power-of-2 int literal
-    def mapSize(exprs: Seq[Expression], fn: String): Int =
-      if (exprs.length < 2) 256
-      else { require(exprs(1).foldable, s"$fn maxMapSize must be a literal")
-        exprs(1).eval().asInstanceOf[Number].intValue() }
-    e.injectFunction((
-      FunctionIdentifier("freq_sketch_agg"),
-      new ExpressionInfo(classOf[FreqSketchAgg].getName, "freq_sketch_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.nonEmpty && exprs.length <= 2,
-          s"freq_sketch_agg takes 1-2 arguments, got ${exprs.length}")
-        FreqSketchAgg(exprs.head, mapSize(exprs, "freq_sketch_agg"))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("freq_merge_agg"),
-      new ExpressionInfo(classOf[FreqMergeAgg].getName, "freq_merge_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.nonEmpty && exprs.length <= 2,
-          s"freq_merge_agg takes 1-2 arguments, got ${exprs.length}")
-        FreqMergeAgg(exprs.head, mapSize(exprs, "freq_merge_agg"))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("freq_top_items"),
-      new ExpressionInfo(classOf[FreqTopItems].getName, "freq_top_items"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"freq_top_items takes exactly 2 arguments, got ${exprs.length}")
-        FreqTopItems(exprs(0), exprs(1))
-      }))
     // opt-in via spark.graft.rewriteOrJoin (see OrEquiJoinRule scaladoc)
     e.injectOptimizerRule(_ => OrEquiJoinRule)
     // opt-in via spark.graft.rewriteNotIn (NullAwareAntiJoinRule)

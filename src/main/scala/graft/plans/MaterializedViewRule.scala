@@ -657,17 +657,23 @@ object MaterializedViewRule extends Rule[LogicalPlan] with PredicateHelper {
       case _ => None
     }
 
-  /** The stored KLL column serving a `kll_agg` call — input column and
-    * k must both match (k is the rank-error bound). */
-  private def servedKll(kll: KllDoublesAgg, d: MvDef,
+  /** The stored KLL column serving a `kll_sketch_agg_double` call —
+    * input column and k must both match (k is the rank-error bound). */
+  private def servedKll(kll: KllSketchAggDouble, d: MvDef,
                         byName: Map[String, Attribute]): Option[Attribute] =
     kll.child match {
       case a: AttributeReference =>
         d.aggs.find(x => x.func == "kll" && x.inputCol == a.name &&
-            x.lgK.getOrElse(MaterializedView.DefaultKllK) == kll.k)
+            x.lgK.getOrElse(MaterializedView.DefaultKllK) == kllK(kll))
           .flatMap(x => byName.get(x.outCol))
       case _ => None
     }
+
+  /** The k of a `kll_sketch_agg_double` call: its foldable k argument,
+    * or the built-in's default (200) when none is given. */
+  private def kllK(kll: KllSketchAggDouble): Int =
+    kll.kExpr.map(_.eval().asInstanceOf[Number].intValue)
+      .getOrElse(MaterializedView.DefaultKllK)
 
   /** The view-side expression serving aggregate expression `ae`, bound
     * against `byName` (the view relation's output attributes). */
@@ -678,7 +684,7 @@ object MaterializedViewRule extends Rule[LogicalPlan] with PredicateHelper {
         serveAverage(avgFn, d, core, byName)
       case AggregateExpression(h: HllSketchAgg, _, false, None, _) =>
         servedSketch(h, d, byName)
-      case AggregateExpression(kll: KllDoublesAgg, _, false, None, _) =>
+      case AggregateExpression(kll: KllSketchAggDouble, _, false, None, _) =>
         servedKll(kll, d, byName)
       case AggregateExpression(fn, _, false, None, _) =>
         shapeOf(fn).flatMap { got =>
@@ -720,12 +726,13 @@ object MaterializedViewRule extends Rule[LogicalPlan] with PredicateHelper {
         // schedule (q49's schedule-independence law as a rewrite)
         servedSketch(h, d, byName).map(stored =>
           new HllUnionAgg(stored, Literal(false)).toAggregateExpression())
-      case AggregateExpression(kll: KllDoublesAgg, _, false, None, _) =>
+      case AggregateExpression(kll: KllSketchAggDouble, _, false, None, _) =>
         // quantile rollup: merge the stored per-group KLL sketches —
         // within the k-bound rank error under any schedule, exact
         // order statistics below k retained values (q52's contract)
         servedKll(kll, d, byName).map(stored =>
-          KllMergeAgg(stored, kll.k).toAggregateExpression())
+          KllMergeAggDouble(stored, Some(Literal(kllK(kll))))
+            .toAggregateExpression())
       case AggregateExpression(fn, _, false, None, _) =>
         shapeOf(fn).flatMap { got =>
           d.aggs.find(a => declaredShape(a) == got)

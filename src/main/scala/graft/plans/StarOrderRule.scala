@@ -263,7 +263,7 @@ object StarOrderRule extends Rule[LogicalPlan] {
   private def estimate(sk: Array[Byte]): Double =
     StarStatsRegistry.distinctEstimate(sk)
 
-  private def survivalOf(factSk: Array[Byte], dimSk: Array[Byte]): Double = {
+  private[graft] def survivalOf(factSk: Array[Byte], dimSk: Array[Byte]): Double = {
     val denom = estimate(factSk)
     if (denom == 0.0) return 0.0
     val inter = SetOperation.builder().buildIntersection()

@@ -912,7 +912,7 @@ object EventsQueries {
       (s, dir) => {
         import graft.operators.MaterializedView
         import graft.operators.MaterializedView.{MvAgg, MvGroupExpr}
-        import graft.plans.KllSketchExprs._
+        import graft.operators.Sketches.kllQuantile
         val sess = mvSession(s)
         val base = s"$dir/events.parquet"
         val mvPath =
@@ -926,8 +926,10 @@ object EventsQueries {
           groupExprs = Seq(MvGroupExpr("d", "date_trunc('day', ts)")))
         val q = graft.Lake.read(sess, base).groupBy("event_type")
           .agg(count(col("value")).as("n_vals"),
-            kllQuantile(kllAgg(col("value"), 32768), lit(0.5)).as("p50"),
-            kllQuantile(kllAgg(col("value"), 32768), lit(0.95)).as("p95"))
+            kllQuantile(kll_sketch_agg_double(col("value"), 32768), lit(0.5))
+              .as("p50"),
+            kllQuantile(kll_sketch_agg_double(col("value"), 32768), lit(0.95))
+              .as("p95"))
         val served = servedFromMv(q, base)
         val ev = graft.Lake.read(sess, base).where(col("value").isNotNull)
           .select(col("event_type"), col("value"))

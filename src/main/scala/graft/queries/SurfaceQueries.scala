@@ -287,30 +287,29 @@ object SurfaceQueries {
 
     // ---- theta-sketch segment algebra -----------------------------------
     // "How many users did BOTH A and B" from sketch state alone — the
-    // set-algebra question HLL union cannot answer (plans/
-    // ThetaSketchExprs: native TypedImperativeAggregate + scalar set
-    // ops). All four outputs are estimates READ OFF SKETCHES, never
-    // from rows; the DuckDB oracle recomputes the true counts, and the
-    // gate is exact because every per-type user set here is below the
-    // 2^12 nominal-entries threshold where a theta sketch retains every
-    // distinct hash (the scaladoc's exactness contract — ThetaSpec
-    // covers estimation mode). The pair join is |event_types|² over a
+    // set-algebra question HLL union cannot answer (Spark's theta_*
+    // aggregates and scalar set ops). All four outputs are estimates
+    // READ OFF SKETCHES, never from rows; the DuckDB oracle recomputes
+    // the true counts, and the gate is exact because every per-type
+    // user set here is below the 2^12 nominal-entries threshold where a
+    // theta sketch retains every distinct hash (the exactness contract
+    // — ThetaSpec covers estimation mode). The pair join is
+    // |event_types|² over a
     // broadcast 1-row-per-type aggregate — bounded, never data-sized.
     "q51_theta_segments" -> Q(
       (s, dir) => {
-        import graft.plans.ThetaSketchExprs._
         val sk = Lake(s, dir).events
           .groupBy("event_type")
-          .agg(thetaSketchAgg(col("user_id")).as("sk"))
+          .agg(theta_sketch_agg(col("user_id")).as("sk"))
         val a = sk.select(col("event_type").as("type_a"), col("sk").as("ska"))
         val b = sk.select(col("event_type").as("type_b"), col("sk").as("skb"))
         a.join(broadcast(b), col("type_a") < col("type_b"))
           .select(col("type_a"), col("type_b"),
-            thetaEstimate(col("ska")).as("n_a"),
-            thetaEstimate(col("skb")).as("n_b"),
-            thetaEstimate(thetaIntersect(col("ska"), col("skb")))
+            theta_sketch_estimate(col("ska")).as("n_a"),
+            theta_sketch_estimate(col("skb")).as("n_b"),
+            theta_sketch_estimate(theta_intersection(col("ska"), col("skb")))
               .as("n_both"),
-            thetaEstimate(thetaANotB(col("ska"), col("skb")))
+            theta_sketch_estimate(theta_difference(col("ska"), col("skb")))
               .as("n_a_only"))
           .orderBy("type_a", "type_b")
       },
@@ -331,7 +330,7 @@ object SurfaceQueries {
         |ORDER BY type_a, type_b""".stripMargin),
 
     // ---- KLL quantile sketch distributions ------------------------------
-    // Mergeable percentiles (plans/KllSketchExprs): per-type value
+    // Mergeable percentiles (Spark's kll_sketch_* family): per-type value
     // distributions as sketch state. KLL compaction is RANDOMIZED, so
     // the gate checks what the sketch guarantees — the rank error of its
     // p50/p95 answers, recomputed exactly from the rows (inclusive
@@ -340,11 +339,12 @@ object SurfaceQueries {
     // recounts n_vals exactly and pins the booleans true.
     "q52_kll_latency" -> Q(
       (s, dir) => {
-        import graft.plans.KllSketchExprs._
+        import graft.operators.Sketches.kllQuantile
         val ev = Lake(s, dir).events.where(col("value").isNotNull)
           .select(col("event_type"), col("value"))
         val sk = ev.groupBy("event_type").agg(
-            kllAgg(col("value")).as("sk"), count(lit(1)).as("n_vals"))
+            kll_sketch_agg_double(col("value")).as("sk"),
+            count(lit(1)).as("n_vals"))
           .select(col("event_type"), col("n_vals"),
             kllQuantile(col("sk"), lit(0.5)).as("p50"),
             kllQuantile(col("sk"), lit(0.95)).as("p95"))
@@ -382,13 +382,13 @@ object SurfaceQueries {
     // without touching rows.
     "q53_drift_detection" -> Q(
       (s, dir) => {
-        import graft.plans.KllSketchExprs._
+        import graft.operators.Sketches.{kllQuantile, kllRank}
         val ev = Lake(s, dir).events.where(col("value").isNotNull)
           .select(col("event_type"), col("value"),
             (pmod(col("event_id"), lit(2)) === 0).as("cohort_a"))
         val sk = ev.groupBy("event_type").agg(
-          kllAgg(when(col("cohort_a"), col("value"))).as("ska"),
-          kllAgg(when(!col("cohort_a"), col("value"))).as("skb"),
+          kll_sketch_agg_double(when(col("cohort_a"), col("value"))).as("ska"),
+          kll_sketch_agg_double(when(!col("cohort_a"), col("value"))).as("skb"),
           sum(when(col("cohort_a"), 1L).otherwise(0L)).as("n_a"),
           sum(when(!col("cohort_a"), 1L).otherwise(0L)).as("n_b"))
         val drift = (1 to 9).map { d =>
@@ -419,17 +419,16 @@ object SurfaceQueries {
     // per-day sketches are what you'd persist (q49's playbook), and the
     // whole matrix is |days|·maxOffset scalar set-ops on a broadcast
     // 1-row-per-day aggregate — day count, not data size. The gate is
-    // exact by the ThetaSketchExprs exactness contract: max per-day
+    // exact by the theta exactness contract: max per-day
     // distinct users is 1,356 at sf0.1, below the 2^12 nominal-entries
     // threshold, so sketches and their intersections are exact integers.
     "q54_theta_retention" -> Q(
       (s, dir) => {
-        import graft.plans.ThetaSketchExprs._
         val daily = Lake(s, dir).events
           .select(expr("unix_micros(ts) DIV 86400000000").as("day"),
             col("user_id"))
           .groupBy("day")
-          .agg(thetaSketchAgg(col("user_id")).as("sk"))
+          .agg(theta_sketch_agg(col("user_id")).as("sk"))
         val a = daily.select(col("day").as("day_0"), col("sk").as("ska"))
         val b = daily.select(col("day").as("day_k"), col("sk").as("skb"))
         a.join(broadcast(b),
@@ -437,8 +436,8 @@ object SurfaceQueries {
               col("day_k") - col("day_0") <= 7)
           .select(col("day_0"),
             (col("day_k") - col("day_0")).cast("int").as("offset_days"),
-            thetaEstimate(col("ska")).as("n_day0"),
-            thetaEstimate(thetaIntersect(col("ska"), col("skb")))
+            theta_sketch_estimate(col("ska")).as("n_day0"),
+            theta_sketch_estimate(theta_intersection(col("ska"), col("skb")))
               .as("n_retained"))
           .orderBy("day_0", "offset_days")
       },
@@ -470,21 +469,20 @@ object SurfaceQueries {
     // sf0.1) < 2^12, so every estimate is an exact integer.
     "q55_rolling_actives" -> Q(
       (s, dir) => {
-        import graft.plans.ThetaSketchExprs._
         val daily = Lake(s, dir).events
           .select(expr("unix_micros(ts) DIV 86400000000").as("day"),
             col("user_id"))
           .groupBy("day")
-          .agg(thetaSketchAgg(col("user_id")).as("sk"))
+          .agg(theta_sketch_agg(col("user_id")).as("sk"))
         val w = daily.select(col("day").as("day_w"), col("sk").as("skw"))
         daily.select(col("day"))
           .join(broadcast(w),
             col("day_w") >= col("day") - 6 && col("day_w") <= col("day"))
           .groupBy("day")
           .agg(
-            thetaEstimate(thetaUnionAgg(
+            theta_sketch_estimate(theta_union_agg(
               when(col("day_w") === col("day"), col("skw")))).as("dau"),
-            thetaEstimate(thetaUnionAgg(col("skw"))).as("wau"))
+            theta_sketch_estimate(theta_union_agg(col("skw"))).as("wau"))
           .orderBy("day")
       },
       """WITH e AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day,
@@ -501,7 +499,7 @@ object SurfaceQueries {
     // ---- sketch-served rolling quantiles --------------------------------
     // q55's trick applied to DISTRIBUTIONS: per-day KLL sketches of
     // event value, merged over a trailing-7-day calendar window
-    // (kll_merge_agg over the same broadcast day-pair join), read at
+    // (kll_merge_agg_double over the same broadcast day-pair join), read at
     // p95. At 100 TB the per-day sketch table is what you persist; the
     // whole rolling series costs |days|·7 sketch merges. KLL compaction
     // is randomized, so the gate checks the q52 guarantee: the EXACT
@@ -511,17 +509,19 @@ object SurfaceQueries {
     // counts are exact and oracled; DuckDB pins the boolean true.
     "q57_rolling_p95" -> Q(
       (s, dir) => {
-        import graft.plans.KllSketchExprs._
+        import graft.operators.Sketches.kllQuantile
         val ev = Lake(s, dir).events.where(col("value").isNotNull)
           .select(expr("unix_micros(ts) DIV 86400000000").as("day"),
             col("value"))
-        val daily = ev.groupBy("day").agg(kllAgg(col("value")).as("sk"))
+        val daily =
+          ev.groupBy("day").agg(kll_sketch_agg_double(col("value")).as("sk"))
         val w = daily.select(col("day").as("day_w"), col("sk").as("skw"))
         val rolled = daily.select(col("day"))
           .join(broadcast(w),
             col("day_w") >= col("day") - 6 && col("day_w") <= col("day"))
           .groupBy("day")
-          .agg(kllQuantile(kllMergeAgg(col("skw")), lit(0.95)).as("p95"))
+          .agg(kllQuantile(kll_merge_agg_double(col("skw"), 200), lit(0.95))
+            .as("p95"))
         // exact-rank audit of the sketch answer over the true window
         val wd = rolled.select(col("day").as("day_c"), col("p95"))
         ev.join(broadcast(wd),
@@ -544,25 +544,26 @@ object SurfaceQueries {
 
     // ---- frequency-sketch heavy hitters ---------------------------------
     // Per-source top-5 tokens read off Misra–Gries frequency-sketch
-    // state (plans/FreqSketchExprs) — the fourth mergeable summary
-    // (HLL count / theta algebra / KLL quantiles / here: WHICH items
-    // dominate). The gate is exact by the counter contract: each
-    // source's distinct-token count (31 repo-wide) sits far under the
-    // 0.75·256 counter budget, so no purge ever fires and every
-    // estimate is the exact count, deterministic under any partitioning;
-    // the (est DESC, item ASC) read order is total, so so is the output.
+    // state (Spark's approx_top_k_accumulate via Sketches.freqSketchAgg)
+    // — the fourth mergeable summary (HLL count / theta algebra / KLL
+    // quantiles / here: WHICH items dominate). The gate is exact by the
+    // counter contract: each source's distinct-token count (31
+    // repo-wide) sits far under the 192 items tracked, so no purge ever
+    // fires and every estimate is the exact count, deterministic under
+    // any partitioning; the (count DESC, item ASC) read order is total,
+    // so so is the output.
     "q56_freq_topk" -> Q(
       (s, dir) => {
-        import graft.plans.FreqSketchExprs._
+        import graft.operators.Sketches.{freqSketchAgg, freqTopItems}
         Lake(s, dir).documents
           .select(col("source"),
             explode(split(lower(trim(col("text"))), "\\s+")).as("t"))
           .groupBy("source")
           .agg(freqSketchAgg(col("t")).as("sk"))
           .select(col("source"),
-            posexplode(freqTopItems(col("sk"), lit(5))))
+            posexplode(freqTopItems(col("sk"), 5)))
           .select(col("source"), (col("pos") + 1).as("rnk"),
-            col("col.item").as("token"), col("col.est").as("cnt"))
+            col("col.item").as("token"), col("col.count").as("cnt"))
           .orderBy("source", "rnk")
       },
       """WITH tc AS (

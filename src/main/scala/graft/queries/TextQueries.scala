@@ -454,32 +454,27 @@ object TextQueries {
           |ORDER BY k.doc_id""".stripMargin)),
 
     // ---- count-min sketch (heavy-hitter frequency estimation) ----------
-    // One fixed-size sketch aggregated over the whole token stream
-    // (map-side partial, one array per task on the shuffle), then point
-    // estimates for 5 probe words read from the broadcast sketch. Width
-    // 16 << vocab 31 forces real collisions; the md5 hash family is
-    // portable, so the oracle rebuilds every bucket's collision mass and
-    // the min estimate exactly — not just a bound check.
+    // One fixed-size depth×width sketch over the whole token stream, as
+    // a grouped count of (row, bucket) cells (map-side partial, at most
+    // depth·width rows per task on the shuffle), then point estimates
+    // for 5 probe words: the min over rows of the cell each word hashes
+    // to. Width 16 << vocab 31 forces real collisions; the md5 hash
+    // family is portable, so the oracle rebuilds every bucket's
+    // collision mass and the min estimate exactly — not just a bound
+    // check.
     "t17_countmin" -> Q(
       (s, dir) => {
         import s.implicits._
+        import graft.operators.Sketches.{countMinEstimate, countMinSketch}
         val depth = 4; val width = 16
         val occ = docs(s, dir).select(explode(tokens(col("text"))).as("w"))
-        val sketch = occ.agg(
-          graft.functions.CountMinAggregator.countMin(depth, width)(col("w"))
-            .as("sketch"))
+        val sketch = countMinSketch(occ, "w", depth, width)
         val probes = Seq("dup", "key", "spark", "table", "the").toDF("w")
         val exact = occ.groupBy("w").agg(count(lit(1)).as("exact"))
-        def bucketOf(d: Int) =
-          pmod(conv(substring(md5(concat(lit(s"$d:"), col("w"))), 1, 7), 16, 10)
-            .cast("long"), lit(width.toLong))
-        def estD(d: Int) =
-          element_at(col("sketch"), (lit(d * width + 1) + bucketOf(d)).cast("int"))
-        val est = least((0 until depth).map(estD): _*)
-        probes.join(exact, Seq("w"))
-          .crossJoin(broadcast(sketch))
-          .select(col("w"), col("exact"), est.as("est"),
-            (est >= col("exact")).as("sound"))
+        val est = countMinEstimate(probes, "w", sketch, depth, width)
+        probes.join(exact, Seq("w")).join(est, Seq("w"))
+          .select(col("w"), col("exact"), col("est"),
+            (col("est") >= col("exact")).as("sound"))
           .orderBy("w")
       },
       Some(

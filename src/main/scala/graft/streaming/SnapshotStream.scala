@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
-import graft.operators.LakeMaintenance
+import graft.operators.{LakeMaintenance, Sketches}
 
 /** Continuous MERGE-INTO: a stream of updates maintained as an
   * always-current key-bucketed Parquet snapshot — the streaming twin of
@@ -119,7 +119,9 @@ object SnapshotStream {
     * re-scan. KLL merge is NOT idempotent (re-merging re-weights the
     * same values), so this path leans on the batch-id guard the way
     * [[aggSnapshot]] does — replay of an absorbed id is refused; read
-    * quantiles via [[graft.plans.KllSketchExprs.kllQuantile]]. */
+    * quantiles via [[graft.operators.Sketches.kllQuantile]]. State:
+    * group cols + BINARY `kll` (`kll_sketch_agg_double`, k=200) +
+    * `__last_batch`. */
   def quantileSketchStream(updates: DataFrame, path: String,
                            checkpoint: String, groupCols: Seq[String],
                            valueCol: String): DataStreamWriter[Row] =
@@ -133,7 +135,6 @@ object SnapshotStream {
   def applyQuantileBatch(batch: DataFrame, batchId: Long, path: String,
                          groupCols: Seq[String], valueCol: String): Unit = {
     import org.apache.spark.sql.functions._
-    import graft.plans.KllSketchExprs
     val spark = batch.sparkSession
     val hPath = new org.apache.hadoop.fs.Path(path)
     val exists = hPath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -144,13 +145,13 @@ object SnapshotStream {
         .map(_.asInstanceOf[Long]))
     if (applied.exists(batchId <= _)) return // already absorbed
     val delta = batch.groupBy(groupCols.map(col): _*)
-      .agg(KllSketchExprs.kllAgg(col(valueCol)).as("kll"))
+      .agg(kll_sketch_agg_double(col(valueCol).cast("double")).as("kll"))
     val merged = (prev match {
       case Some(p) =>
         p.select((groupCols.map(col) :+ col("kll")): _*)
           .unionByName(delta)
           .groupBy(groupCols.map(col): _*)
-          .agg(KllSketchExprs.kllMergeAgg(col("kll")).as("kll"))
+          .agg(kll_merge_agg_double(col("kll"), 200).as("kll"))
       case None => delta
     }).withColumn("__last_batch", lit(batchId))
       .localCheckpoint(eager = true)
@@ -159,12 +160,14 @@ object SnapshotStream {
 
   /** Continuous HEAVY-HITTER maintenance — the frequent-items member of
     * the sketch-maintenance family: per-group top-item state
-    * (plans/FreqSketchExprs) updated per micro-batch, read via
-    * `freq_top_items` with no history re-scan. Frequency-sketch merge
+    * ([[graft.operators.Sketches.freqSketchAgg]]) updated per
+    * micro-batch, read via [[graft.operators.Sketches.freqTopItems]]
+    * with no history re-scan. Frequency-sketch merge
     * ADDS counts, so like KLL it is NOT idempotent — replay of an
     * absorbed batch id is refused by the guard; unlike the HLL/theta
     * unions there is no safety net beyond it, which is exactly the
-    * asymmetry the specs pin. State: group cols + BINARY `freq` +
+    * asymmetry the specs pin. State: group cols + the
+    * `approx_top_k_accumulate` struct `freq` (maxItemsTracked 192) +
     * `__last_batch`. */
   def freqSketchStream(updates: DataFrame, path: String,
                        checkpoint: String, groupCols: Seq[String],
@@ -180,7 +183,6 @@ object SnapshotStream {
   def applyFreqBatch(batch: DataFrame, batchId: Long, path: String,
                      groupCols: Seq[String], valueCol: String): Unit = {
     import org.apache.spark.sql.functions._
-    import graft.plans.FreqSketchExprs
     val spark = batch.sparkSession
     val hPath = new org.apache.hadoop.fs.Path(path)
     val exists = hPath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -191,13 +193,13 @@ object SnapshotStream {
         .map(_.asInstanceOf[Long]))
     if (applied.exists(batchId <= _)) return // already absorbed
     val delta = batch.groupBy(groupCols.map(col): _*)
-      .agg(FreqSketchExprs.freqSketchAgg(col(valueCol)).as("freq"))
+      .agg(Sketches.freqSketchAgg(col(valueCol)).as("freq"))
     val merged = (prev match {
       case Some(p) =>
         p.select((groupCols.map(col) :+ col("freq")): _*)
           .unionByName(delta)
           .groupBy(groupCols.map(col): _*)
-          .agg(FreqSketchExprs.freqMergeAgg(col("freq")).as("freq"))
+          .agg(Sketches.freqMergeAgg(col("freq")).as("freq"))
       case None => delta
     }).withColumn("__last_batch", lit(batchId))
       // a path cannot be overwritten while a plan still reads it
@@ -211,7 +213,7 @@ object SnapshotStream {
     * size buys over HLL: the stored per-group sketches support set
     * ALGEBRA at read time — retention (q54), segment overlap (q51) and
     * rolling actives (q55) become pure reads over this table via
-    * [[graft.plans.ThetaSketchExprs.thetaIntersect]]/`thetaUnionAgg`,
+    * Spark's `theta_intersection`/`theta_union_agg`,
     * never re-scanning history. Theta union is idempotent (a distinct
     * hash set: re-unioning absorbed data is a no-op), so like the HLL
     * path this survives double-applied backfills beyond the batch-id
@@ -230,7 +232,6 @@ object SnapshotStream {
   def applySegmentBatch(batch: DataFrame, batchId: Long, path: String,
                         groupCols: Seq[String], valueCol: String): Unit = {
     import org.apache.spark.sql.functions._
-    import graft.plans.ThetaSketchExprs
     val spark = batch.sparkSession
     val hPath = new org.apache.hadoop.fs.Path(path)
     val exists = hPath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -241,13 +242,13 @@ object SnapshotStream {
         .map(_.asInstanceOf[Long]))
     if (applied.exists(batchId <= _)) return // already absorbed
     val delta = batch.groupBy(groupCols.map(col): _*)
-      .agg(ThetaSketchExprs.thetaSketchAgg(col(valueCol)).as("theta"))
+      .agg(theta_sketch_agg(col(valueCol)).as("theta"))
     val merged = (prev match {
       case Some(p) =>
         p.select((groupCols.map(col) :+ col("theta")): _*)
           .unionByName(delta)
           .groupBy(groupCols.map(col): _*)
-          .agg(ThetaSketchExprs.thetaUnionAgg(col("theta")).as("theta"))
+          .agg(theta_union_agg(col("theta")).as("theta"))
       case None => delta
     }).withColumn("__last_batch", lit(batchId))
       // a path cannot be overwritten while a plan still reads it

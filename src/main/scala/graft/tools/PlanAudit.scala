@@ -16,8 +16,8 @@ import org.apache.spark.sql.execution.window.WindowExec
   *  - s1/s4/s8/q24: a small broadcast query set scored against the
   *    corpus scan (brute-force top-k — the right plan when |queries| is
   *    tiny);
-  *  - t12/t16/t17/t21/t22/c7/c10/c11/s9: a 1-row scalar aggregate
-  *    (corpus total / sketch / vocabulary size / id-space bound / min
+  *  - t12/t16/t21/t22/c7/c10/c11/s9: a 1-row scalar aggregate
+  *    (corpus total / vocabulary size / id-space bound / min
   *    stratum volume / stratum count / feature-distribution totals)
   *    broadcast-crossed into a per-row computation (for c7 and c10,
   *    into the per-stratum count aggregate, itself tiny).
@@ -44,7 +44,7 @@ object PlanAudit {
     // s16: one s1-shaped broadcast-query scan (the cosine leg) plus
     // t27's 1-row corpus-stats cross (the BM25 leg)
     "s16_hybrid_rrf",
-    "t12_tfidf", "t16_rare_tokens", "t17_countmin",
+    "t12_tfidf", "t16_rare_tokens",
     "t21_lm_score", "t22_quality_buckets", "t26_lm_heldout", "t27_bm25",
     // t24: two 1-row corpus totals (unigram + bigram N) broadcast
     "t24_pmi_collocations",

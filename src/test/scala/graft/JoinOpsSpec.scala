@@ -490,7 +490,6 @@ class JoinOpsSpec extends AnyFunSuite {
 
   test("joinStatsFromSketches over per-day state equals joinStats over the rows") {
     import graft.operators.JoinPlanner
-    import graft.plans.ThetaSketchExprs._
     import spark.implicits._
     // per-day sketch-state tables of the segmentSketchStream shape:
     // (day, theta, n_rows) — the rows themselves are never re-read
@@ -499,7 +498,7 @@ class JoinOpsSpec extends AnyFunSuite {
     val r = (20L until 60L).flatMap(k => Seq.fill(3)((k % 3, k))).toSeq
       .toDF("day", "k")
     def state(df: org.apache.spark.sql.DataFrame) = df.groupBy("day")
-      .agg(thetaSketchAgg(col("k")).as("theta"),
+      .agg(theta_sketch_agg(col("k")).as("theta"),
         count(lit(1)).as("n_rows"))
     val fromState = JoinPlanner.joinStatsFromSketches(
       state(l), "theta", "n_rows", state(r), "theta", "n_rows").collect()(0)
@@ -524,10 +523,10 @@ class JoinOpsSpec extends AnyFunSuite {
     import spark.implicits._
     // Uniform keys, count 1 each, under a tiny counter budget: the
     // NO_FALSE_POSITIVES frequent-items list is empty because no count
-    // clears the ~n/maxMapSize error bound — the sf1 q61 crash shape.
+    // clears the ~n/mapSize error bound — the sf1 q61 crash shape.
     // The probe must answer "nothing demonstrably heavy", never throw.
     val df = (0L until 2000L).toDF("k")
-    val row = JoinPlanner.skewProbe(df, "k", maxMapSize = 8).collect()(0)
+    val row = JoinPlanner.skewProbe(df, "k", maxItemsTracked = 6).collect()(0)
     assert(row.getAs[Long]("n_rows") === 2000L)
     assert(row.getAs[String]("top_key") === null)
     assert(row.getAs[Long]("top_rows") === 0L)

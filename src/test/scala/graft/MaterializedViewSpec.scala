@@ -1154,7 +1154,7 @@ class MaterializedViewSpec extends AnyFunSuite {
   }
 
   test("kll views serve quantile rollups exactly below the k bound") {
-    import graft.plans.KllSketchExprs._
+    import graft.operators.Sketches.kllQuantile
     val base = freshDir("kll/base"); val mv = freshDir("kll/mv")
     // ≤ 40 values per final group, default k=200: the sketch never
     // compacts, so quantiles are exact order statistics and routed
@@ -1173,7 +1173,8 @@ class MaterializedViewSpec extends AnyFunSuite {
     }
     try withRouting {
       def exactQ() = spark.read.parquet(base).groupBy("k", "k2")
-        .agg(kllQuantile(kllAgg(col("v")), lit(0.5)).as("p50"))
+        .agg(kllQuantile(kll_sketch_agg_double(col("v")), lit(0.5))
+          .as("p50"))
       val qe = exactQ()
       assert(readsPath(qe, mv) && !readsPath(qe, base),
         "kll quantile over the exact grouping must route")
@@ -1182,8 +1183,8 @@ class MaterializedViewSpec extends AnyFunSuite {
       assert(canon2(qe) == direct(canon2(exactQ())))
       // rollup: per-k quantiles from MERGED stored sketches
       def rollQ() = spark.read.parquet(base).groupBy("k")
-        .agg(kllQuantile(kllAgg(col("v")), lit(0.5)).as("p50"),
-          kllQuantile(kllAgg(col("v")), lit(0.95)).as("p95"))
+        .agg(kllQuantile(kll_sketch_agg_double(col("v")), lit(0.5)).as("p50"),
+          kllQuantile(kll_sketch_agg_double(col("v")), lit(0.95)).as("p95"))
       val qr = rollQ()
       assert(readsPath(qr, mv) && !readsPath(qr, base),
         "kll rollup must route")
@@ -1193,7 +1194,8 @@ class MaterializedViewSpec extends AnyFunSuite {
         "below-k merged quantiles must equal the direct build exactly")
       // a different k is a different error bound: stand down
       val qBad = spark.read.parquet(base).groupBy("k")
-        .agg(kllQuantile(kllAgg(col("v"), 400), lit(0.5)).as("p50"))
+        .agg(kllQuantile(kll_sketch_agg_double(col("v"), 400), lit(0.5))
+          .as("p50"))
       assert(!readsPath(qBad, mv))
     } finally MaterializedView.drop("mv_kll")
   }

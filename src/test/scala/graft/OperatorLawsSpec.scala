@@ -238,8 +238,7 @@ class OperatorLawsSpec extends AnyFunSuite {
 
   test("round-7 operators degrade cleanly on empty inputs") {
     import graft.operators.Tokenizer
-    import graft.plans.FreqSketchExprs._
-    import graft.plans.ThetaSketchExprs._
+    import graft.operators.Sketches.{freqSketchAgg, freqTopItems}
     val noDocs = Seq.empty[(Long, String)].toDF("doc_id", "text")
     // no corpus -> no merges learned, and segmenting nothing is nothing
     assert(Tokenizer.bpeTrain(noDocs, "text", 4).count() === 0)
@@ -248,14 +247,14 @@ class OperatorLawsSpec extends AnyFunSuite {
     // sketch aggregates over zero rows: empty group set, no exceptions
     val noEv = Seq.empty[(Long, String)].toDF("user_id", "event_type")
     assert(noEv.groupBy("event_type")
-      .agg(thetaEstimate(thetaSketchAgg(col("user_id"))).as("n"))
+      .agg(theta_sketch_estimate(theta_sketch_agg(col("user_id"))).as("n"))
       .count() === 0)
     assert(noEv.groupBy("event_type")
-      .agg(freqTopItems(freqSketchAgg(col("event_type")), lit(3)).as("top"))
+      .agg(freqTopItems(freqSketchAgg(col("event_type")), 3).as("top"))
       .count() === 0)
     // a global (no-group) frequency sketch of nothing: empty top list
     val top = Seq.empty[(String, String)].toDF("g", "t")
-      .agg(freqTopItems(freqSketchAgg(col("t")), lit(3)).as("top"))
+      .agg(freqTopItems(freqSketchAgg(col("t")), 3).as("top"))
       .collect()(0).getSeq[org.apache.spark.sql.Row](0)
     assert(top.isEmpty)
   }
@@ -298,22 +297,32 @@ class OperatorLawsSpec extends AnyFunSuite {
   }
 
   test("count-min sketch: row sums equal stream length, estimates dominate") {
-    import graft.functions.CountMinAggregator
+    import graft.operators.Sketches.{countMinEstimate, countMinSketch}
     val depth = 4; val width = 8
     val words = Seq("a", "b", "a", "c", "a", "b", "d", "e", "f", "a", "g", "b")
-    val sketch = words.toDF("w")
-      .agg(CountMinAggregator.countMin(depth, width)(col("w")))
-      .head().getSeq[Long](0).toArray
+    val cells = countMinSketch(words.toDF("w"), "w", depth, width)
+      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     val exact = words.groupBy(identity).view.mapValues(_.size.toLong).toMap
     // every row of the sketch accounts for every item exactly once
     (0 until depth).foreach { d =>
-      assert(sketch.slice(d * width, (d + 1) * width).sum === words.size.toLong)
+      assert(cells.collect { case ((`d`, _), c) => c }.sum === words.size.toLong)
     }
-    // point estimates never underestimate; with no collision they are exact
+    // the reference bucket: first 7 hex digits of md5("d:w") mod width
+    def bucket(d: Int, w: String): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$d:$w".getBytes("UTF-8")).map("%02x".format(_)).mkString
+        .substring(0, 7), 16) % width
+    val probes = exact.keys.toSeq :+ "unseen"
+    val est = countMinEstimate(probes.toDF("w"), "w",
+        countMinSketch(words.toDF("w"), "w", depth, width), depth, width)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    probes.foreach { w =>
+      assert(est(w) === (0 until depth)
+        .map(d => cells.getOrElse((d, bucket(d, w)), 0L)).min, w)
+    }
+    // point estimates never underestimate
     exact.foreach { case (w, c) =>
-      val est = (0 until depth)
-        .map(d => sketch(d * width + CountMinAggregator.bucket(d, w, width))).min
-      assert(est >= c, s"$w: est $est < exact $c")
+      assert(est(w) >= c, s"$w: est ${est(w)} < exact $c")
     }
   }
 

@@ -515,7 +515,7 @@ class StreamingSpec extends AnyFunSuite {
     import java.nio.file.Files
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.SnapshotStream
-    import graft.plans.FreqSketchExprs._
+    import graft.operators.Sketches.freqTopItems
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val sink = Files.createTempDirectory("freq_sink").toString + "/snap"
@@ -525,7 +525,7 @@ class StreamingSpec extends AnyFunSuite {
       input.toDF.toDF("g", "t"), sink, ckpt,
       groupCols = Seq("g"), valueCol = "t").start()
     def top(): Seq[(String, Long)] = spark.read.parquet(sink)
-      .select(posexplode(freqTopItems(col("freq"), lit(3))))
+      .select(posexplode(freqTopItems(col("freq"), 3)))
       .orderBy("pos").collect()
       .map(r => (r.getStruct(1).getString(0), r.getStruct(1).getLong(1))).toSeq
     try {
@@ -555,7 +555,6 @@ class StreamingSpec extends AnyFunSuite {
     import java.nio.file.Files
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.SnapshotStream
-    import graft.plans.ThetaSketchExprs._
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val sink = Files.createTempDirectory("theta_sink").toString + "/snap"
@@ -570,7 +569,8 @@ class StreamingSpec extends AnyFunSuite {
       val st = spark.read.parquet(sink)
       st.where(col("day") === 0L).select(col("theta").as("ska"))
         .crossJoin(st.where(col("day") === 1L).select(col("theta").as("skb")))
-        .select(thetaEstimate(thetaIntersect(col("ska"), col("skb"))).as("n"))
+        .select(theta_sketch_estimate(theta_intersection(col("ska"), col("skb")))
+          .as("n"))
         .collect()(0).getLong(0)
     }
     try {
@@ -601,7 +601,7 @@ class StreamingSpec extends AnyFunSuite {
     import java.nio.file.Files
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.SnapshotStream
-    import graft.plans.KllSketchExprs._
+    import graft.operators.Sketches.kllQuantile
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val sink = Files.createTempDirectory("kll_sink").toString + "/snap"
