@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times the headline query set on SPARK_GRAFT_SF_DIR and
@@ -17,6 +18,12 @@ import org.apache.spark.sql.SparkSession
   * round-over-round deltas are only trustworthy when med/min is tight,
   * and a wide max exposes scheduler/GC/page-cache jitter that best-of-N
   * alone would silently absorb (the q19 lesson from round 5).
+  *
+  * Per-query `compiles` records the Janino compiles summed over the timed
+  * reps (Spark's `CodegenMetrics`). After the warm-up every plan's
+  * generated classes should be in Spark's class cache, so a count well
+  * above zero means the working set outgrew
+  * `GraftSession.CodegenCacheEntries` and the reps time recompilation.
   *
   * Artifact contract (round 7): the enriched record grew past the
   * driver's tail-capture window in round 6, truncating the leading
@@ -54,10 +61,14 @@ object Bench {
         None
       }
     }
-    // Warmup pass: JVM/codegen compilation and file-system cache dominate
-    // the first execution of each plan shape. Then report best-of-N per
-    // query so round-over-round deltas reflect the code, not scheduler /
-    // GC jitter (SPARK_GRAFT_BENCH_REPS to override; floored at 1).
+    // Warmup pass: JIT compilation, the first Janino compile of each
+    // generated class and the file-system cache dominate the first
+    // execution of each plan shape. The compiled classes stay warm only
+    // while Spark's class cache holds the whole headline set (916 classes
+    // at sf0.001, against Spark's default cap of 100), which GraftSession
+    // sizes and `compiles` checks. Then report best-of-N per query so
+    // round-over-round deltas reflect the code, not scheduler / GC jitter
+    // (SPARK_GRAFT_BENCH_REPS to override; floored at 1).
     val reps = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(3))
     def med(xs: Seq[Double]): Double = {
@@ -79,19 +90,24 @@ object Bench {
     // None → JSON null) so `reps` element i is rep i's pass even after a
     // failure — the positional claim the artifact makes must survive
     // partial failure, not silently shift left
-    def benchAt(dir: String): (Seq[(String, Seq[Option[Double]])], Double, Int) = {
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def benchAt(dir: String)
+        : (Seq[(String, Seq[Option[Double]])], Double, Int, Map[String, Long]) = {
       queries.foreach { case (n, f) => runOne(n, dir, f) }
       val acc = scala.collection.mutable.LinkedHashMap[String, Vector[Option[Double]]](
         queries.map { case (n, _) => n -> Vector.empty[Option[Double]] }: _*)
+      val compiled = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
       for (_ <- 0 until reps; (name, fn) <- queries) {
         if (gcSettle) { System.gc(); Thread.sleep(50) }
+        val c0 = compiles
         acc(name) = acc(name) :+ runOne(name, dir, fn)
+        compiled(name) += compiles - c0
       }
       val results = queries.map { case (name, _) => name -> (acc(name): Seq[Option[Double]]) }
       // failed sentinels are EXCLUDED from the total (a -1 must not make
       // a failing round look faster); they are counted separately
       val total = results.collect { case (_, v) if v.flatten.nonEmpty => v.flatten.min }.sum
-      (results, total, results.count(_._2.flatten.isEmpty))
+      (results, total, results.count(_._2.flatten.isEmpty), compiled.toMap)
     }
     def best(v: Seq[Option[Double]]): Double = {
       val ok = v.flatten; if (ok.isEmpty) -1.0 else ok.min
@@ -103,6 +119,8 @@ object Bench {
         val ok = v.flatten
         "\"" + k + "\":{\"min\":" + ok.min + ",\"med\":" + med(ok) + ",\"max\":" + ok.max + "}"
       }.mkString("{", ",", "}")
+    def fmtCompiles(compiled: Map[String, Long]): String =
+      queries.map { case (k, _) => "\"" + k + "\":" + compiled(k) }.mkString("{", ",", "}")
     // raw per-rep times IN RUN ORDER (round-robin: element i = rep i's
     // pass; null = that rep failed) — an outlier or failed rep is
     // visible in the artifact itself instead of being silently absorbed
@@ -216,17 +234,17 @@ object Bench {
       s""""env":{"load_avg":$loadAvg,"cpus":$nCpus,"cpus_configured":$cpusConfigured,"contended":$contended,"load_max":$loadMax,"heap_max_gb":${math.rint(rt.maxMemory() / 1e8) / 10},"scan_mbps":$scanMbps,"scan_probe_mb":$scanProbeMb}"""
     }
 
-    val (res1, total1, failed1) = benchAt(sfDir)
+    val (res1, total1, failed1, compiled1) = benchAt(sfDir)
     val secondary =
       if (sfDir2.nonEmpty && sfDir2 != sfDir && new java.io.File(sfDir2).isDirectory) {
-        val (res2, total2, failed2) = benchAt(sfDir2)
+        val (res2, total2, failed2, compiled2) = benchAt(sfDir2)
         val b2 = res2.toMap
         val ratios = res1.collect {
           case (k, v1) if v1.flatten.nonEmpty &&
               b2.get(k).exists(_.flatten.nonEmpty) && b2(k).flatten.min > 0 =>
             "\"" + k + "\":" + (math.rint(v1.flatten.min / b2(k).flatten.min * 100) / 100)
         }.mkString("{", ",", "}")
-        s""","secondary":{"sf":"$sfDir2","total":$total2,"failed":$failed2,"queries":${fmt(res2)},"spread":${fmtSpread(res2)}},"ratios":$ratios"""
+        s""","secondary":{"sf":"$sfDir2","total":$total2,"failed":$failed2,"queries":${fmt(res2)},"spread":${fmtSpread(res2)},"compiles":${fmtCompiles(compiled2)}},"ratios":$ratios"""
       } else ""
     // Per-query best-time delta vs the previous artifact (seconds; negative
     // = faster this round). Only queries present in both runs appear.
@@ -244,7 +262,7 @@ object Bench {
     val method = "interleaved-v2"
     val wall = math.rint((System.nanoTime() - tMain) / 1e7) / 100
     val record =
-      s"""{"metric":"total","value":$total1,"unit":"sec","method":"$method",$envField,"wall_s":$wall,"queries":${fmt(res1)},"spread":${fmtSpread(res1)},"reps":${fmtReps(res1)},"failed":$failed1,"sf":"$sfDir"$deltaField$secondary}"""
+      s"""{"metric":"total","value":$total1,"unit":"sec","method":"$method",$envField,"wall_s":$wall,"queries":${fmt(res1)},"spread":${fmtSpread(res1)},"compiles":${fmtCompiles(compiled1)},"reps":${fmtReps(res1)},"failed":$failed1,"sf":"$sfDir"$deltaField$secondary}"""
     println(record)
     // Durable whole-record copies: immune to any stdout capture window.
     // target/bench.json is the driver-visible path; bench_latest.json is
